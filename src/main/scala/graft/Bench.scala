@@ -49,7 +49,12 @@ object Bench {
         val t = try {
           q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
+        } catch {
+          case e: Throwable =>
+            System.err.println(
+              s"[bench] ${q.name}#$i failed: ${e.getClass.getName}: ${e.getMessage}")
+            None
+        }
         // Queries may persist() intermediates for intra-query reuse. Drop
         // them between reps: Spark's CacheManager substitutes cached data by
         // logical-plan match, so without this reps 2..n would read rep 1's

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.lda.LdaPipeline
 
 /** CLI with the reference's exact surface (SURVEY §7.1):
@@ -45,19 +44,22 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // T2: top-10 corpus words preview (py:57)
-    println("Top 10 corpus words (word, count):")
+    run(spark, dir, vocabSize, numTopics, println(_))
+    spark.stop()
+  }
+
+  /** The CLI's work after argument validation: the top-10 corpus-word
+    * preview (T2, py:57), then a fit and one `Topic <t>: <terms>` line per
+    * topic (M1–M5, py:199-203), each line handed to `out`. */
+  def run(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
+      out: String => Unit): Unit = {
+    out("Top 10 corpus words (word, count):")
     Catalog.byName("text_vocab").run(spark, dir)
       .limit(10).collect()
-      .foreach(r => println(s"  ${r.getString(0)}\t${r.getLong(1)}"))
-
-    // M1–M5: fit + report (py:199-203 output contract)
-    val report = LdaPipeline.topicReport(spark, dir,
+      .foreach(r => out(s"  ${r.getString(0)}\t${r.getLong(1)}"))
+    LdaPipeline.topicReport(spark, dir,
       vocabSize = vocabSize, numTopics = numTopics, maxIter = 10)
-    report.collect().foreach { r =>
-      val terms = r.getSeq[String](1)
-      println(s"Topic ${r.getInt(0)}: ${terms.mkString(" ")}")
-    }
-    spark.stop()
+      .collect()
+      .foreach(r => out(s"Topic ${r.getInt(0)}: ${r.getString(1)}"))
   }
 }

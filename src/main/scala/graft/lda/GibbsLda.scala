@@ -1,7 +1,9 @@
 package graft.lda
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Tables
 
@@ -19,12 +21,14 @@ import graft.sources.Tables
   * fit is reproducible under any partitioning.
   *
   * Scale posture: doc states (positions + topics) stay partitioned across
-  * executors; each sweep is one mapPartitions (sampling against a broadcast
-  * Φ copy, locally updated within the partition — AD-LDA's approximation)
-  * followed by one sparse groupBy((topic, word)).count() to rebuild exact
-  * global counts. Driver/broadcast state is Φ (T×V longs) + n_z (T longs) —
-  * bounded by MODEL size, never by corpus size. No O(N·V) one-hot
-  * densification anywhere (SURVEY §4.2.1).
+  * executors in a MEMORY_AND_DISK-persisted RDD. Each sweep is ONE Spark job:
+  * a mapPartitions that samples against a broadcast Φ copy (AD-LDA) and
+  * writes the new states to the cache, fused with [[countPhi]]'s per-task
+  * dense T×V count and its treeReduce, which rebuild the exact global
+  * counts. The dense per-task array is the same size as the broadcast Φ
+  * every task already holds. Driver/broadcast state is Φ (T×V longs) + n_z
+  * (T longs) — bounded by MODEL size, never by corpus size. No O(N·V)
+  * one-hot densification anywhere (SURVEY §4.2.1).
   */
 object GibbsLda {
 
@@ -33,57 +37,70 @@ object GibbsLda {
   final case class GibbsModel(
       phi: Array[Array[Long]], // T × V topic-word counts
       nz: Array[Long],         // T topic totals
-      docs: Dataset[DocState],
+      docs: RDD[DocState],
       vocab: Array[String])
 
-  /** Deterministic doc-term encoding: clean → tokenize → stopword-filter →
-    * top-V vocab (count desc, word asc) → per-doc position list ordered by
-    * token position (doc identity kept throughout, SURVEY §7.5.3). */
-  private def encode(spark: SparkSession, dir: String, vocabSize: Int):
-      (Dataset[(Long, Array[Int])], Array[String], DataFrame) = {
+  /** Deterministic doc-term encoding of a preprocessed corpus (`doc_id`,
+    * `tokens`): top-V vocab (count desc, word asc) → per-doc position list
+    * ordered by token position (doc identity kept throughout, SURVEY
+    * §7.5.3). Also returns the persisted token RDD the encoding reads; the
+    * caller unpersists it once the encoded DocStates are materialized. */
+  private def encode(corpus: DataFrame, vocabSize: Int):
+      (RDD[(Long, Array[Int])], Array[String], RDD[(Long, Array[String])]) = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    // Persisted: the preprocessed tokens feed BOTH the vocabulary count and
-    // the encoding map — without the cache the clean+tokenize+stopword chain
-    // runs twice over the corpus (guide §2.4 / §5). The caller unpersists
-    // once the encoded DocStates are materialized.
-    val docs = LdaPipeline.preprocess(Tables.documents(spark, dir))
-      .select(col("doc_id"), col("tokens"))
-      .persist()
-    val wc = docs.select(explode(col("tokens")).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    val vocab = wc.orderBy(desc("cnt"), asc("word")).limit(vocabSize)
-      .select(col("word")).as[String].collect()
-    val vocabMap = vocab.zipWithIndex.toMap
-    val bc = spark.sparkContext.broadcast(vocabMap)
-    val encoded = docs.as[(Long, Seq[String])].map { case (id, toks) =>
+    // Persisted: the tokens feed BOTH the vocabulary count and the encoding
+    // — without the cache the clean+tokenize+stopword chain runs twice over
+    // the corpus (guide §2.4 / §5).
+    val docs = corpus.select(col("doc_id"), col("tokens"))
+      .as[(Long, Array[String])].rdd
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // One job. Tokens are lowercase ASCII (Cleaning.cleanText), so String
+    // order is the byte order a SQL `ORDER BY word` uses.
+    val vocab = docs.flatMap(_._2.iterator.map(w => (w, 1L)))
+      .reduceByKey(_ + _)
+      .takeOrdered(vocabSize)(Ordering.by[(String, Long), (Long, String)] {
+        case (w, c) => (-c, w)
+      })
+      .map(_._1)
+    val bc = spark.sparkContext.broadcast(vocab.zipWithIndex.toMap)
+    val encoded = docs.map { case (id, toks) =>
       (id, toks.iterator.flatMap(bc.value.get).toArray)
     }.filter(_._2.nonEmpty)
     (encoded, vocab, docs)
   }
 
-  private def countPhi(docs: Dataset[DocState], numTopics: Int, vocabSize: Int):
+  /** Exact topic-word counts: each task counts its docs into a dense T×V
+    * array, and a treeReduce sums them — one job, the call site the
+    * benchmark attributes Gibbs sweeps to. */
+  private[graft] def countPhi(docs: RDD[DocState], numTopics: Int, vocabSize: Int):
       (Array[Array[Long]], Array[Long]) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // sparse (topic, word) counts — the anti-one-hot path (SURVEY §4.3)
-    val counts = docs.flatMap(d => d.topics.zip(d.words))
-      .toDF("topic", "word")
-      .groupBy(col("topic"), col("word")).agg(count(lit(1)).as("c"))
-      .collect()
-    val phi = Array.fill(numTopics)(new Array[Long](vocabSize))
-    counts.foreach { r => phi(r.getInt(0))(r.getInt(1)) = r.getLong(2) }
+    val flat = docs.mapPartitions { it =>
+      val c = new Array[Long](numTopics * vocabSize)
+      it.foreach { d =>
+        var j = 0
+        while (j < d.words.length) {
+          c(d.topics(j) * vocabSize + d.words(j)) += 1
+          j += 1
+        }
+      }
+      Iterator.single(c)
+    }.treeReduce { (a, b) =>
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    val phi = Array.tabulate(numTopics)(k => flat.slice(k * vocabSize, (k + 1) * vocabSize))
     val nz = phi.map(_.sum)
     (phi, nz)
   }
 
   /** One full-corpus sweep: sample every word slot of every doc. */
-  private def sweep(docs: Dataset[DocState], phi: Array[Array[Long]],
+  private def sweep(docs: RDD[DocState], phi: Array[Array[Long]],
       nz: Array[Long], numTopics: Int, vocabSize: Int, alpha: Double,
-      beta: Double, iter: Int, seed: Long): Dataset[DocState] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bcPhi = spark.sparkContext.broadcast(phi)
-    val bcNz = spark.sparkContext.broadcast(nz)
+      beta: Double, iter: Int, seed: Long): RDD[DocState] = {
+    val bcPhi = docs.sparkContext.broadcast(phi)
+    val bcNz = docs.sparkContext.broadcast(nz)
     docs.mapPartitions { it =>
       val gPhi = bcPhi.value
       val gNz = bcNz.value
@@ -135,33 +152,40 @@ object GibbsLda {
   }
 
   def fit(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
-      maxIter: Int = 10, seed: Long = 42L): GibbsModel = {
-    import spark.implicits._
-    val (encoded, vocab, tokenCache) = encode(spark, dir, vocabSize)
+      maxIter: Int = 10, seed: Long = 42L): GibbsModel =
+    fitCorpus(LdaPipeline.preprocess(Tables.documents(spark, dir)), vocabSize,
+      numTopics, maxIter, seed)
+
+  /** [[fit]] on an already preprocessed corpus (`doc_id`, `tokens`), in
+    * whatever partitioning it arrives — the seam the partition-invariance
+    * test drives. */
+  private[graft] def fitCorpus(corpus: DataFrame, vocabSize: Int,
+      numTopics: Int, maxIter: Int, seed: Long): GibbsModel = {
+    val (encoded, vocab, tokenCache) = encode(corpus, vocabSize)
     val v = vocab.length
     // M1: deterministic init, topic = slot index mod T (py:110-121).
     // NOT fanned out, by measurement: the sampler is partitioning-independent
-    // by design (per-(doc, sweep) seeded RNG — repartitioning to 32 was
-    // proven bit-identical at sf0.001/0.01/0.1), but the per-sweep task +
-    // shuffle overhead of 32 partitions measured SLOWER than the single-
-    // partition sweep at sf0.1 (3.2 s plain vs 4.8 s fanned steady-state) —
-    // the sweep's integer sampling is too cheap per token to recoup it. At
-    // real scale the input arrives with ≥ cores partitions and the sweeps
-    // parallelize without any explicit repartition.
+    // by design (per-(doc, sweep) seeded RNG — GibbsSpec fits 1 vs 4
+    // partitions to identical output), but the per-sweep task overhead of
+    // 32 partitions measured SLOWER than the single-partition sweep at sf0.1
+    // (3.2 s plain vs 4.8 s fanned steady-state) — the sweep's integer
+    // sampling is too cheap per token to recoup it. At real scale the input
+    // arrives with ≥ cores partitions and the sweeps parallelize without any
+    // explicit repartition.
     var docs = encoded.map { case (id, words) =>
       DocState(id, words, Array.tabulate(words.length)(_ % numTopics))
-    }.persist()
+    }.persist(StorageLevel.MEMORY_AND_DISK)
     val alpha = 1.0 / numTopics
     val beta = 1.0 / numTopics
-    // countPhi is the SOLE consumer of each fresh persist, so its collect
-    // materializes the cache as a side effect — the separate count() pass
-    // per iteration (2 jobs + a full cache scan per sweep until r22) bought
-    // nothing. Unpersist of the previous state happens only after the new
-    // one is materialized, exactly as before.
+    // countPhi is the SOLE consumer of each fresh persist, so its job runs
+    // the sweep, materializes the new states and counts them in one pass.
+    // The previous state is unpersisted only after the new one is
+    // materialized.
     var (phi, nz) = countPhi(docs, numTopics, v)
     tokenCache.unpersist() // DocStates are materialized; the token cache is dead
     for (i <- 1 to maxIter) {
-      val next = sweep(docs, phi, nz, numTopics, v, alpha, beta, i, seed).persist()
+      val next = sweep(docs, phi, nz, numTopics, v, alpha, beta, i, seed)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       val pn = countPhi(next, numTopics, v)
       docs.unpersist()
       docs = next
@@ -186,8 +210,9 @@ object GibbsLda {
         top.map(_._1).mkString(" ")) // counts as weights
     }
     m.docs.unpersist()
+    // Rows are built in topic order; no orderBy, whose sort of this local
+    // relation would cost Spark jobs.
     spark.createDataset(rows.toSeq)
       .toDF("topic", "terms", "weights")
-      .orderBy(col("topic"))
   }
 }

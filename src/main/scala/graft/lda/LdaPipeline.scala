@@ -72,36 +72,25 @@ object LdaPipeline {
       .setTopicConcentration(1.0 / numTopics)
       .setFeaturesCol("features")
       .fit(encoded)
-    // Fan out the TRANSFORM input only (guide §2.2): the single-row-group
-    // fixture leaves `encoded` with one partition, so the per-doc variational
-    // inference (the most expensive per-row compute in the repo) and the
-    // orderBy's range-sampling re-run of it were single-core. The FIT input
-    // keeps its original partitioning (minibatch sampling is partitioning-
-    // dependent); the fitted model is fixed here, and per-doc inference is
-    // row-local, so redistribution cannot change the output — proven
-    // bit-identical by snapshot at sf0.001/0.01/0.1. No-op at ≥ cores
-    // partitions.
-    val par = spark.sparkContext.defaultParallelism
-    val inferIn =
-      if (encoded.rdd.getNumPartitions < par) encoded.repartition(par)
-      else encoded
-    // Persist BELOW the orderBy and materialize before it runs (guide §5 —
-    // never compute the expensive thing twice): the final sort's range
-    // partitioner first runs a SAMPLING pass over its input, so with the
-    // persist above the sort (as until r22) the per-doc variational
-    // inference executed twice — once for the sampler, once for the sorted
-    // output. Caching the inference result and sorting the cache runs it
-    // once; same rows, and doc_id is a unique deterministic sort key, so
-    // the output is unchanged (snapshot-proven bit-identical at 3 SFs).
-    val scored = model.transform(inferIn)
+    // Range-partition the TRANSFORM input on doc_id (guide §2.2). It fans
+    // the per-doc variational inference — the most expensive per-row
+    // compute in the repo — out to every core (the single-row-group fixture
+    // leaves `encoded` with one partition), and it is the one exchange the
+    // final sort needs: the orderBy finds its input already range-
+    // partitioned on doc_id and only sorts within partitions. The range
+    // partitioner's sampling pass runs over `encoded`, below the inference,
+    // so inference runs once per doc. The FIT input keeps its original
+    // partitioning (minibatch sampling is partitioning-dependent); the
+    // fitted model is fixed here and per-doc inference is row-local, so
+    // redistribution cannot change the output. `docs` stays persisted for
+    // the caller's action (the Catalog cache-hygiene contract drops it).
+    model.transform(encoded.repartitionByRange(
+        spark.sparkContext.defaultParallelism, col("doc_id")))
       .select(col("doc_id"), vector_to_array(col("topicDistribution")).as("theta"))
       .select(col("doc_id"),
         expr("array_position(theta, array_max(theta)) - 1").cast("int").as("topic"),
         round(array_max(col("theta")), 4).as("weight"))
-      .persist()
-    scored.write.format("noop").mode("overwrite").save() // materialize while `docs` is still cached
-    docs.unpersist()
-    scored.orderBy(col("doc_id"))
+      .orderBy(col("doc_id"))
   }
 
   /** Fit CountVectorizer(top-V vocab) + LDA on the `documents` fixture and
@@ -141,6 +130,8 @@ object LdaPipeline {
     docs.unpersist()
     // describeTopics = the reference's driver-side argsort top-20 (py:196-203),
     // resolved against the vocabulary (J2's driver-side lookup, py:192-194).
+    // Its rows are built on the driver in topic order, so no orderBy: a sort
+    // of that local relation would only cost Spark jobs.
     val vocab = cvModel.vocabulary
     val vocabCol = array(vocab.map(lit): _*)
     model.describeTopics(topWords)
@@ -151,6 +142,5 @@ object LdaPipeline {
         array_join(
           transform(col("termWeights"), w => round(w, 6).cast("string")),
           " ").as("weights"))
-      .orderBy(col("topic"))
   }
 }

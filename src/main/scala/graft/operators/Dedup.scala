@@ -112,14 +112,16 @@ object Dedup {
         // Persisted LAZILY, on purpose (r22 measured both ways): the clean-
         // chain projection feeds both self-join sides and the sizes table —
         // without the cache the cleaning chain runs 3× per doc (guide §2.4 /
-        // §5). Eager materialization (Tables.matPersist) was tried and
-        // REVERTED here: once the cache is materialized its InMemoryRelation
-        // reports its true (large) size, the planner switches the tok
+        // §5). Eager materialization (OPTIMIZATION_r22.md, "concurrent
+        // cache-materialization race") was tried and REVERTED here: once
+        // the cache is materialized its InMemoryRelation reports its true
+        // (large) size, the planner switches the tok
         // self-join from broadcast-hash to sort-merge, and the join output
         // loses the doc-partitioning the downstream (d1,d2) partial agg
         // relies on — partial-agg output exploded 62M → 697M rows (100 GB
         // spill), 80 s → 270 s at the 10× fixture. The concurrent-stage
-        // cache race matPersist fixes costs far less than that here.
+        // cache race that eager materialization fixes costs far less than
+        // that here.
         val docs = docsSrc(s, dir)
           .select(col("doc_id"), col("source"),
             array_distinct(filter(split(cleanCol, " "), t => t =!= "")).as("ws"))
@@ -171,7 +173,7 @@ object Dedup {
         // Persisted LAZILY for the same reason as dedup_jaccard_pairs:
         // clean+shingle feeds both self-join sides and the sizes table
         // (measured 5.2 s → 3.7 s fresh at sf0.1 local[32]). Eager
-        // materialization (Tables.matPersist) REVERTED with numbers: the
+        // materialization (OPTIMIZATION_r22.md) REVERTED with numbers: the
         // materialized cache's true size flips the shingle self-join to
         // sort-merge and the (d1,d2) partial agg loses doc-locality —
         // 11.6–16.4 s lazy vs 26.5–34.2 s eager at the 10× fixture.
@@ -278,7 +280,7 @@ object Dedup {
       (s, dir) => {
         // Persisted LAZILY: the shingle sets feed the minhash signatures AND
         // the exact rerank (`sets`) — one clean+shingle pass instead of two.
-        // Eager materialization (Tables.matPersist) REVERTED with numbers:
+        // Eager materialization (OPTIMIZATION_r22.md) REVERTED with numbers:
         // accurate IMR stats flip the rerank joins to sort-merge — 7.4–9.5 s
         // lazy vs 14.9–32.8 s eager at the 10× fixture.
         val docs = docsSrc(s, dir)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Schema-pinned readers over the driver parquet fixtures
   * (/root/repo/TESTDATA.md). Parquet carries the authoritative schema;
@@ -49,10 +50,23 @@ object Tables {
 
   def events(spark: SparkSession, dir: String): DataFrame =
     nanosLongToTs(table(spark, dir, "events"))
-  /** INVARIANT: doc_id is unique (the fixture generator emits it as a
+  /** The `documents` fixture's schema, as its parquet footers declare it
+    * (pinned against the footers at three scale factors by a test). */
+  val DocumentsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** Read with [[DocumentsSchema]] instead of inferring it: inference reads
+    * the parquet footers in a Spark job of its own (35–50 ms on 4 cores),
+    * once per query that scans the table.
+    * INVARIANT: doc_id is unique (the fixture generator emits it as a
     * sequence). pipeline_curate's doc_id-only group key relies on this —
     * duplicate doc_ids would merge token stats across distinct texts. */
-  def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
+  def documents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
   /** Fan a narrow scan out to every core (optimization guide §2.2/§2.7 —
@@ -89,39 +103,11 @@ object Tables {
     if (parts < target) df.repartition(target) else df
   }
 
-  /** Persist `df` and MATERIALIZE it immediately (noop sink — computes every
-    * column of every row into the cache, guide §1.4), so the cache is fully
-    * built before any consumer plan runs (guide §5: materialize before
-    * reuse). Rationale: a lazily-persisted DataFrame with MULTIPLE consumer
-    * subtrees in one query (self-join sides, a broadcast-build job plus the
-    * main job) launches those consumers as CONCURRENT stages, and each
-    * task of each stage tries to compute-and-write the same cache blocks;
-    * the losers block on the per-block write locks (lock wait is charged as
-    * executor run time), and the per-row work upstream of the cache is
-    * evaluated more than once. Measured on text_doc_term at the 10×
-    * profiling fixture (8 reps, local[32]): lazy persist 7.6/2.6/2.5/3.2/
-    * 7.7/8.1/7.0/2.2 s (bimodal — whichever job wins the race), eager
-    * materialization 2.2/1.8/1.9/1.8/1.9/2.0/2.0/1.8 s. The materialization
-    * runs inside the caller's (timed) query invocation and is dropped by
-    * the Catalog cache-hygiene contract; nothing persists across runs.
-    * Results are unchanged — this only serializes cache construction.
-    * Currently unreferenced from query code: the two queries this fixed
-    * (text_doc_term / text_vocab_coverage) later moved to a collected
-    * bounded vocab + per-row VocabPositions, whose collect materializes
-    * the cache sequentially anyway; kept as the documented fix for the
-    * race pattern (the dedup operators' lazy persists cite it, with the
-    * measured reasons eager materialization is WRONG for them). */
-  def matPersist(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    p.write.format("noop").mode("overwrite").save()
-    p
-  }
-
   /** CSV reader with an explicit schema — never infer in production paths
     * (SURVEY.md §1.3). Quote-aware: fixes the reference's naive split(',')
     * (LDATopicModelingWithGibbs.py:31) which breaks on text containing commas.
     */
-  def csv(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType,
+  def csv(spark: SparkSession, path: String, schema: StructType,
       header: Boolean = true, multiLine: Boolean = false): DataFrame =
     spark.read
       .option("header", header.toString)

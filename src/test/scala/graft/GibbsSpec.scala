@@ -1,6 +1,7 @@
 package graft
 
-import graft.lda.GibbsLda
+import graft.lda.{GibbsLda, LdaPipeline}
+import graft.sources.Tables
 
 /** Invariants for the distributed collapsed Gibbs sampler (SURVEY §5.2.4:
   * transcripts can't be golden-matched, invariants can). */
@@ -39,5 +40,26 @@ class GibbsSpec extends SparkSpec {
       val w = r.getString(2).split(" ").map(_.toLong).toSeq
       assert(w == w.sorted.reverse) // counts non-increasing
     }
+  }
+
+  test("partition invariance: 1 vs 4 input partitions fit identical Φ, n_z and doc topics") {
+    val corpus = LdaPipeline.preprocess(Tables.documents(spark, sf0001))
+    def fitOn(parts: Int) = {
+      val in = if (parts == 1) corpus.coalesce(1) else corpus.repartition(parts)
+      val m = GibbsLda.fitCorpus(in, vocabSize = 100, numTopics = 3,
+        maxIter = 2, seed = 7L)
+      val docs = m.docs.collect().sortBy(_.docId)
+        .map(d => (d.docId, d.words.toSeq, d.topics.toSeq)).toSeq
+      val n = m.docs.getNumPartitions
+      m.docs.unpersist()
+      (m.phi.map(_.toSeq).toSeq, m.nz.toSeq, m.vocab.toSeq, docs, n)
+    }
+    val (phi1, nz1, vocab1, docs1, n1) = fitOn(1)
+    val (phi4, nz4, vocab4, docs4, n4) = fitOn(4)
+    assert(n1 == 1 && n4 == 4)
+    assert(vocab1 == vocab4)
+    assert(phi1 == phi4)
+    assert(nz1 == nz4)
+    assert(docs1 == docs4)
   }
 }

@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM (Test/fork := true gives one
@@ -22,4 +15,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val sf0001 = "/root/testdata/sf0.001"
+}
+
+object SparkSpec {
+  /** One local session per test JVM, shared by the suites and the
+    * ScalaCheck properties that need Spark. */
+  lazy val session: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-test")
+    .config("spark.sql.shuffle.partitions", 4)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 }
