@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{asc, col, desc, explode}
 import graft.lda.LdaPipeline
+import graft.sources.Tables
 
 /** CLI with the reference's exact surface (SURVEY §7.1):
   *   graft.Main <DataDir> <Vocab_size> <Number_of_Topics>
@@ -50,11 +52,16 @@ object Main {
 
   /** The CLI's work after argument validation: the top-10 corpus-word
     * preview (T2, py:57), then a fit and one `Topic <t>: <terms>` line per
-    * topic (M1–M5, py:199-203), each line handed to `out`. */
+    * topic (M1–M5, py:199-203), each line handed to `out`. The preview
+    * counts the tokens the model sees (LdaPipeline.preprocess), ordered by
+    * (count desc, word asc). */
   def run(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
       out: String => Unit): Unit = {
     out("Top 10 corpus words (word, count):")
-    Catalog.byName("text_vocab").run(spark, dir)
+    LdaPipeline.preprocess(Tables.documents(spark, dir))
+      .select(explode(col("tokens")).as("word"))
+      .groupBy(col("word")).count()
+      .orderBy(desc("count"), asc("word"))
       .limit(10).collect()
       .foreach(r => out(s"  ${r.getString(0)}\t${r.getLong(1)}"))
     LdaPipeline.topicReport(spark, dir,

@@ -22,21 +22,11 @@ final case class Q(
   * intra-query reuse and cannot unpersist them (the DataFrame is returned
   * lazily; the cache must survive until the caller's action runs). A caller
   * that executes MANY catalog queries in one session must therefore drop
-  * caches between queries — `spark.sharedState.cacheManager.clearCache()`,
-  * or use `runAndClear` below — or cached corpus-sized blocks accumulate
-  * until eviction/memory pressure. Bench/Verify/Profile/Snap all do this.
+  * caches between queries — `spark.sharedState.cacheManager.clearCache()` —
+  * or cached corpus-sized blocks accumulate until eviction/memory pressure.
+  * Bench/Verify/Profile/Snap all do this.
   */
 object Catalog {
-
-  /** Run one catalog query to completion via `action`, then drop every
-    * cache it built, so looping callers can't accumulate MEMORY_AND_DISK
-    * blocks across queries (see the contract above). */
-  def runAndClear[A](spark: SparkSession, sfDir: String, name: String)(
-      action: DataFrame => A): A = {
-    val out = action(byName(name).run(spark, sfDir))
-    spark.sharedState.cacheManager.clearCache()
-    out
-  }
 
   lazy val all: Seq[Q] =
     graft.operators.Relational.queries ++

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** The text-cleaning suite F1–F8 (SURVEY.md §2.3) as pure `Column` functions —
   * codegen'd built-ins, no UDFs, so the whole pipeline stays inside one
@@ -23,8 +24,10 @@ object Cleaning {
       "\\x{1F0A0}-\\x{1F0FF}\\x{1F100}-\\x{1F1FF}\\x{1F200}-\\x{1F2FF}" +
       "\\x{2190}-\\x{21FF}\\x{2B00}-\\x{2BFF}\\x{FE00}-\\x{FE0F}\\x{200D}]"
 
-  /** Production form: the native codegen Expression (no per-token regex). */
-  def removeEmojiTokens(c: Column): Column = EmojiStripTokens(c)
+  /** Production form: the native kernel EmojiOps.strip (no per-token
+    * regex). */
+  def removeEmojiTokens(c: Column): Column =
+    Native(EmojiOps, "strip", StringType, c)
 
   /** Built-in-only form, kept for the Expression-equivalence test. */
   def removeEmojiTokensHof(c: Column): Column =
@@ -75,15 +78,20 @@ object Cleaning {
   /** F7 — lowercase (py:164, applied last). */
   def toLower(c: Column): Column = lower(c)
 
+  /** F2→F3→F4 as the native NoiseOps.strip passes. */
+  def urlUserCovidStrip(c: Column): Column =
+    Native(NoiseOps, "strip", StringType, c)
+
+  /** F5→F6→trim→F7 fused into the single-pass native AlphaOps.fold. */
+  def alphaSpaceLower(c: Column): Column = Native(AlphaOps, "fold", StringType, c)
+
   /** The full composed pipeline in the reference's exact order F1→F7
     * (py:158-164). One Column expression — Catalyst folds it into the scan
-    * projection. F2→F4 run as the native UrlUserCovidStrip passes and the
-    * F5→F6→trim→F7 tail is fused into the single-pass native
-    * AlphaSpaceLower expression (equivalence proofs in their scaladocs;
-    * pinned against the built-in composition by CleaningSpec and
-    * NativeOpsProps). */
+    * projection. Each step is a native kernel (equivalence proofs in their
+    * scaladocs; pinned against the built-in composition by CleaningSpec
+    * and NativeOpsProps). */
   def cleanText(c: Column): Column =
-    AlphaSpaceLower(UrlUserCovidStrip(removeEmojiTokens(c)))
+    alphaSpaceLower(urlUserCovidStrip(removeEmojiTokens(c)))
 
   /** Built-in-only form of the F5→F7 tail composition, kept for the
     * Expression-equivalence test. */

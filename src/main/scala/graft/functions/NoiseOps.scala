@@ -1,59 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** F2→F3→F4 of the cleaning chain as ONE native expression (optimization
-  * guide §1.2 step 2 — per-task work): three sequential byte-level passes
-  * replacing three java.util.regex replaceAll passes
-  *
-  *   F2: regexp_replace(x, "http\\S+", "")
-  *   F3: regexp_replace(_, "@\\w+", "")
-  *   F4: regexp_replace(_, "(?i)\\b(?:covid-19|covid19|covid_19|covid)\\b", "")
-  *
-  * with no regex engine and no intermediate UTF8String/String allocation
-  * (two byte buffers, ping-ponged). The passes stay SEQUENTIAL — cross-pass
-  * fusion is provably unsafe ("co@xvid" → F3 → "covid" → F4 → "") — only
-  * the execution of each pass changes.
-  *
-  * Byte-level is exact because every character class involved is
-  * ASCII-defined in java.util.regex: \s is [ \t\n\x0B\f\r], so \S matches
-  * every other char — and every byte of a multibyte UTF-8 char (high bit
-  * set) is individually non-whitespace, so consuming bytes until an ASCII
-  * whitespace byte consumes exactly the chars \S+ consumes; \w is
-  * [A-Za-z0-9_], so multibyte bytes are non-word; the literals are ASCII.
-  * The one NON-ASCII class is \b's word set (see isWordCp below), for
-  * which the adjacent code point is decoded. Scan semantics mirror
-  * the regex engine's: try each position left to right, on a match resume
-  * at the match end, and evaluate boundaries against the ORIGINAL input of
-  * the pass. Pinned by a NativeOpsProps property against the regex
-  * composition and CleaningSpec's bit-equality test of the whole chain.
-  */
-case class UrlUserCovidStrip(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "url_user_covid_strip"
-
-  override def nullSafeEval(input: Any): Any =
-    NoiseOps.strip(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NoiseOps.strip($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): UrlUserCovidStrip =
-    copy(child = newChild)
-}
-
-object UrlUserCovidStrip {
-  /** Column wrapper for the DataFrame API. */
-  def apply(c: Column): Column =
-    GraftColumnBridge.column(UrlUserCovidStrip(GraftColumnBridge.expression(c)))
-}
-
-/** Static helper invoked from generated code. */
+/** Static kernel called from generated code (see Native). */
 object NoiseOps {
 
   /** Java-regex \s (ASCII); multibyte bytes are negative → non-whitespace. */
@@ -177,6 +126,32 @@ object NoiseOps {
     n
   }
 
+  /** F2→F3→F4 of the cleaning chain as ONE native kernel (optimization
+    * guide §1.2 step 2 — per-task work): three sequential byte-level passes
+    * replacing three java.util.regex replaceAll passes
+    *
+    *   F2: regexp_replace(x, "http\\S+", "")
+    *   F3: regexp_replace(_, "@\\w+", "")
+    *   F4: regexp_replace(_, "(?i)\\b(?:covid-19|covid19|covid_19|covid)\\b", "")
+    *
+    * with no regex engine and no intermediate UTF8String/String allocation
+    * (two byte buffers, ping-ponged). The passes stay SEQUENTIAL — cross-pass
+    * fusion is provably unsafe ("co@xvid" → F3 → "covid" → F4 → "") — only
+    * the execution of each pass changes.
+    *
+    * Byte-level is exact because every character class involved is
+    * ASCII-defined in java.util.regex: \s is [ \t\n\x0B\f\r], so \S matches
+    * every other char — and every byte of a multibyte UTF-8 char (high bit
+    * set) is individually non-whitespace, so consuming bytes until an ASCII
+    * whitespace byte consumes exactly the chars \S+ consumes; \w is
+    * [A-Za-z0-9_], so multibyte bytes are non-word; the literals are ASCII.
+    * The one NON-ASCII class is \b's word set (see isWordCp below), for
+    * which the adjacent code point is decoded. Scan semantics mirror
+    * the regex engine's: try each position left to right, on a match resume
+    * at the match end, and evaluate boundaries against the ORIGINAL input of
+    * the pass. Pinned by a NativeOpsProps property against the regex
+    * composition and CleaningSpec's bit-equality test of the whole chain.
+    */
   def strip(in: UTF8String): UTF8String = {
     val src = in.getBytes
     val a = new Array[Byte](src.length)

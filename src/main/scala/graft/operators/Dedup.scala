@@ -35,7 +35,7 @@ object Dedup {
   /** Shared oracle mirror of the cleaning chain (see Cleaning.CleanTextSql). */
   private val cleanSql: String = Cleaning.CleanTextSql
 
-  /** DuckDB mirror of the native StrHash31 expression (graft.functions):
+  /** DuckDB mirror of the native TokenOps.strHash31 kernel (graft.functions):
     * weighted character-code sum × Knuth multiplier mod a Mersenne prime.
     * Keep in lockstep with TokenOps.strHash31. */
   private def wordHashSql(wordCol: String): String =
@@ -290,7 +290,7 @@ object Dedup {
           .select(col("doc_id"), graft.functions.ShingleSet(col("w")).as("sh"))
           .persist()
         // 16 minhashes in ONE pass over each row's shingle array (native
-        // MinHashSig; guide §2.4): the previous explode + StrHash31 +
+        // MinHashSig; guide §2.4): the previous explode + strHash31 +
         // 16-min groupBy(doc_id) shuffled O(shingles) rows only to regroup
         // values already co-located in the row. Mins are order-independent
         // exact integers over the same set → signatures bit-identical

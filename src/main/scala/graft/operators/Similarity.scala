@@ -25,12 +25,12 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  /** Quantize ARRAY<FLOAT> → ARRAY<BIGINT> at 1e6 (native codegen
-    * expression; semantics = transform(c, x -> floor(double(x)·1e6))). */
+  /** Quantize ARRAY<FLOAT> → ARRAY<BIGINT> at 1e6 (native kernel
+    * EmbedOps.quantizeD; semantics = transform(c, x -> floor(double(x)·1e6))). */
   private def qCol(c: Column): Column = graft.functions.QDot.quantize(c)
 
-  /** Exact integer dot product of two quantized vectors (native codegen
-    * expression; semantics = aggregate(zip_with(a, b, *), 0, +)). */
+  /** Exact integer dot product of two quantized vectors (native kernel
+    * EmbedOps.qdot; semantics = aggregate(zip_with(a, b, *), 0, +)). */
   private def qDot(a: Column, b: Column): Column = graft.functions.QDot(a, b)
 
   private val qSql = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
@@ -42,9 +42,9 @@ object Similarity {
     s"((($i) * 2654435761 + ($j) * 40503) % 7) - 3"
 
   /** 8-bit sign-LSH bucket of a quantized vector (exact integer math).
-    * No longer on the query path (SignLshBucket is its native form) but
+    * No longer on the query path (EmbedOps.lshBucket is its native form) but
     * kept as the formulation of record: the equivalence test compares the
-    * native expression against this, and bucketSql mirrors it. */
+    * native kernel against this, and bucketSql mirrors it. */
   private[graft] def bucketExpr(qlCol: String): String = {
     val bits = (0 until 8).map { j =>
       val dot = s"aggregate(transform(sequence(0, 63), " +
@@ -152,7 +152,7 @@ object Similarity {
     Q(
       "sim_ann_lsh",
       (s, dir) => {
-        // bucket is the native SignLshBucket expression (same exact integer
+        // bucket is the native EmbedOps.lshBucket kernel (same exact integer
         // math as bucketExpr above, which remains the oracle's mirror): the
         // built-in form ran 8 planes × aggregate(transform(sequence(0,63)))
         // = 512 interpreted lambda calls per row (guide §4.1 — prefer

@@ -158,8 +158,8 @@ object TextOps {
         // PER ROW (native VocabPositions: one hash probe per token, same as
         // the hash join's) — the explode, the broadcast hash join and the
         // groupBy(doc_id) regroup Exchange all disappear from the plan
-        // (guide §2.4; equivalence in the expression's scaladoc, pinned by
-        // a ScalaCheck property and the unchanged DuckDB oracle).
+        // (guide §2.4; equivalence in RowStatOps.vocabPositions' scaladoc,
+        // pinned by a ScalaCheck property and the unchanged DuckDB oracle).
         val vocab = vocabFromArrays(docsTok).select(col("word"), col("pos"))
           .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
         docsTok
@@ -214,7 +214,7 @@ object TextOps {
     // basis-point integers (floor-div — see object doc). Computed on the
     // exploded token stream: the cleaning chain runs once per doc and the
     // aggregations reference only cheap attributes (multi-reference array
-    // lambdas would re-evaluate the chain per element — see ShingleSet).
+    // lambdas would re-evaluate the chain per element — see ShingleOps).
     Q(
       "text_quality",
       (s, dir) => {
@@ -301,7 +301,7 @@ object TextOps {
       // Native TokenCounts (guide §4.1): the regex split + interpreted
       // filter lambda + regexp_count scanned the raw text three times per
       // row with two regex engines; one code-point walk produces the
-      // identical pair of counts (proof in the expression's scaladoc,
+      // identical pair of counts (proof in RowStatOps.tokenCounts' scaladoc,
       // pinned by a ScalaCheck property against both regexes).
       (s, dir) => docs(s, dir)
         .select(col("doc_id"), graft.functions.TokenCounts(col("text")).as("tc"))
@@ -487,9 +487,9 @@ object TextOps {
         cleaned
           .select(col("doc_id"), w.as("w"),
             md5(col("clean").cast("binary")).as("doc_md5"))
-          // ShingleSet is one native expression referencing w once — the
+          // ShingleSet is one native call referencing w once — the
           // transform-over-sequence form re-evaluates w's defining chain
-          // per element after projection collapse (see ShingleSet docs).
+          // per element after projection collapse (see ShingleOps.shingles).
           .select(col("doc_id"), col("doc_md5"),
             when(size(col("w")) >= 3,
               array_min(transform(graft.functions.ShingleSet(col("w")),

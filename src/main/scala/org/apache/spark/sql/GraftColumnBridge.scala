@@ -3,11 +3,11 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge to the private[sql] Column↔Expression converters, so the
-  * engine's native Catalyst expressions (e.g. graft.functions
-  * .EmojiStripTokens) can be used as Columns with ANY SparkSession — no
-  * session-level registration required. This is the only place the engine
-  * reaches past the public API, and it delegates straight to Spark's own
-  * converters. */
+  * engine's native functions (Spark `StaticInvoke` calls built by
+  * graft.functions.Native) can be used as Columns with ANY SparkSession —
+  * no session-level registration required. This is the only place the
+  * engine reaches past the public API, and it delegates straight to
+  * Spark's own converters. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

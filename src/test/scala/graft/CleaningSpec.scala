@@ -98,10 +98,17 @@ class CleaningSpec extends SparkSpec {
     val r = spark.sql(
       """SELECT emoji_strip_tokens('a\uD83D\uDE00b keep') AS t,
         |  qdot(array(2L, 3L), array(5L, 7L)) AS d,
-        |  quantize_vec(array(CAST(0.5 AS FLOAT), CAST(-1.25 AS FLOAT))) AS q
+        |  quantize_vec(array(CAST(0.5 AS FLOAT), CAST(-1.25 AS FLOAT))) AS q,
+        |  url_user_covid_strip('see http://x.co/a @bob COVID-19 now') AS u,
+        |  alpha_space_lower('  Ab1c,2.3  X\tY ') AS l,
+        |  quantize_vec(array(CAST(0.1 AS DOUBLE), CAST(-2.0000005 AS DOUBLE),
+        |    CAST(1e-7 AS DOUBLE))) AS qd
         |""".stripMargin).collect().head
     assert(r.getString(0) == "keep")
     assert(r.getLong(1) == 31L)
     assert(r.getSeq[Long](2) == Seq(500000L, -1250000L))
+    assert(r.getString(3) == "see    now")
+    assert(r.getString(4) == "abc xy")
+    assert(r.getSeq[Long](5) == Seq(100000L, -2000001L, 0L))
   }
 }
