@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * 17–18 measured a 2.55× swing on byte-identical bytecode, wider than any
   * real regression, because a single run folds one-time codegen/JIT compile
   * and host noise into the number. The raw runs (old methodology: run 1 of
-  * each list) are kept in `runs`, and a query that throws is excluded from
-  * the total and listed in `failed` instead of silently contributing its
-  * time-to-failure (pre-r21 behavior).
+  * each list) are kept in `runs`, and a query that throws is listed in
+  * `failed` instead of silently contributing its time-to-failure (pre-r21
+  * behavior); `value` is then null (see `jsonLine`).
   *
   * Timed action (also changed r21, guide §1.4): the noop sink
   * (`write.format("noop")`) instead of `.count()` — count() lets the
@@ -66,11 +66,22 @@ object Bench {
       spark.sparkContext.setJobDescription(null)
       q.name -> times
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
+    println(jsonLine(results, reps, sfDir))
+    spark.stop()
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+
+  /** The JSON line for per-query run times (an empty list: the query
+    * failed every rep). `value` is the sum of the per-query medians, or
+    * null when any query failed: a total that leaves out a failed query's
+    * time would read as a speedup. The other fields list the queries that
+    * ran and the failed ones. */
+  def jsonLine(results: Seq[(String, Seq[Double])], reps: Int, sfDir: String): String = {
     val ok = results.filter(_._2.nonEmpty)
     val failed = results.filter(_._2.isEmpty).map(_._1)
     val qs = ok.map { case (k, v) => "\"" + k + "\":" + median(v) }
@@ -78,9 +89,8 @@ object Bench {
     val runs = ok.map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = ok.map { case (_, v) => median(v) }.sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""runs":$runs,"reps":$reps,"failed":$failedJson,"sf":"$sfDir"}""")
-    spark.stop()
+    val value = if (failed.isEmpty) ok.map { case (_, v) => median(v) }.sum.toString else "null"
+    s"""{"metric":"total","value":$value,"unit":"sec","queries":$qs,""" +
+      s""""runs":$runs,"reps":$reps,"failed":$failedJson,"sf":"$sfDir"}"""
   }
 }

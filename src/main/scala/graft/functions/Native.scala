@@ -45,6 +45,12 @@ object SortedIntersectSize {
     Native(ShingleOps, "sortedIntersectSize", LongType, a, b)
 }
 
+object JaccardPrefix {
+  def apply(ws: Column, num: Int, den: Int): Column = Native(TokenOps, "jaccardPrefix",
+    ArrayType(StringType, containsNull = false), ws,
+    GraftColumnBridge.column(Literal(num)), GraftColumnBridge.column(Literal(den)))
+}
+
 object SimHash16 {
   def apply(c: Column): Column = Native(RowStatOps, "simhash16", LongType, c)
 }

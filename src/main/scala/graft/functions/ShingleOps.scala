@@ -9,9 +9,12 @@ object ShingleOps {
     * (binary UTF8String comparison, no hash-set per call).
     * Contract: both inputs ascending + deduplicated (array_sort ∘
     * array_distinct) — unsorted input undercounts silently, so keep the
-    * sort at the producer. Powers the doc-pair Jaccard join: the pair
-    * count is ~30× smaller than the token-explode join's intermediate,
-    * and per-pair cost is a linear merge instead of a hash build. */
+    * sort at the producer. The exact verify of two Jaccard pair queries:
+    * dedup_minhash_lsh's rerank of band-join candidates, and
+    * dedup_jaccard_pairs' join condition, where it runs on the pairs that
+    * share a prefix word and pass the length filter (1.7% of the token
+    * pairs the full word explode counted, on the near_dup benchmark
+    * corpus), as one linear merge per pair. */
   def sortedIntersectSize(a: ArrayData, b: ArrayData): Long = {
     val na = a.numElements()
     val nb = b.numElements()

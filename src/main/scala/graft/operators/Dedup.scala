@@ -18,7 +18,8 @@ import graft.functions.Cleaning
   *
   * Scale posture (100 TB): exact/BoW dedup is one hash-partitioned groupBy on
   * the fingerprint (shuffle O(docs), no pairwise work); Jaccard pairs are
-  * blocked on a bounded key (`source`) so the quadratic blowup is per-block;
+  * blocked on a bounded key (`source`) so the quadratic blowup is per-block,
+  * and the word-set join forms only pairs that share a prefix word;
   * SimHash reduces near-dup detection to an equality/band join on a 16-bit
   * key; MinHashLSH (the real 100 TB path) is banded bucket-join — candidate
   * pairs only, never all-pairs.
@@ -26,6 +27,12 @@ import graft.functions.Cleaning
 object Dedup {
 
   private def cleanCol: Column = Cleaning.cleanText(col("text"))
+
+  /** dedup_jaccard_pairs' threshold t = JNum/JDen (j_bp >= 9000), exact in
+    * integers: the prefix length, the length filter and the verify all use
+    * it. */
+  private val JNum = 9
+  private val JDen = 10
 
   /** documents scan fanned out to every core (guide §2.2: the single-row-
     * group fixture plans as ONE scan task, serializing the regex chain). */
@@ -96,51 +103,55 @@ object Dedup {
               |  count(DISTINCT h_set) AS n_unique_set
               |FROM h""".stripMargin)),
 
-    // ---- Exact n-gram (word-set) Jaccard near-dup pairs, blocked on the
-    // bounded `source` key. Score in exact basis points. The explode+equi-
-    // join computes intersections without materializing all pairs of docs —
-    // only pairs sharing ≥1 word inside a block ever exist.
+    // ---- Exact word-set Jaccard near-dup pairs (J >= JNum/JDen), blocked on
+    // the bounded `source` key, as a prefix-filtered join (AllPairs/PPJoin):
+    // only pairs sharing a prefix word inside a block are ever formed, and
+    // each is verified exactly. Score in exact basis points.
     Q(
       "dedup_jaccard_pairs",
       (s, dir) => {
-        // Token-explode + equi-join + count formulation: every stage is a
-        // codegen'd hash join/aggregate. (A direct doc-pair join computing
-        // array_intersect per pair benchmarked 2.5× slower — the Jaccard
-        // filter gets pushed into the join condition, where interpreted
-        // lambda expressions evaluate the intersection several times per
-        // candidate pair.)
-        // Persisted LAZILY, on purpose (r22 measured both ways): the clean-
-        // chain projection feeds both self-join sides and the sizes table —
-        // without the cache the cleaning chain runs 3× per doc (guide §2.4 /
-        // §5). Eager materialization (OPTIMIZATION_r22.md, "concurrent
-        // cache-materialization race") was tried and REVERTED here: once
-        // the cache is materialized its InMemoryRelation reports its true
-        // (large) size, the planner switches the tok
-        // self-join from broadcast-hash to sort-merge, and the join output
-        // loses the doc-partitioning the downstream (d1,d2) partial agg
-        // relies on — partial-agg output exploded 62M → 697M rows (100 GB
-        // spill), 80 s → 270 s at the 10× fixture. The concurrent-stage
-        // cache race that eager materialization fixes costs far less than
-        // that here.
+        // Each doc's distinct words are sorted once (the merge-scan verify
+        // needs ascending sets), and only their prefixes under TokenOps'
+        // global order are exploded. A pair with J >= t shares a prefix
+        // word, so the self-join on (source, prefix word) loses none. On
+        // the near_dup benchmark corpus (seed 7) it matches 80,987 keys
+        // where the full word explode matched 1,476,244 and counted them
+        // per pair, and verifies the 25,654 that pass the length filter.
+        //
+        // The join condition runs left to right and short-circuits: doc
+        // order and the length filter t·|x| <= |y| (both ways) come before
+        // the exact verify (den+num)·|x∩y| >= num·(|x|+|y|), which is
+        // den·|x∩y| >= num·|x∪y|, i.e. j_bp >= 10000·t. As a `filter` after
+        // the join, Catalyst would push the verify into the condition ahead
+        // of the cheap predicates. The shuffle-hash hint keeps the sets off
+        // a broadcast (a broadcast build side collects every row's `ws`
+        // into one relation sent to every task); both sides read one
+        // reused exchange, so the cleaning chain runs once per doc without
+        // a cache. Pairs sharing several prefix words repeat, hence the
+        // `distinct`.
+        //
+        // A NULL text gets the empty set, which, like NULL, explodes to no
+        // rows. `ws` is then non-nullable, so Catalyst infers no
+        // isnotnull(ws) filter, which would run the cleaning chain in the
+        // scan's single task ahead of the fan-out.
         val docs = docsSrc(s, dir)
           .select(col("doc_id"), col("source"),
-            array_distinct(filter(split(cleanCol, " "), t => t =!= "")).as("ws"))
-          .persist()
-        val tok = docs.select(col("doc_id"), col("source"),
-          explode(col("ws")).as("word"))
-        val sizes = docs.select(col("doc_id"), size(col("ws")).cast("long").as("n"))
-        val inter = tok.as("a").join(tok.as("b"),
-            col("a.word") === col("b.word") && col("a.source") === col("b.source") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .agg(count(lit(1)).as("ni"))
-        inter
-          .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n", "na"), "d1")
-          .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "nb"), "d2")
-          .select(col("d1"), col("d2"),
-            floor(lit(10000) * col("ni") / (col("na") + col("nb") - col("ni")))
-              .cast("long").as("j_bp"))
-          .filter(col("j_bp") >= 9000)
+            coalesce(array_sort(array_distinct(filter(split(cleanCol, " "), t => t =!= ""))),
+              typedLit(Array.empty[String])).as("ws"))
+          .select(col("doc_id"), col("source"), col("ws"),
+            size(col("ws")).cast("long").as("n"),
+            explode(graft.functions.JaccardPrefix(col("ws"), JNum, JDen)).as("w"))
+        val (a, b) = (docs.as("a"), docs.as("b"))
+        val ni = graft.functions.SortedIntersectSize(col("a.ws"), col("b.ws"))
+        a.hint("shuffle_hash").join(b,
+            col("a.source") === col("b.source") && col("a.w") === col("b.w") &&
+              col("a.doc_id") < col("b.doc_id") &&
+              lit(JNum) * col("a.n") <= lit(JDen) * col("b.n") &&
+              lit(JNum) * col("b.n") <= lit(JDen) * col("a.n") &&
+              lit(JDen + JNum) * ni >= lit(JNum) * (col("a.n") + col("b.n")))
+          .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+            floor(lit(10000) * ni / (col("a.n") + col("b.n") - ni)).cast("long").as("j_bp"))
+          .distinct()
           .orderBy(col("d1"), col("d2"))
       },
       Some(s"""WITH c AS (SELECT doc_id, source, $cleanSql AS clean FROM documents),

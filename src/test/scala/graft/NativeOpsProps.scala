@@ -1,6 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.propBoolean
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import graft.functions.{AlphaOps, EmojiOps, NoiseOps, ShingleOps, TokenOps}
@@ -189,6 +190,54 @@ object NativeOpsProps extends Properties("graft.native") {
       var wantBpe = 0L
       while (m.find()) wantBpe += 1
       got.getLong(0) == wantWs && got.getLong(1) == wantBpe
+    }
+
+  /** Words over four letters, up to three long: 84 words whose weighted
+    * codepoint sums collide often, so strHash31 ties are common. */
+  private val tieWord: Gen[String] = Gen.choose(1, 3)
+    .flatMap(n => Gen.listOfN(n, Gen.oneOf('a', 'b', 'c', 'd')).map(_.mkString))
+
+  private val tiePairs: Seq[(String, String)] = {
+    val words = for (n <- 1 to 3; w <- Seq.fill(n)("abcd").foldLeft(Seq(""))(
+      (acc, letters) => for (p <- acc; c <- letters) yield p + c)) yield w
+    words.groupBy(w => TokenOps.strHash31(UTF8String.fromString(w))).values
+      .flatMap(g => for (a <- g; b <- g if a != b) yield (a, b)).toSeq
+  }
+
+  private def prefix(ws: Iterable[String], num: Int, den: Int): Seq[String] = {
+    val p = TokenOps.jaccardPrefix(arr(ws.toArray), num, den)
+    (0 until p.numElements()).map(p.getUTF8String(_).toString)
+  }
+
+  property("jaccardPrefix orders by strHash31, then by the UTF-8 bytes on a hash tie") =
+    Prop.forAll(Gen.oneOf(Gen.oneOf(tiePairs), Gen.zip(tieWord, tieWord))) { case (a, b) =>
+      val (ua, ub) = (UTF8String.fromString(a), UTF8String.fromString(b))
+      val (ha, hb) = (TokenOps.strHash31(ua), TokenOps.strHash31(ub))
+      val first = if (ha < hb || (ha == hb && ua.compareTo(ub) <= 0)) a else b
+      prefix(Seq(a, b).distinct, 1, 1) == Seq(first) &&
+        prefix(Seq(b, a).distinct, 1, 1) == Seq(first)
+    }
+
+  /** A distinct word set and a near copy of it (some words dropped, some
+    * added), so that pairs at every threshold below come up often. */
+  private val nearSets: Gen[(Set[String], Set[String])] = for {
+    x <- Gen.choose(1, 40).flatMap(n => Gen.containerOfN[Set, String](n, tieWord))
+      .suchThat(_.nonEmpty)
+    drop <- Gen.choose(0, x.size / 3).flatMap(k => Gen.pick(k, x.toSeq))
+    add <- Gen.choose(0, 4).flatMap(k => Gen.listOfN(k, tieWord))
+  } yield (x, x -- drop ++ add)
+
+  property("jaccardPrefix: a pair at J >= num/den shares a prefix word and passes " +
+      "the length filter") =
+    Prop.forAll(nearSets, Gen.oneOf((9, 10), (1, 2), (1, 5))) { case ((x, y), (num, den)) =>
+      val (inter, union) = ((x & y).size.toLong, (x | y).size.toLong)
+      (den * inter >= num * union) ==> {
+        val (px, py) = (prefix(x, num, den), prefix(y, num, den))
+        px.size == TokenOps.prefixLength(x.size, num, den) &&
+          px.exists(py.toSet) &&
+          num.toLong * x.size <= den.toLong * y.size &&
+          num.toLong * y.size <= den.toLong * x.size
+      }
     }
 
   property("sortedIntersectSize equals naive set intersection") =

@@ -90,7 +90,8 @@ class NativeParitySpec extends SparkSpec {
       LenHist(col("w")), TokenStats(col("w"), TextOps.StopWords),
       WordTfPairs(col("w")), VocabPositions(col("w"), vocab),
       SortedIntersectSize(sort_array(array_distinct(col("w"))),
-        sort_array(array_distinct(slice(col("w"), 2, 6)))))
+        sort_array(array_distinct(slice(col("w"), 2, 6)))),
+      JaccardPrefix(sort_array(array_distinct(col("w"))), 9, 10))
 
     val embSchema = StructType(Seq(StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
@@ -127,6 +128,7 @@ class NativeParitySpec extends SparkSpec {
     // calls are generated.
     Seq(
       "dedup_minhash_lsh" -> Set("MinHashOps.sig", "ShingleOps.sortedIntersectSize"),
+      "dedup_jaccard_pairs" -> Set("TokenOps.jaccardPrefix", "ShingleOps.sortedIntersectSize"),
       "text_quality" -> Set("EmojiOps.strip", "NoiseOps.strip", "AlphaOps.fold",
         "RowStatOps.tokenStats")).foreach { case (q, generated) =>
       val df = Catalog.byName(q).run(spark, sf0001)

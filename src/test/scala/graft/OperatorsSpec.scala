@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.types.ArrayType
 
 /** Invariants for the dedup / similarity / text operators on the sf0.001
   * fixtures (values are oracle-checked separately by the driver's DuckDB
@@ -53,6 +57,56 @@ class OperatorsSpec extends SparkSpec {
     val out = tok.groupBy(col("doc_id")).agg(sums.head, sums.tail: _*)
       .select(col("doc_id"), sh.as("h")).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) == out(2L))
+  }
+
+  private def jaccardRows(): Seq[(Long, Long, Long)] =
+    run("dedup_jaccard_pairs").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSeq
+
+  test("dedup_jaccard_pairs equals a brute-force all-pairs Jaccard per source") {
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+      .select(col("doc_id"), col("source"), array_distinct(
+        filter(split(graft.functions.Cleaning.cleanText(col("text")), " "), _ =!= "")).as("ws"))
+      .collect().filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+      .map(r => (r.getLong(0), r.getString(1), r.getSeq[String](2).toSet))
+    val want = docs.groupBy(_._2).values.flatMap { block =>
+      for {
+        (d1, _, x) <- block.toSeq
+        (d2, _, y) <- block.toSeq
+        if d1 < d2 && (x & y).nonEmpty
+        jbp = 10000L * (x & y).size / (x | y).size
+        if jbp >= 9000
+      } yield (d1, d2, jbp)
+    }.toSeq.sorted
+    assert(want.nonEmpty, "no pair at J >= 0.9 in the fixture")
+    assert(jaccardRows() == want)
+  }
+
+  test("dedup_jaccard_pairs: same rows with broadcast off, AQE off, 1 and 7 shuffle partitions") {
+    val want = jaccardRows()
+    Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "1", "spark.sql.shuffle.partitions" -> "7").foreach {
+      case (k, v) =>
+        val before = spark.conf.getOption(k)
+        spark.conf.set(k, v)
+        try assert(jaccardRows() == want, s"$k=$v")
+        finally before.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  test("dedup_jaccard_pairs: no broadcast carries the word sets") {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }).flatMap(nodes)
+    val df = run("dedup_jaccard_pairs")
+    assert(df.collect().nonEmpty)
+    val carrying = nodes(df.queryExecution.executedPlan).collect {
+      case b: BroadcastExchangeExec if b.output.exists(_.dataType.isInstanceOf[ArrayType]) => b
+    }
+    assert(carrying.isEmpty, carrying.mkString("\n"))
   }
 
   test("sim_topk_bruteforce: 10 neighbors per query, ranks contiguous, scores non-increasing") {
