@@ -1,10 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries (one per operator family) on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
-  * master local[$SPARK_GRAFT_CPUS] / $SPARK_GRAFT_CPUS shuffle partitions per
-  * the engine contract.
+  * SPARK_GRAFT_SF_DIR through `Run.each` and prints ONE JSON line.
   *
   * Measurement methodology (optimization guide §1, changed r21 — see
   * OPTIMIZATION_r21.md): each query runs SPARK_GRAFT_BENCH_REPS times
@@ -26,47 +23,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: file listing, parquet footers, codegen compilation.
-    Seq("lineitem", "documents", "embeddings", "events").foreach { t =>
-      try graft.sources.Tables.table(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
+    val spark = Run.session()
+    Run.warm(spark, sfDir)
+    val results = Run.each(spark, sfDir, Catalog.all.filter(_.headline), reps) { (_, df) =>
+      df.write.format("noop").mode("overwrite").save()
     }
-    val headline = Catalog.all.filter(_.headline)
-    val results: Seq[(String, Seq[Double])] = headline.map { q =>
-      val times = (1 to reps).flatMap { i =>
-        spark.sparkContext.setJobDescription(s"bench:${q.name}#$i")
-        val t0 = System.nanoTime()
-        val t = try {
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            System.err.println(
-              s"[bench] ${q.name}#$i failed: ${e.getClass.getName}: ${e.getMessage}")
-            None
-        }
-        // Queries may persist() intermediates for intra-query reuse. Drop
-        // them between reps: Spark's CacheManager substitutes cached data by
-        // logical-plan match, so without this reps 2..n would read rep 1's
-        // cache and the median would measure a cached re-read instead of the
-        // computation from parquet.
-        spark.sharedState.cacheManager.clearCache()
-        t
-      }
-      spark.sparkContext.setJobDescription(null)
-      q.name -> times
-    }
-    println(jsonLine(results, reps, sfDir))
+    println(jsonLine(results.map { case (n, rs) => n -> rs.collect { case Right(t) => t } },
+      reps, sfDir))
     spark.stop()
   }
 

@@ -35,17 +35,7 @@ object Main {
       sys.exit(1)
     }
 
-    val spark = SparkSession.builder()
-      .appName("graft-lda")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = Run.session()
     run(spark, dir, vocabSize, numTopics, println(_))
     spark.stop()
   }

@@ -24,7 +24,7 @@ final case class Q(
   * that executes MANY catalog queries in one session must therefore drop
   * caches between queries — `spark.sharedState.cacheManager.clearCache()` —
   * or cached corpus-sized blocks accumulate until eviction/memory pressure.
-  * Bench/Verify/Profile/Snap all do this.
+  * `Run.each`, the loop every main runs queries through, does this.
   */
 object Catalog {
 

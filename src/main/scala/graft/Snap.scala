@@ -1,12 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
 /** Output-identity snapshot: collects named catalog queries and writes one
   * row-per-line text file per query, for bit-identity diffs across an
   * optimization (used for the no-oracle queries, where the DuckDB compare
   * can't prove results unchanged).
   *   runMain graft.Snap <sfDir> <outPrefix> [name...]
-  * Defaults to the six no-oracle queries. Same session config as Verify.
+  * Defaults to the six no-oracle queries.
   */
 object Snap {
   def main(args: Array[String]): Unit = {
@@ -16,23 +17,15 @@ object Snap {
       if (args.length > 2) args.drop(2).toSeq
       else Seq("lda_topics", "lda_doc_topics", "gibbs_topics",
         "dedup_minhash_lsh", "sim_ivf_topk", "mm_decode_features")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { n =>
-      val out = Catalog.byName(n).run(spark, sfDir)
-        .collect().map(_.toString).mkString("\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"${prefix}_$n.txt"), out)
-      System.err.println(s"[snap] $n")
-      spark.sharedState.cacheManager.clearCache()
-    }
+    val spark = Run.session()
+    run(spark, sfDir, prefix, names)
     spark.stop()
   }
+
+  /** Writes each named query's collected rows to `<prefix>_<name>.txt`. */
+  def run(spark: SparkSession, sfDir: String, prefix: String, names: Seq[String]): Unit =
+    Run.each(spark, sfDir, names.map(Catalog.byName), reps = 1) { (name, df) =>
+      Files.writeString(Paths.get(s"${prefix}_$name.txt"),
+        df.collect().map(_.toString).mkString("\n"))
+    }
 }

@@ -1,51 +1,46 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each catalog query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (`tools/oracle_check.py`).
+  *   runMain graft.Verify <sfDir> <outDir> */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(
-          f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // Queries may persist() intermediates for intra-query reuse; drop them
-      // so each query computes from parquet and cached blocks don't pile up
-      // across the 50+ query dump.
-      spark.sharedState.cacheManager.clearCache()
+    usage(args).foreach { u =>
+      System.err.println(u)
+      sys.exit(1)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val spark = Run.session()
+    run(spark, args(0), args(1), Catalog.all)
     spark.stop()
   }
+
+  /** The usage line, when `args` are not `<sfDir> <outDir>`. */
+  def usage(args: Array[String]): Option[String] =
+    if (args.length == 2) None else Some("Usage: graft.Verify <sfDir> <outDir>")
+
+  /** Writes each of `queries` to `<outDir>/<name>` as one parquet file, and
+    * every catalog query's oracle SQL to `<outDir>/oracle_sql.json`. */
+  def run(spark: SparkSession, sfDir: String, outDir: String, queries: Seq[Q]): Unit = {
+    new java.io.File(outDir).mkdirs()
+    Run.each(spark, sfDir, queries.sortBy(_.name), reps = 1) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+  }
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in an oracle SQL string would otherwise make the
+    * compare's json.load fail, and with it every query's check. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

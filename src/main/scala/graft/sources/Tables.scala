@@ -25,7 +25,7 @@ object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   /** The events fixture stores ts as parquet TIMESTAMP(NANOS), which Spark 4
     * rejects unless spark.sql.legacy.parquet.nanosAsLong is set (it is, in
-    * every session builder here). The long nanos (µs-aligned in the fixture)
+    * `graft.Run.session`). The long nanos (µs-aligned in the fixture)
     * are converted back to a proper TimestampType column on read.
     * INTEGER division is essential: `/` on longs promotes to double, and
     * 2024-era nano epochs (~1.7e18) exceed 2^53, so double division puts
