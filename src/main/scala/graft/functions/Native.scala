@@ -51,6 +51,17 @@ object JaccardPrefix {
     GraftColumnBridge.column(Literal(num)), GraftColumnBridge.column(Literal(den)))
 }
 
+object Words {
+  /** [[TokenOps.words]] over a cleaned text. The stopword set is a HashSet
+    * literal, which compares by content. */
+  def apply(clean: Column, stopWords: Seq[String] = Nil): Column = {
+    val stop = new java.util.HashSet[UTF8String](stopWords.length * 2)
+    stopWords.foreach(w => stop.add(UTF8String.fromString(w)))
+    Native(TokenOps, "words", ArrayType(StringType, containsNull = false), clean,
+      Native.const(stop))
+  }
+}
+
 object SimHash16 {
   def apply(c: Column): Column = Native(RowStatOps, "simhash16", LongType, c)
 }

@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object ShingleOps {
   /** |a ∩ b| for two SORTED, DISTINCT string arrays, as one merge-scan
     * (binary UTF8String comparison, no hash-set per call).
-    * Contract: both inputs ascending + deduplicated (array_sort ∘
+    * Contract: both inputs ascending + deduplicated (sort_array ∘
     * array_distinct) — unsorted input undercounts silently, so keep the
     * sort at the producer. The exact verify of two Jaccard pair queries:
     * dedup_minhash_lsh's rerank of band-join candidates, and

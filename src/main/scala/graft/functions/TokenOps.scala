@@ -5,6 +5,34 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernels called from generated code (see Native). */
 object TokenOps {
+  /** The words of a cleaned text, in order, less the empty tokens and
+    * the tokens in `stop` (exact byte equality; empty = no stopwords).
+    *
+    * `Cleaning.cleanText` emits only [a-z] runs joined by single spaces
+    * (`AlphaOps.fold`), so on its output this equals both formulations it
+    * replaced: `filter(split(clean, " "), t -> t <> "" AND NOT
+    * array_contains(stop, t))`, and MLlib's `RegexTokenizer` (`\s+`,
+    * lowercase) followed by `StopWordsRemover` (case-insensitive). The
+    * lowercasing changes nothing on [a-z], and a case-insensitive match of
+    * an [a-z] token against a lowercase list is exact equality. One byte
+    * scan per row; the tokens are views on one copy of the row's bytes. */
+  def words(clean: UTF8String, stop: java.util.HashSet[UTF8String]): ArrayData = {
+    val b = clean.getBytes
+    val out = new java.util.ArrayList[UTF8String]()
+    val filtered = !stop.isEmpty
+    var i = 0
+    while (i < b.length) {
+      var j = i
+      while (j < b.length && b(j) != ' ') j += 1
+      if (j > i) {
+        val t = UTF8String.fromBytes(b, i, j - i)
+        if (!filtered || !stop.contains(t)) out.add(t)
+      }
+      i = j + 1
+    }
+    new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
+  }
+
   /** The engine's deterministic 31-bit string hash:
     * sum_k (k · codepoint_k) · 2654435761 mod (2³¹−1), 1-based k — matching
     * ascii(substring(s, k, 1)) semantics (k-th codepoint). Bit-identical to

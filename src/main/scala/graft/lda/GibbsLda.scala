@@ -21,18 +21,31 @@ import graft.sources.Tables
   * fit is reproducible under any partitioning.
   *
   * Scale posture: doc states (positions + topics) stay partitioned across
-  * executors in a MEMORY_AND_DISK-persisted RDD. Each sweep is ONE Spark job:
-  * a mapPartitions that samples against a broadcast Φ copy (AD-LDA) and
-  * writes the new states to the cache, fused with [[countPhi]]'s per-task
-  * dense T×V count and its treeReduce, which rebuild the exact global
-  * counts. The dense per-task array is the same size as the broadcast Φ
-  * every task already holds. Driver/broadcast state is Φ (T×V longs) + n_z
-  * (T longs) — bounded by MODEL size, never by corpus size. No O(N·V)
-  * one-hot densification anywhere (SURVEY §4.2.1).
+  * executors in a persisted RDD, serialized ([[Cached]]). Each sweep is
+  * ONE Spark job: a mapPartitions that samples against a broadcast Φ copy
+  * (AD-LDA) and writes the new states to the cache, fused with
+  * [[countPhi]]'s per-task dense T×V count and its treeReduce, which
+  * rebuild the exact global counts. The dense per-task array is the same
+  * size as the broadcast Φ every task already holds. Driver/broadcast
+  * state is Φ (T×V longs) + n_z (T longs) — bounded by MODEL size, never
+  * by corpus size. No O(N·V) one-hot densification anywhere (SURVEY
+  * §4.2.1).
   */
 object GibbsLda {
 
   final case class DocState(docId: Long, words: Array[Int], topics: Array[Int])
+
+  /** Storage of the token and doc-state caches: serialized. Spark sizes a
+    * deserialized block while it unrolls it, by walking the object graph of
+    * sampled rows (`SizeEstimator`), and these caches hold many small
+    * objects: a tuple and a String per token, or a DocState and two arrays
+    * per doc. A serialized block is sized by its byte count. Each cache is
+    * written once and read back once or twice (the vocab count and the
+    * encoding; the next sweep), so one deserialization per read costs less
+    * than the walks did: with this and the native word split, SizeEstimator
+    * fell from 30% to 16% of the executor CPU samples of topic_model's warm
+    * passes (JFR, 4-core x86 VM). */
+  private val Cached = StorageLevel.MEMORY_AND_DISK_SER
 
   final case class GibbsModel(
       phi: Array[Array[Long]], // T × V topic-word counts
@@ -54,7 +67,7 @@ object GibbsLda {
     // the corpus (guide §2.4 / §5).
     val docs = corpus.select(col("doc_id"), col("tokens"))
       .as[(Long, Array[String])].rdd
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(Cached)
     // One job. Tokens are lowercase ASCII (Cleaning.cleanText), so String
     // order is the byte order a SQL `ORDER BY word` uses.
     val vocab = docs.flatMap(_._2.iterator.map(w => (w, 1L)))
@@ -151,9 +164,13 @@ object GibbsLda {
     }
   }
 
+  /** Fits `documents`. Its docs without tokens are not filtered out ahead:
+    * they count no word and encode to nothing, and the encoding drops every
+    * doc without a vocabulary word, so the fit equals one on
+    * [[LdaPipeline.preprocess]]. That filter would clean each row twice. */
   def fit(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
       maxIter: Int = 10, seed: Long = 42L): GibbsModel =
-    fitCorpus(LdaPipeline.preprocess(Tables.documents(spark, dir)), vocabSize,
+    fitCorpus(LdaPipeline.tokenize(Tables.documents(spark, dir)), vocabSize,
       numTopics, maxIter, seed)
 
   /** [[fit]] on an already preprocessed corpus (`doc_id`, `tokens`), in
@@ -174,7 +191,7 @@ object GibbsLda {
     // explicit repartition.
     var docs = encoded.map { case (id, words) =>
       DocState(id, words, Array.tabulate(words.length)(_ % numTopics))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    }.persist(Cached)
     val alpha = 1.0 / numTopics
     val beta = 1.0 / numTopics
     // countPhi is the SOLE consumer of each fresh persist, so its job runs
@@ -185,7 +202,7 @@ object GibbsLda {
     tokenCache.unpersist() // DocStates are materialized; the token cache is dead
     for (i <- 1 to maxIter) {
       val next = sweep(docs, phi, nz, numTopics, v, alpha, beta, i, seed)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(Cached)
       val pn = countPhi(next, numTopics, v)
       docs.unpersist()
       docs = next

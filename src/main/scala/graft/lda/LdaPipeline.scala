@@ -1,13 +1,13 @@
 package graft.lda
 
 import org.apache.spark.ml.clustering.LDA
-import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, RegexTokenizer, StopWordsRemover}
+import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, StopWordsRemover}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.vector_to_array
 
 import graft.sources.Tables
-import graft.functions.Cleaning
+import graft.functions.{Cleaning, Words}
 
 /** The reference's flagship pipeline, Spark-native (SURVEY.md §7.3, M1–M5):
   * documents → clean → tokenize → stopword-filter → CountVectorizer(top-V
@@ -25,32 +25,56 @@ import graft.functions.Cleaning
   * aggregate; the only driver-side state is the V-entry vocabulary array
   * (bounded by the V parameter, same as the reference's broadcast dictionary)
   * and the T×V topic matrix (bounded by hyperparameters, not data size).
+  *
+  * Persistence: each query caches its corpus as a DataFrame of two columns,
+  * `doc_id, tokens` ([[corpus]]). A DataFrame cache stores columnar batches
+  * of byte arrays, which Spark sizes without walking per-row objects.
+  * Narrowing it to the two columns the vocabulary and the encoding read
+  * keeps the raw text and the intermediate columns out of the batches the
+  * cache builds and every later job scans. The encoded DataFrame is not
+  * persisted (see the note in [[topicReport]]).
   */
 object LdaPipeline {
 
-  /** Tokenize + stopword-filter, the reference's preprocessing (py:34-41).
-    * Input must have a `text` column; output adds `tokens` (filtered). */
-  def preprocess(df: DataFrame): DataFrame = {
-    val tok = new RegexTokenizer()
-      .setInputCol("text_clean").setOutputCol("raw_tokens")
-      .setPattern("\\s+") // split on whitespace, like the reference's split(' ')
-      .setToLowercase(true)
-    val sw = new StopWordsRemover()
-      .setInputCol("raw_tokens").setOutputCol("tokens")
-      .setStopWords(StopWordsRemover.loadDefaultStopWords("english") ++
-        Cleaning.ExtraStopWords)
-    val cleaned = df.withColumn("text_clean", Cleaning.cleanText(col("text")))
-    sw.transform(tok.transform(cleaned))
-      .filter(size(col("tokens")) > 0) // docs with no surviving tokens vanish,
-      // matching the reference's inner-join corpus shrink (py:75,93; SURVEY §7.5.2)
-  }
+  /** The reference's stopwords (py:36-41): Spark's english list plus
+    * [[Cleaning.ExtraStopWords]]. */
+  val StopWords: Seq[String] =
+    StopWordsRemover.loadDefaultStopWords("english").toSeq ++ Cleaning.ExtraStopWords
+
+  /** `df` with its `tokens`, the reference's tokenize + stopword filter
+    * (py:34-41): one native word split over the cleaned text
+    * ([[graft.functions.Words]]). It equals MLlib's `RegexTokenizer` +
+    * `StopWordsRemover` on that text (a property test checks it), without
+    * their two ScalaUDF conversions per row. Docs without tokens are kept. */
+  private[lda] def tokenize(df: DataFrame): DataFrame =
+    df.withColumn("tokens", Words(Cleaning.cleanText(col("text")), StopWords))
+
+  private def hasTokens = size(col("tokens")) > 0
+
+  /** [[tokenize]] less the docs with no surviving tokens, matching the
+    * reference's inner-join corpus shrink (py:75,93; SURVEY §7.5.2). Input
+    * must have `doc_id` and `text` columns; output adds `tokens`. Catalyst
+    * pushes the filter below the projection with the token expression
+    * inlined, so this plan cleans each row twice; the LDA queries filter
+    * above their cache instead ([[corpus]]). */
+  def preprocess(df: DataFrame): DataFrame = tokenize(df).filter(hasTokens)
+
+  /** The tokenized `documents` as the two LDA queries cache them: `doc_id,
+    * tokens` of every doc, persisted, since the vocabulary fit and the
+    * encoding both read it. Only these two columns are cached, not the raw
+    * text. The queries apply [[hasTokens]] above the cache, where Catalyst
+    * cannot inline the token expression into the filter; that gives the
+    * rows, order and single partition of [[preprocess]], so the seeded fits
+    * are unchanged. */
+  private def corpus(spark: SparkSession, dir: String): DataFrame =
+    tokenize(Tables.documents(spark, dir)).select(col("doc_id"), col("tokens")).persist()
 
   /** θ per document (M2's doc-topic state, kept distributed): doc_id, the
     * argmax topic, and the topic weight — the reference collects θ to the
     * driver (py:155); here it stays a DataFrame. */
   def docTopics(spark: SparkSession, dir: String, vocabSize: Int,
       numTopics: Int, maxIter: Int, seed: Long = 42L): DataFrame = {
-    val docs = preprocess(Tables.documents(spark, dir)).persist()
+    val docs = corpus(spark, dir).filter(hasTokens)
     val cvModel = new CountVectorizer()
       .setInputCol("tokens").setOutputCol("features")
       .setVocabSize(vocabSize)
@@ -82,8 +106,9 @@ object LdaPipeline {
     // so inference runs once per doc. The FIT input keeps its original
     // partitioning (minibatch sampling is partitioning-dependent); the
     // fitted model is fixed here and per-doc inference is row-local, so
-    // redistribution cannot change the output. `docs` stays persisted for
-    // the caller's action (the Catalog cache-hygiene contract drops it).
+    // redistribution cannot change the output. The corpus cache stays
+    // persisted for the caller's action (the Catalog cache-hygiene contract
+    // drops it).
     model.transform(encoded.repartitionByRange(
         spark.sparkContext.defaultParallelism, col("doc_id")))
       .select(col("doc_id"), vector_to_array(col("topicDistribution")).as("theta"))
@@ -101,7 +126,8 @@ object LdaPipeline {
     * flat word list per topic (py:199-203). */
   def topicReport(spark: SparkSession, dir: String, vocabSize: Int,
       numTopics: Int, maxIter: Int, topWords: Int = 20, seed: Long = 42L): DataFrame = {
-    val docs = preprocess(Tables.documents(spark, dir)).persist()
+    val cached = corpus(spark, dir)
+    val docs = cached.filter(hasTokens)
     val cvModel: CountVectorizerModel = new CountVectorizer()
       .setInputCol("tokens").setOutputCol("features")
       .setVocabSize(vocabSize)
@@ -127,7 +153,7 @@ object LdaPipeline {
       .setTopicConcentration(1.0 / numTopics)
       .setFeaturesCol("features")
     val model = lda.fit(encoded) // fit unpersists its internal RDD cache itself
-    docs.unpersist()
+    cached.unpersist()
     // describeTopics = the reference's driver-side argsort top-20 (py:196-203),
     // resolved against the vocabulary (J2's driver-side lookup, py:192-194).
     // Its rows are built on the driver in topic order, so no orderBy: a sort

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
 import graft.sources.Tables
-import graft.functions.Cleaning
+import graft.functions.{Cleaning, Words}
 
 /** Deduplication operators over the `documents` fixture — the LLM-pipeline
   * north star (exact, bag-of-words, n-gram Jaccard, SimHash, MinHash+LSH).
@@ -79,12 +79,12 @@ object Dedup {
         val cleaned = docsSrc(s, dir)
           .select(cleanCol.as("clean"))
           .persist()
-        val words = filter(split(col("clean"), " "), t => t =!= "")
+        val words = Words(col("clean"))
         cleaned
           .select(
             md5(col("clean").cast("binary")).as("h_exact"),
             md5(array_join(sort_array(words), " ").cast("binary")).as("h_bow"),
-            md5(array_join(array_sort(array_distinct(words)), " ").cast("binary")).as("h_set"))
+            md5(array_join(sort_array(array_distinct(words)), " ").cast("binary")).as("h_set"))
           .agg(count(lit(1)).as("n_docs"),
             countDistinct(col("h_exact")).as("n_unique_exact"),
             countDistinct(col("h_bow")).as("n_unique_bow"),
@@ -136,7 +136,7 @@ object Dedup {
         // scan's single task ahead of the fan-out.
         val docs = docsSrc(s, dir)
           .select(col("doc_id"), col("source"),
-            coalesce(array_sort(array_distinct(filter(split(cleanCol, " "), t => t =!= ""))),
+            coalesce(sort_array(array_distinct(Words(cleanCol))),
               typedLit(Array.empty[String])).as("ws"))
           .select(col("doc_id"), col("source"), col("ws"),
             size(col("ws")).cast("long").as("n"),
@@ -188,12 +188,13 @@ object Dedup {
         // materialized cache's true size flips the shingle self-join to
         // sort-merge and the (d1,d2) partial agg loses doc-locality —
         // 11.6–16.4 s lazy vs 26.5–34.2 s eager at the 10× fixture.
+        // No filter on the word count: ShingleSet gives [] below 3 words,
+        // which explodes to no rows, and Catalyst would push such a filter
+        // below the fan-out exchange, cleaning every doc twice, once in the
+        // scan's single task.
         val docs = docsSrc(s, dir)
           .select(col("doc_id"), col("source"),
-            filter(split(cleanCol, " "), t => t =!= "").as("w"))
-          .filter(size(col("w")) >= 3)
-          .select(col("doc_id"), col("source"),
-            graft.functions.ShingleSet(col("w")).as("sh"))
+            graft.functions.ShingleSet(Words(cleanCol)).as("sh"))
           .persist()
         val tok = docs.select(col("doc_id"), col("source"), explode(col("sh")).as("g"))
         val sizes = docs.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
@@ -247,7 +248,7 @@ object Dedup {
         // Σ cnt·(±1) over distinct words exactly, so the fingerprint is
         // bit-identical (oracle-checked) and both Exchanges vanish. The
         // size filter replicates explode's drop of token-less docs.
-        val words = filter(split(cleanCol, " "), t => t =!= "")
+        val words = Words(cleanCol)
         docsSrc(s, dir)
           .select(col("doc_id"), words.as("w"))
           .filter(size(col("w")) > 0)
@@ -293,13 +294,14 @@ object Dedup {
         // the exact rerank (`sets`) — one clean+shingle pass instead of two.
         // Eager materialization (OPTIMIZATION_r22.md) REVERTED with numbers:
         // accurate IMR stats flip the rerank joins to sort-merge — 7.4–9.5 s
-        // lazy vs 14.9–32.8 s eager at the 10× fixture.
+        // lazy vs 14.9–32.8 s eager at the 10× fixture. Docs with fewer than
+        // 3 words (no shingle) are filtered above the cache: below it,
+        // Catalyst would push the filter under the fan-out exchange and
+        // clean every doc twice, once in the scan's single task.
         val docs = docsSrc(s, dir)
-          .select(col("doc_id"),
-            filter(split(cleanCol, " "), t => t =!= "").as("w"))
-          .filter(size(col("w")) >= 3)
-          .select(col("doc_id"), graft.functions.ShingleSet(col("w")).as("sh"))
+          .select(col("doc_id"), graft.functions.ShingleSet(Words(cleanCol)).as("sh"))
           .persist()
+          .filter(size(col("sh")) > 0)
         // 16 minhashes in ONE pass over each row's shingle array (native
         // MinHashSig; guide §2.4): the previous explode + strHash31 +
         // 16-min groupBy(doc_id) shuffled O(shingles) rows only to regroup
@@ -316,7 +318,7 @@ object Dedup {
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
           .distinct()
-        val sets = docs.select(col("doc_id"), array_sort(col("sh")).as("sh"))
+        val sets = docs.select(col("doc_id"), sort_array(col("sh")).as("sh"))
         cand
           .join(sets.withColumnRenamed("doc_id", "d1").withColumnRenamed("sh", "sh1"), "d1")
           .join(sets.withColumnRenamed("doc_id", "d2").withColumnRenamed("sh", "sh2"), "d2")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
 import graft.sources.Tables
-import graft.functions.Cleaning
+import graft.functions.{Cleaning, Words}
 
 /** The text-processing surface over the `documents` fixture: the reference's
   * preprocessing DAG (clean → tokenize → stopword-filter → word count → top-V
@@ -36,13 +36,10 @@ object TextOps {
     Seq("a", "the", "and", "of", "to", "in", "is", "it", "on", "for")
 
   private val swSqlList = StopWords.map(w => s"'$w'").mkString(", ")
-  private val swArray: Column = array(StopWords.map(lit): _*)
 
   /** Clean + whitespace-tokenize + stopword/empty filter, as one Column over
     * `text` (P1/P2). */
-  private def tokensCol: Column =
-    filter(split(Cleaning.cleanText(col("text")), " "),
-      t => !array_contains(swArray, t) && t =!= "")
+  private def tokensCol: Column = Words(Cleaning.cleanText(col("text")), StopWords)
 
   /** documents scan fanned out to every core (guide §2.2: the single-row-
     * group fixture plans as ONE scan task, serializing the regex chain). */
@@ -483,7 +480,7 @@ object TextOps {
         val cleaned = docs(s, dir)
           .select(col("doc_id"), Cleaning.cleanText(col("text")).as("clean"))
           .persist()
-        val w = filter(split(col("clean"), " "), t => t =!= "")
+        val w = Words(col("clean"))
         cleaned
           .select(col("doc_id"), w.as("w"),
             md5(col("clean").cast("binary")).as("doc_md5"))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types._
 
 /** Schema-pinned readers over the driver parquet fixtures
   * (/root/repo/TESTDATA.md). Parquet carries the authoritative schema;
@@ -13,8 +13,51 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * SURVEY.md §2.1); a real parquet/CSV reader subsumes both.
   */
 object Tables {
+  private def fields(fs: (String, DataType)*): StructType =
+    StructType(fs.map { case (n, t) => StructField(n, t) })
+
+  /** The `documents` fixture's schema, as its parquet footers declare it. */
+  val DocumentsSchema: StructType = fields("doc_id" -> LongType,
+    "text" -> StringType, "lang" -> StringType, "source" -> StringType,
+    "n_chars" -> LongType)
+
+  /** Every fixture's schema, as Spark infers it from the parquet footers
+    * (pinned against the footers at three scale factors by a test). The
+    * timestamps are stored as microseconds not adjusted to UTC, which Spark
+    * reads as TIMESTAMP_NTZ. */
+  val Schemas: Map[String, StructType] = Map(
+    "documents" -> DocumentsSchema,
+    "lineitem" -> fields("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "orders" -> fields("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "customer" -> fields("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "supplier" -> fields("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> fields("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType, "p_size" -> IntegerType,
+      "p_retailprice" -> DoubleType),
+    "nation" -> fields("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "region" -> fields("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "embeddings" -> fields("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType), "label" -> IntegerType),
+    "events" -> fields("event_id" -> LongType, "ts" -> TimestampNTZType,
+      "user_id" -> LongType, "event_type" -> StringType, "value" -> DoubleType,
+      "props" -> StringType))
+
+  /** Reads a fixture with its pinned schema instead of inferring it:
+    * inference reads the parquet footers in a Spark job of its own (35–50
+    * ms on 4 cores), once per read. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(Schemas(name)).parquet(s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
@@ -23,10 +66,10 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
-  /** The events fixture stores ts as parquet TIMESTAMP(NANOS), which Spark 4
-    * rejects unless spark.sql.legacy.parquet.nanosAsLong is set (it is, in
-    * `graft.Run.session`). The long nanos (µs-aligned in the fixture)
-    * are converted back to a proper TimestampType column on read.
+  /** An events `ts` read as long nanoseconds (parquet TIMESTAMP(NANOS)
+    * under spark.sql.legacy.parquet.nanosAsLong, which `graft.Run.session`
+    * sets) or as TIMESTAMP_NTZ (the fixtures' microseconds) is converted to
+    * a proper TimestampType column.
     * INTEGER division is essential: `/` on longs promotes to double, and
     * 2024-era nano epochs (~1.7e18) exceed 2^53, so double division puts
     * ~1.6% of µs-aligned timestamps off by 1 µs vs engines that read the
@@ -50,23 +93,10 @@ object Tables {
 
   def events(spark: SparkSession, dir: String): DataFrame =
     nanosLongToTs(table(spark, dir, "events"))
-  /** The `documents` fixture's schema, as its parquet footers declare it
-    * (pinned against the footers at three scale factors by a test). */
-  val DocumentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  /** Read with [[DocumentsSchema]] instead of inferring it: inference reads
-    * the parquet footers in a Spark job of its own (35–50 ms on 4 cores),
-    * once per query that scans the table.
-    * INVARIANT: doc_id is unique (the fixture generator emits it as a
+  /** INVARIANT: doc_id is unique (the fixture generator emits it as a
     * sequence). pipeline_curate's doc_id-only group key relies on this —
     * duplicate doc_ids would merge token stats across distinct texts. */
-  def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet")
+  def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
   /** Fan a narrow scan out to every core (optimization guide §2.2/§2.7 —

@@ -50,7 +50,7 @@ object EventStreams {
     // parquet file, so stream the dir filtered to it. The nanos ts arrives
     // as long (nanosAsLong) — convert like Tables.events does.
     Tables.nanosLongToTs(spark.readStream
-      .schema(Tables.table(spark, dir, "events").schema)
+      .schema(Tables.Schemas("events"))
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir))
   }

@@ -1,15 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.functions._
+import graft.lda.LdaPipeline
 import graft.operators.TextOps
 import graft.sources.Tables
 
@@ -47,9 +49,17 @@ class NativeParitySpec extends SparkSpec {
   }
 
   /** (inside whole-stage codegen?, "Ops.fn") for every kernel call in an
-    * executed plan, cached plans included. */
-  private def kernelCalls(p: SparkPlan, inCodegen: Boolean = false): Seq[(Boolean, String)] = {
-    val here = p.expressions.flatMap(_.collect {
+    * executed plan, each cached plan once. A file scan's data filters are
+    * left out: the scan only lists them, and the Filter above it evaluates
+    * them. */
+  private def kernelCalls(p: SparkPlan, inCodegen: Boolean = false,
+      seen: java.util.Set[SparkPlan] = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])): Seq[(Boolean, String)] = {
+    val exprs = p match {
+      case _: FileSourceScanExec => Nil
+      case _ => p.expressions
+    }
+    val here = exprs.flatMap(_.collect {
       case s: StaticInvoke if s.staticObject.getName.startsWith("graft.functions.") =>
         (inCodegen, s"${s.staticObject.getSimpleName.stripSuffix("$")}.${s.functionName}")
     })
@@ -58,21 +68,36 @@ class NativeParitySpec extends SparkSpec {
       case q: QueryStageExec => Seq(q.plan -> false)
       case w: WholeStageCodegenExec => Seq(w.child -> true)
       case i: InputAdapter => Seq(i.child -> false)
-      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan -> false)
+      case m: InMemoryTableScanExec =>
+        if (seen.add(m.relation.cachedPlan)) Seq(m.relation.cachedPlan -> false) else Nil
       case _ => p.children.map(_ -> inCodegen)
     }
-    here ++ below.flatMap { case (c, in) => kernelCalls(c, in) }
+    here ++ below.flatMap { case (c, in) => kernelCalls(c, in, seen) }
+  }
+
+  /** Every interpreted-only expression in an executed plan, cached plans
+    * included. */
+  private def fallbacks(p: SparkPlan): Seq[String] = {
+    val here = p.expressions.flatMap(_.collect { case f: CodegenFallback => f.prettyName })
+    val below = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }
+    here ++ below.flatMap(fallbacks)
   }
 
   test("native functions give equal rows under CODEGEN_ONLY and NO_CODEGEN, " +
       "and stay in whole-stage codegen on the query path") {
     import spark.implicits._
     // sf0.001 documents plus edge rows: empty text (-> empty token array),
-    // a NULL text (-> NULL arrays), an emoji-only token and odd spacing.
+    // a NULL text (-> NULL arrays), an emoji-only token, odd spacing and
+    // stopwords only.
     val edges = Seq[(Long, String)]((-1L, ""), (-2L, null), (-3L, "😀 only"),
-      (-4L, "  a  b\tc "))
+      (-4L, "  a  b\tc "), (-5L, "The AND, of!"))
       .toDF("doc_id", "text")
-    val w = filter(split(Cleaning.cleanText(col("text")), " "), _ =!= "")
+    val w = Words(Cleaning.cleanText(col("text")))
     val docs = Tables.documents(spark, sf0001).select(col("doc_id"), col("text"))
       .union(edges)
       .select(col("doc_id"), col("text"), w.as("w"))
@@ -84,7 +109,10 @@ class NativeParitySpec extends SparkSpec {
     def text = docs.select(col("doc_id"),
       Cleaning.removeEmojiTokens(col("text")), Cleaning.urlUserCovidStrip(col("text")),
       Cleaning.alphaSpaceLower(col("text")), Cleaning.cleanText(col("text")),
-      TokenCounts(col("text")), FrameSample(col("text")))
+      TokenCounts(col("text")), FrameSample(col("text")),
+      Words(Cleaning.cleanText(col("text"))),
+      Words(Cleaning.cleanText(col("text")), TextOps.StopWords),
+      Words(Cleaning.cleanText(col("text")), LdaPipeline.StopWords))
     def arrays = docs.select(col("doc_id"),
       ShingleSet(col("w")), MinHashSig(col("sh")), SimHash16(col("w")),
       LenHist(col("w")), TokenStats(col("w"), TextOps.StopWords),
@@ -118,24 +146,46 @@ class NativeParitySpec extends SparkSpec {
     assert((1 until nullRow.length).forall(nullRow.isNullAt), nullRow)
     val emptyRow = arrays.filter(col("doc_id") === -1L).collect().head
     assert(emptyRow.getSeq[String](1).isEmpty && emptyRow.getLong(3) == 0L)
+    def words(id: Long): Seq[Seq[String]] = {
+      val r = text.filter(col("doc_id") === id).collect().head
+      (7 to 9).map(i => if (r.isNullAt(i)) null else r.getSeq[String](i))
+    }
+    assert(words(-1L) == Seq(Nil, Nil, Nil))
+    assert(words(-2L) == Seq(null, null, null))
+    assert(words(-4L) == Seq(Seq("a", "b", "c"), Seq("b", "c"), Nil))
+    assert(words(-5L) == Seq(Seq("the", "and", "of"), Nil, Nil))
     docs.unpersist()
     emb.unpersist()
 
-    // On the query path the natives stay where whole-stage codegen put them
-    // before: a node holding a lambda (`filter(split(…), t -> …)`, a
-    // CodegenFallback) is left out of codegen whole, so dedup_minhash_lsh's
-    // clean+shingle projection is interpreted and its signature and rerank
-    // calls are generated.
+    // On the query path the natives stay inside whole-stage codegen. A
+    // node holding a lambda (`filter(split(…), t -> …)`, `array_sort`: a
+    // CodegenFallback) is left out of codegen whole, and each native in it
+    // is then reached by reflection per row; the dedup queries hold none.
+    val clean = Set("EmojiOps.strip", "NoiseOps.strip", "AlphaOps.fold")
     Seq(
-      "dedup_minhash_lsh" -> Set("MinHashOps.sig", "ShingleOps.sortedIntersectSize"),
-      "dedup_jaccard_pairs" -> Set("TokenOps.jaccardPrefix", "ShingleOps.sortedIntersectSize"),
-      "text_quality" -> Set("EmojiOps.strip", "NoiseOps.strip", "AlphaOps.fold",
-        "RowStatOps.tokenStats")).foreach { case (q, generated) =>
+      "dedup_exact" -> clean,
+      "dedup_stats" -> (clean + "TokenOps.words"),
+      "dedup_jaccard_pairs" -> (clean ++ Set("TokenOps.words", "TokenOps.jaccardPrefix",
+        "ShingleOps.sortedIntersectSize")),
+      "dedup_shingle_jaccard" -> (clean ++ Set("TokenOps.words", "ShingleOps.shingles")),
+      "dedup_simhash" -> (clean ++ Set("TokenOps.words", "RowStatOps.simhash16")),
+      "dedup_minhash_lsh" -> (clean ++ Set("TokenOps.words", "ShingleOps.shingles",
+        "MinHashOps.sig", "ShingleOps.sortedIntersectSize")),
+      "text_quality" -> (clean + "RowStatOps.tokenStats")).foreach { case (q, generated) =>
       val df = Catalog.byName(q).run(spark, sf0001)
       assert(df.collect().nonEmpty, q)
-      val calls = kernelCalls(df.queryExecution.executedPlan)
-      assert(calls.collect { case (true, k) => k }.toSet == generated, q)
-      assert(calls.forall { case (in, k) => in || !generated(k) }, q)
+      val plan = df.queryExecution.executedPlan
+      val calls = kernelCalls(plan)
+      assert(calls.collect { case (true, k) => k }.toSet == generated, s"$q: $calls")
+      assert(calls.forall { case (in, k) => in || !generated(k) }, s"$q: $calls")
+      if (q.startsWith("dedup_")) {
+        assert(calls.forall(_._1), s"$q: $calls")
+        assert(fallbacks(plan).isEmpty, s"$q: ${fallbacks(plan)}")
+      }
+      // The near-dup pair queries clean each doc once, after the fan-out:
+      // no filter on the words is pushed into the scan's single task.
+      if (Set("dedup_jaccard_pairs", "dedup_shingle_jaccard", "dedup_minhash_lsh")(q))
+        assert(calls.count(_._2 == "AlphaOps.fold") == 1, s"$q: $calls")
       spark.sharedState.cacheManager.clearCache()
     }
   }
