@@ -10,9 +10,9 @@ object Run {
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The engine's session: master local[cpus] (SPARK_MASTER when set),
-    * `cpus` shuffle partitions, UTC session time, parquet TIMESTAMP(NANOS)
-    * read as longs (see `Tables.nanosLongToTs`), no UI. Returns the JVM's
-    * active session if one exists. */
+    * `cpus` shuffle partitions, UTC session time (which `Tables.ntzToTs`
+    * relies on), parquet TIMESTAMP(NANOS) read as longs, no UI. Returns the
+    * JVM's active session if one exists. */
   def session(cpus: Int = Run.cpus): SparkSession = SparkSession.builder()
     .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
     .config("spark.sql.shuffle.partitions", cpus)

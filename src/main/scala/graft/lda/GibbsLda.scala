@@ -164,14 +164,15 @@ object GibbsLda {
     }
   }
 
-  /** Fits `documents`. Its docs without tokens are not filtered out ahead:
-    * they count no word and encode to nothing, and the encoding drops every
-    * doc without a vocabulary word, so the fit equals one on
-    * [[LdaPipeline.preprocess]]. That filter would clean each row twice. */
+  /** Fits `documents`. Docs with NULL text (NULL tokens) are dropped in the
+    * scan. Docs with empty tokens are not filtered out ahead: they count no
+    * word and encode to nothing, and the encoding drops every doc without a
+    * vocabulary word, so the fit equals one on [[LdaPipeline.preprocess]],
+    * whose `size(tokens) > 0` filter would clean each row twice. */
   def fit(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
       maxIter: Int = 10, seed: Long = 42L): GibbsModel =
-    fitCorpus(LdaPipeline.tokenize(Tables.documents(spark, dir)), vocabSize,
-      numTopics, maxIter, seed)
+    fitCorpus(LdaPipeline.tokenize(Tables.documents(spark, dir)
+      .filter(col("text").isNotNull)), vocabSize, numTopics, maxIter, seed)
 
   /** [[fit]] on an already preprocessed corpus (`doc_id`, `tokens`), in
     * whatever partitioning it arrives — the seam the partition-invariance

@@ -66,33 +66,15 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
-  /** An events `ts` read as long nanoseconds (parquet TIMESTAMP(NANOS)
-    * under spark.sql.legacy.parquet.nanosAsLong, which `graft.Run.session`
-    * sets) or as TIMESTAMP_NTZ (the fixtures' microseconds) is converted to
-    * a proper TimestampType column.
-    * INTEGER division is essential: `/` on longs promotes to double, and
-    * 2024-era nano epochs (~1.7e18) exceed 2^53, so double division puts
-    * ~1.6% of µs-aligned timestamps off by 1 µs vs engines that read the
-    * nanos exactly. */
-  def nanosLongToTs(df: DataFrame): DataFrame =
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // Spark 4.1.2 reads parquet TIMESTAMP(NANOS) as TIMESTAMP_NTZ and no
-        // longer honors nanosAsLong; with the session timezone pinned to UTC
-        // the NTZ wall clock IS the UTC instant, so this cast reproduces the
-        // long→timestamp_micros path bit-for-bit (fixture is µs-aligned).
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts")
-            .cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
-    }
+  /** Converts an events `ts`, which its pinned schema reads as TIMESTAMP_NTZ
+    * (the fixture's microseconds not adjusted to UTC), to TimestampType. With
+    * the session timezone pinned to UTC the NTZ wall clock IS the UTC
+    * instant, so the cast is exact. */
+  def ntzToTs(df: DataFrame): DataFrame =
+    df.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast(TimestampType))
 
   def events(spark: SparkSession, dir: String): DataFrame =
-    nanosLongToTs(table(spark, dir, "events"))
+    ntzToTs(table(spark, dir, "events"))
   /** INVARIANT: doc_id is unique (the fixture generator emits it as a
     * sequence). pipeline_curate's doc_id-only group key relies on this —
     * duplicate doc_ids would merge token stats across distinct texts. */

@@ -47,9 +47,9 @@ object EventStreams {
     * shape for replaying landed data as a stream. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     // The streaming file source lists a DIRECTORY; the fixture is a single
-    // parquet file, so stream the dir filtered to it. The nanos ts arrives
-    // as long (nanosAsLong) — convert like Tables.events does.
-    Tables.nanosLongToTs(spark.readStream
+    // parquet file, so stream the dir filtered to it. The pinned ts is
+    // TIMESTAMP_NTZ — convert like Tables.events does.
+    Tables.ntzToTs(spark.readStream
       .schema(Tables.Schemas("events"))
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir))

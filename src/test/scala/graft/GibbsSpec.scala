@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.Row
+
 import graft.lda.{GibbsLda, LdaPipeline}
 import graft.sources.Tables
 
@@ -61,5 +66,25 @@ class GibbsSpec extends SparkSpec {
     assert(phi1 == phi4)
     assert(nz1 == nz4)
     assert(docs1 == docs4)
+  }
+
+  test("a document with NULL text is skipped: the fit equals the one without it") {
+    val dir = Files.createTempDirectory("graft-gibbs-null")
+    try {
+      val docs = Tables.documents(spark, sf0001)
+      val nullDoc = spark.createDataFrame(
+        java.util.List.of(Row(Long.MaxValue, null, "en", "web", 0L)),
+        Tables.DocumentsSchema)
+      docs.union(nullDoc).coalesce(1).write.parquet(s"$dir/documents.parquet")
+      def fitIn(d: String) = {
+        val m = GibbsLda.fit(spark, d, vocabSize = 100, numTopics = 3,
+          maxIter = 2, seed = 7L)
+        val topics = m.docs.collect().sortBy(_.docId)
+          .map(d => (d.docId, d.words.toSeq, d.topics.toSeq)).toSeq
+        m.docs.unpersist()
+        (m.phi.map(_.toSeq).toSeq, m.nz.toSeq, m.vocab.toSeq, topics)
+      }
+      assert(fitIn(dir.toString) == fitIn(sf0001))
+    } finally FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -3,9 +3,9 @@
 per-object overheads and the hottest graft frames.
 
     jfr print --json --stack-depth 256 --events jdk.ExecutionSample rec.jfr > rec.json
-    python3 tools/jfr_hot.py rec.json [--top 15]
+    python3 tools/jfr_hot.py rec.json
 
-Reads the JSON that `jfr print --json` writes (a path, or `-` for stdin).
+Reads the JSON file that `jfr print --json` writes.
 Samples are split into the driver's `main` thread and the executor task
 threads ("Executor task launch worker ..."); other threads are counted
 only in the header. For each group it prints:
@@ -18,7 +18,7 @@ only in the header. For each group it prints:
       SimpleHigherOrderFunction  interpreted array lambdas (filter, transform)
       StaticInvoke.eval  reflective calls of native kernels in interpreted code
       JavaSerialization  java.io.ObjectOutputStream / ObjectInputStream
-  - the leaf-most `graft` frame of each sample, top N by count.
+  - the leaf-most `graft` frame of each sample, the TOP most frequent.
 
 A marker low in a stack is seen only if the stack reaches it: record with
 -XX:FlightRecorderOptions:stackdepth=256, and print with --stack-depth 256
@@ -29,8 +29,8 @@ ClosureCleaner samples).
 import argparse
 import collections
 import json
-import sys
 
+TOP = 15
 MARKERS = (
     ("SizeEstimator", lambda cls, m: cls.startswith("org/apache/spark/util/SizeEstimator")),
     ("ClosureCleaner", lambda cls, m: cls.startswith("org/apache/spark/util/")
@@ -104,7 +104,7 @@ def summarize(events):
     return out, other
 
 
-def render(summary, other, top):
+def render(summary, other):
     lines = []
     total = sum(s["samples"] for s in summary.values()) + other
     lines.append("samples: %d (main %d, executor %d, other threads %d)" % (
@@ -118,23 +118,19 @@ def render(summary, other, top):
             c = s["markers"][name]
             lines.append("  %-26s %6d  %5.1f%%" % (name, c, 100.0 * c / n if n else 0.0))
         lines.append("  top graft frames:")
-        for f, c in s["graft"].most_common(top):
+        for f, c in s["graft"].most_common(TOP):
             lines.append("  %6d  %5.1f%%  %s" % (c, 100.0 * c / n if n else 0.0, f))
     return "\n".join(lines)
 
 
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("json", help="output of jfr print --json, or - for stdin")
-    ap.add_argument("--top", type=int, default=15)
+    ap.add_argument("json", help="output of jfr print --json")
     a = ap.parse_args(argv)
-    if a.json == "-":
-        doc = json.load(sys.stdin)
-    else:
-        with open(a.json) as f:
-            doc = json.load(f)
+    with open(a.json) as f:
+        doc = json.load(f)
     summary, other = summarize(doc["recording"]["events"])
-    print(render(summary, other, a.top))
+    print(render(summary, other))
 
 
 if __name__ == "__main__":

@@ -77,7 +77,7 @@ class JfrHotTest(unittest.TestCase):
                 json.dump({"recording": {"events": EVENTS}}, f)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                jfr_hot.main([path, "--top", "1"])
+                jfr_hot.main([path])
         out = buf.getvalue().splitlines()
         self.assertEqual(out[0], "samples: 9 (main 2, executor 6, other threads 1)")
         self.assertIn("executor threads: 6 samples", out)
@@ -85,8 +85,19 @@ class JfrHotTest(unittest.TestCase):
         self.assertIn("  %-26s %6d  %5.1f%%" % ("ClosureCleaner", 1, 50.0), out)
         self.assertIn("  %6d  %5.1f%%  %s" % (2, 200.0 / 6, "graft.functions.TokenOps$.words"),
                       out)
-        # --top 1: one graft frame per group
-        self.assertNotIn("graft.lda.LdaPipeline$.preprocess", buf.getvalue())
+        self.assertIn("  %6d  %5.1f%%  %s" % (1, 100.0 / 6, "graft.lda.LdaPipeline$.preprocess"),
+                      out)
+
+    def test_top_cutoff(self):
+        # TOP + 1 distinct graft frames, frame i sampled i + 1 times:
+        # only the TOP most frequent are printed, the once-sampled f0 is cut
+        events = [sample(EXEC, ("graft/Hot", "f%d" % i))
+                  for i in range(jfr_hot.TOP + 1) for _ in range(i + 1)]
+        out = jfr_hot.render(*jfr_hot.summarize(events))
+        printed = [l for l in out.splitlines() if "graft.Hot." in l]
+        self.assertEqual(len(printed), jfr_hot.TOP)
+        self.assertNotIn("graft.Hot.f0\n", out + "\n")
+        self.assertIn("graft.Hot.f1", out)
 
 
 if __name__ == "__main__":
