@@ -8,7 +8,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The SURVEY §7.3 end-to-end LDA slice: documents → clean → tokenize →
-    * stopwords → CountVectorizer(V) → LDA(T=5) → top-20 words per topic.
+    * stopwords → top-V vocabulary → LDA(T=5) → top-20 words per topic.
     */
   def entry(spark: SparkSession): DataFrame =
     graft.lda.LdaPipeline.topicReport(spark, "/root/testdata/sf0.001",

@@ -54,29 +54,19 @@ object GibbsLda {
       vocab: Array[String])
 
   /** Deterministic doc-term encoding of a preprocessed corpus (`doc_id`,
-    * `tokens`): top-V vocab (count desc, word asc) → per-doc position list
+    * `tokens`): the top-V vocabulary shared with the MLlib fit
+    * ([[LdaPipeline.vocabulary]], count desc, word asc) → per-doc position list
     * ordered by token position (doc identity kept throughout, SURVEY
     * §7.5.3). Also returns the persisted token RDD the encoding reads; the
     * caller unpersists it once the encoded DocStates are materialized. */
   private def encode(corpus: DataFrame, vocabSize: Int):
       (RDD[(Long, Array[Int])], Array[String], RDD[(Long, Array[String])]) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     // Persisted: the tokens feed BOTH the vocabulary count and the encoding
     // — without the cache the clean+tokenize+stopword chain runs twice over
     // the corpus (guide §2.4 / §5).
-    val docs = corpus.select(col("doc_id"), col("tokens"))
-      .as[(Long, Array[String])].rdd
-      .persist(Cached)
-    // One job. Tokens are lowercase ASCII (Cleaning.cleanText), so String
-    // order is the byte order a SQL `ORDER BY word` uses.
-    val vocab = docs.flatMap(_._2.iterator.map(w => (w, 1L)))
-      .reduceByKey(_ + _)
-      .takeOrdered(vocabSize)(Ordering.by[(String, Long), (Long, String)] {
-        case (w, c) => (-c, w)
-      })
-      .map(_._1)
-    val bc = spark.sparkContext.broadcast(vocab.zipWithIndex.toMap)
+    val docs = LdaPipeline.tokenPairs(corpus).persist(Cached)
+    val vocab = LdaPipeline.vocabulary(docs, vocabSize)
+    val bc = docs.sparkContext.broadcast(vocab.zipWithIndex.toMap)
     val encoded = docs.map { case (id, toks) =>
       (id, toks.iterator.flatMap(bc.value.get).toArray)
     }.filter(_._2.nonEmpty)

@@ -247,10 +247,14 @@ object Dedup {
         // co-located in the row's array. Voting ±1 per occurrence equals
         // Σ cnt·(±1) over distinct words exactly, so the fingerprint is
         // bit-identical (oracle-checked) and both Exchanges vanish. The
-        // size filter replicates explode's drop of token-less docs.
-        val words = Words(cleanCol)
+        // size filter replicates explode's drop of token-less docs; it sits
+        // above a lazy cache, as in dedup_minhash_lsh, since below it
+        // Catalyst would push it under the fan-out exchange and clean every
+        // doc twice. SimHash16 of no words is 0, a legal fingerprint, so the
+        // filter cannot move onto the output instead.
         docsSrc(s, dir)
-          .select(col("doc_id"), words.as("w"))
+          .select(col("doc_id"), Words(cleanCol).as("w"))
+          .persist()
           .filter(size(col("w")) > 0)
           .select(col("doc_id"),
             graft.functions.SimHash16(col("w")).as("simhash16"))

@@ -1,6 +1,15 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.ml.clustering.LDA
+import org.apache.spark.ml.feature.CountVectorizer
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+
 import graft.lda.LdaPipeline
+import graft.sources.Tables
 
 /** Statistical invariants for the LDA slice (SURVEY §5.2.4 — golden match is
   * impossible by construction, so assert structure + invariants). */
@@ -36,5 +45,65 @@ class LdaSpec extends SparkSpec {
     val out = LdaPipeline.preprocess(df).select("doc_id").as[Long].collect()
     // doc 1 is all stopwords → vanishes (the reference's corpus shrink)
     assert(out.toSet == Set(2L))
+  }
+
+  test("with CountVectorizer's vocabulary the fit equals ml.LDA's row for row") {
+    // The reference: the ml pipeline the RDD fit replaced, at lda_topics'
+    // settings. Given its vocabulary (ties in arbitrary order), the RDD fit
+    // must reproduce its topics and weights exactly.
+    val docs = LdaPipeline.corpus(spark, sf0001)
+    val cv = new CountVectorizer().setInputCol("tokens").setOutputCol("features")
+      .setVocabSize(1000).fit(docs)
+    val vocab = cv.vocabulary
+    val reference = new LDA().setK(5).setMaxIter(10).setSeed(42L)
+      .setDocConcentration(1.0 / 5).setTopicConcentration(1.0 / 5)
+      .fit(cv.transform(docs))
+      .describeTopics(20)
+      .select(col("topic"), col("termIndices"),
+        array_join(transform(col("termWeights"), w => round(w, 6).cast("string")), " "))
+      .collect().toSeq
+      .map(r => (r.getInt(0), r.getSeq[Int](1).map(vocab).mkString(" "), r.getString(2)))
+    val rows = LdaPipeline.topics(LdaPipeline.tokenPairs(docs), vocab, numTopics = 5,
+      maxIter = 10, topWords = 20, seed = 42L)
+    spark.sharedState.cacheManager.clearCache()
+    assert(rows.size == 5)
+    assert(rows == reference)
+  }
+
+  test("docTopics: rows come out in doc_id order, one per doc with tokens") {
+    val rows = LdaPipeline.docTopics(spark, sf0001,
+      vocabSize = 200, numTopics = 3, maxIter = 3).collect()
+    val ids = rows.map(_.getLong(0)).toSeq
+    val withTokens = LdaPipeline.preprocess(Tables.documents(spark, sf0001)).count()
+    spark.sharedState.cacheManager.clearCache()
+    assert(ids.size == withTokens)
+    assert(ids == ids.sorted && ids.distinct == ids)
+  }
+
+  test("two fits in one session give identical rows") {
+    Seq("lda_topics", "lda_doc_topics").foreach { q =>
+      def rows() = {
+        val r = Catalog.byName(q).run(spark, sf0001).collect().toSeq
+        spark.sharedState.cacheManager.clearCache()
+        r
+      }
+      assert(rows() == rows(), q)
+    }
+  }
+
+  test("docTopics: a doc with tokens but no vocabulary word still gets a row") {
+    val dir = Files.createTempDirectory("graft-lda-oov")
+    try {
+      val oov = spark.createDataFrame(
+        java.util.List.of(Row(Long.MaxValue, "zzyzx qwxyz", "en", "web", 11L)),
+        Tables.DocumentsSchema)
+      Tables.documents(spark, sf0001).union(oov).coalesce(1)
+        .write.parquet(s"$dir/documents.parquet")
+      val rows = LdaPipeline.docTopics(spark, dir.toString,
+        vocabSize = 10, numTopics = 3, maxIter = 3).collect()
+      spark.sharedState.cacheManager.clearCache()
+      // a zero count vector: θ is all zeros, so topic 0 of weight 0
+      assert(rows.last == Row(Long.MaxValue, 0, 0.0))
+    } finally FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -182,12 +182,19 @@ class NativeParitySpec extends SparkSpec {
         assert(calls.forall(_._1), s"$q: $calls")
         assert(fallbacks(plan).isEmpty, s"$q: ${fallbacks(plan)}")
       }
-      // The near-dup pair queries clean each doc once, after the fan-out:
-      // no filter on the words is pushed into the scan's single task.
-      if (Set("dedup_jaccard_pairs", "dedup_shingle_jaccard", "dedup_minhash_lsh")(q))
+      // The queries that filter on the words clean each doc once, after the
+      // fan-out: no such filter is pushed into the scan's single task.
+      if (Set("dedup_jaccard_pairs", "dedup_shingle_jaccard", "dedup_simhash",
+          "dedup_minhash_lsh")(q))
         assert(calls.count(_._2 == "AlphaOps.fold") == 1, s"$q: $calls")
       spark.sharedState.cacheManager.clearCache()
     }
+    // So does the LDA preprocess, which drops the docs without tokens.
+    val pre = LdaPipeline.preprocess(Tables.documents(spark, sf0001))
+    assert(pre.collect().nonEmpty)
+    val preCalls = kernelCalls(pre.queryExecution.executedPlan)
+    assert(preCalls.count(_._2 == "AlphaOps.fold") == 1, s"preprocess: $preCalls")
+    spark.sharedState.cacheManager.clearCache()
   }
 
   test("columns built from equal constants stay semanticEquals") {
