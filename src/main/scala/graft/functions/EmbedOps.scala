@@ -51,7 +51,7 @@ object EmbedOps {
   }
 
   /** 8-bit sign-LSH bucket of a 64-dim quantized vector — the native form
-    * of Similarity.bucketExpr. The built-in formulation runs 8 planes ×
+    * of OperatorsSpec.bucketExpr. The built-in formulation runs 8 planes ×
     * `aggregate(transform(sequence(0,63), ...))` — 512 interpreted lambda
     * invocations per row, the heaviest per-row compute on the sim path.
     * Semantics replicated exactly on every input the query path produces

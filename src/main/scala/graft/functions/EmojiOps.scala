@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `graft.functions.EmojiOps.strip(...)` is valid Java). */
 object EmojiOps {
 
-  /** Codepoint ranges mirrored from Cleaning.EmojiClass. */
+  /** Codepoint ranges mirrored from CleaningSpec.EmojiClass. */
   def isEmoji(cp: Int): Boolean =
     (cp >= 0x1F300 && cp <= 0x1FAFF) || (cp >= 0x2600 && cp <= 0x27BF) ||
     (cp >= 0x1F000 && cp <= 0x1F02F) || (cp >= 0x1F0A0 && cp <= 0x1F0FF) ||
@@ -20,7 +20,7 @@ object EmojiOps {
 
   /** Semantics: exactly the reference's remove_emoji
     * (ExtractTwitterData.py:122-125), and bit-equal to the
-    * higher-order-function form `Cleaning.removeEmojiTokensHof`: split on
+    * higher-order-function form `CleaningSpec.removeEmojiTokensHof`: split on
     * whitespace runs, drop every token containing ANY emoji codepoint,
     * join the survivors (including empty edge tokens, as split keeps them)
     * with a single space.

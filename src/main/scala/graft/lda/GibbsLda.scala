@@ -1,5 +1,6 @@
 package graft.lda
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,9 +25,10 @@ import graft.sources.Tables
   * executors in a persisted RDD, serialized ([[Cached]]). Each sweep is
   * ONE Spark job: a mapPartitions that samples against a broadcast Φ copy
   * (AD-LDA) and writes the new states to the cache, fused with
-  * [[countPhi]]'s per-task dense T×V count and its treeReduce, which
-  * rebuild the exact global counts. The dense per-task array is the same
-  * size as the broadcast Φ every task already holds. Driver/broadcast
+  * [[countPhi]]'s per-task dense T×V count; the driver sums the counts in
+  * partition order, which rebuilds the exact global counts. The dense
+  * per-task array is the same size as the broadcast Φ every task already
+  * holds. Driver/broadcast
   * state is Φ (T×V longs) + n_z (T longs) — bounded by MODEL size, never
   * by corpus size. No O(N·V) one-hot densification anywhere (SURVEY
   * §4.2.1).
@@ -74,11 +76,13 @@ object GibbsLda {
   }
 
   /** Exact topic-word counts: each task counts its docs into a dense T×V
-    * array, and a treeReduce sums them — one job, the call site the
-    * benchmark attributes Gibbs sweeps to. */
+    * array, and the driver sums the arrays in partition order — one plain
+    * `runJob`, the call site the benchmark attributes Gibbs sweeps to. The
+    * `(TaskContext, Iterator)` form is the one `runJob` does not wrap in a
+    * second closure to clean. */
   private[graft] def countPhi(docs: RDD[DocState], numTopics: Int, vocabSize: Int):
       (Array[Array[Long]], Array[Long]) = {
-    val flat = docs.mapPartitions { it =>
+    val flat = docs.sparkContext.runJob(docs, (_: TaskContext, it: Iterator[DocState]) => {
       val c = new Array[Long](numTopics * vocabSize)
       it.foreach { d =>
         var j = 0
@@ -87,8 +91,8 @@ object GibbsLda {
           j += 1
         }
       }
-      Iterator.single(c)
-    }.treeReduce { (a, b) =>
+      c
+    }).reduce { (a, b) =>
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }
       a

@@ -3,7 +3,7 @@ package graft.lda
 import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.ml.feature.StopWordsRemover
-import org.apache.spark.mllib.clustering.{LDA, LocalLDAModel, OnlineLDAOptimizer}
+import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LDA, LocalLDAModel, OnlineLDAOptimizer}
 import org.apache.spark.mllib.linalg.{Vector, Vectors}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,14 +26,15 @@ import graft.functions.{Cleaning, Words}
   * fits θ/Φ on executors — no whole-corpus collect.
   *
   * The fit takes an RDD of `(doc_id, count vector)`, not a DataFrame through
-  * `ml.clustering.LDA`. The optimizer launches two jobs per iteration, so
-  * per-job driver work is half of the fit's time. The ml wrapper adds
-  * schema checks, instrumentation and a conversion of the DataFrame to an
-  * RDD keyed by `monotonically_increasing_id`, and every fit task it ships
-  * carries the whole SQL plan as lineage. Here the training RDD is
-  * local-checkpointed: its first job caches it and cuts the lineage, so
-  * each later fit task is short. Given the same vocabulary, the fit equals
-  * `ml.clustering.LDA`'s row for row (a test checks it).
+  * `ml.clustering.LDA`, and runs MLlib's online optimizer through
+  * [[org.apache.spark.mllib.clustering.GraftLDAOptimizer]]: one Spark job
+  * per iteration, where `LDA.run` launches two (a probe of the sampled
+  * minibatch and its aggregate) plus two to initialize. Per-job driver work
+  * was half of the fit's time. The training RDD is local-checkpointed: the
+  * first iteration's job caches it and cuts the lineage, so each later fit
+  * task is short. On one partition the model equals `LDA.run`'s bit for
+  * bit, and given the same vocabulary the fit equals `ml.clustering.LDA`'s
+  * row for row (tests check both).
   *
   * Scale posture (100 TB): every stage is a narrow map or a partial+final
   * aggregate; the only driver-side state is the V-entry vocabulary array
@@ -92,7 +93,7 @@ object LdaPipeline {
     * `reduceByKey` + `takeOrdered` job. Tokens are lowercase ASCII
     * (Cleaning.cleanText), so String order is the byte order a SQL
     * `ORDER BY word` uses. Both LDA fits and [[GibbsLda]] use it. */
-  private[lda] def vocabulary(docs: RDD[(Long, Array[String])], vocabSize: Int): Array[String] =
+  private[graft] def vocabulary(docs: RDD[(Long, Array[String])], vocabSize: Int): Array[String] =
     docs.flatMap(_._2.iterator.map(w => (w, 1L)))
       .reduceByKey(_ + _)
       .takeOrdered(vocabSize)(Ordering.by[(String, Long), (Long, String)] {
@@ -103,7 +104,7 @@ object LdaPipeline {
   /** Each doc as its counts of the `vocab` words, indices ascending. A doc
     * with none of the words is a zero vector: it stays in the corpus, as
     * `CountVectorizer` kept it. */
-  private def vectors(docs: RDD[(Long, Array[String])], vocab: Array[String]):
+  private[graft] def vectors(docs: RDD[(Long, Array[String])], vocab: Array[String]):
       RDD[(Long, Vector)] = {
     val index = docs.sparkContext.broadcast(vocab.zipWithIndex.toMap)
     docs.map { case (id, tokens) =>
@@ -118,18 +119,21 @@ object LdaPipeline {
     * 10; α = β = 1/T, the reference's coupling (py:98-100; SURVEY §7.5.6).
     * The fit keeps its input's partitioning: each minibatch is sampled per
     * partition. */
-  private def fit(docs: RDD[(Long, Array[String])], vocab: Array[String], numTopics: Int,
-      maxIter: Int, seed: Long): LocalLDAModel = {
-    val training = vectors(docs, vocab).localCheckpoint()
-    val model = new LDA()
+  private[graft] def lda(numTopics: Int, maxIter: Int, seed: Long): LDA =
+    new LDA()
       .setK(numTopics).setMaxIterations(maxIter).setSeed(seed)
       .setDocConcentration(1.0 / numTopics).setTopicConcentration(1.0 / numTopics)
       .setCheckpointInterval(10)
       .setOptimizer(new OnlineLDAOptimizer().setTau0(1024).setKappa(0.51)
         .setMiniBatchFraction(0.05).setOptimizeDocConcentration(true))
-      .run(training)
+
+  /** [[lda]] fitted on `docs` over `vocab`. */
+  private def fit(docs: RDD[(Long, Array[String])], vocab: Array[String], numTopics: Int,
+      maxIter: Int, seed: Long): LocalLDAModel = {
+    val training = vectors(docs, vocab).localCheckpoint()
+    val model = GraftLDAOptimizer.run(lda(numTopics, maxIter, seed), training, vocab.length)
     training.unpersist()
-    model.asInstanceOf[LocalLDAModel]
+    model
   }
 
   private def rounded(x: Double, places: Int): Double =

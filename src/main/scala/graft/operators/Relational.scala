@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
@@ -35,28 +35,17 @@ object Relational {
     * DuckDB HALF_EVEN, and double summation is partition-order-dependent. */
   private def dec4(c: Column): Column = c.cast("decimal(18,4)")
 
-  /** Plain lineitem scan. r21 fanned this out (Tables.fanOut) for
-    * rel_pricing_summary / rel_join_revenue on warm in-session A/Bs
-    * (~1.05->0.92 and ~1.65->1.35 s), but the r21 driver data flagged both:
-    * the fanned queries had the two WORST 32-vs-8-core scaling ratios
-    * (0.38 / 0.60) and rel_join_revenue was flat round-over-round. The r22
-    * cold re-A/B (fresh JVM, median of 3 noop reps, sf0.1) reverses the
-    * call: pricing_summary fanned 1.62/2.43 s vs plain 1.25/1.69 (c32) and
-    * 1.62/1.37 vs 1.31/1.41 (c8); join_revenue fanned 1.88/2.32/2.54/1.74
-    * vs plain 2.15/2.35/1.59/1.71 (c32) — plain wins or ties everywhere and
-    * drops one round-robin Exchange from each plan (guide §2.4: remove
-    * shuffles outright; the r21 win was a warm-JVM artifact). The text/dedup
-    * paths keep fanOut: their 8-regex per-row chain genuinely recoups it. */
-  private def liFan(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
   private def asMoney(c: Column): Column = c.cast("double")
 
+  // lineitem is scanned plainly, not through Tables.fanOut: r22's cold A/B
+  // (fresh JVM, sf0.1) found the plain scan as fast or faster for
+  // rel_pricing_summary and rel_join_revenue, and one Exchange shorter.
   val queries: Seq[Q] = Seq(
     // ---- A1/A4: grouped hash aggregation with map-side combine (TPC-H Q1 shape).
     Q(
       "rel_pricing_summary",
       (s, dir) => {
-        liFan(s, dir)
+        Tables.lineitem(s, dir)
           .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
           .groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(
@@ -114,7 +103,7 @@ object Relational {
       (s, dir) => {
         val c = Tables.customer(s, dir)
         val o = Tables.orders(s, dir)
-        val l = liFan(s, dir)
+        val l = Tables.lineitem(s, dir)
         l.join(o, col("l_orderkey") === col("o_orderkey"))
           .join(c, col("o_custkey") === col("c_custkey"))
           .groupBy(col("c_mktsegment"))

@@ -38,23 +38,12 @@ object Similarity {
   /** Deterministic pseudo-random hyperplane weight in {-3..3}:
     * w(i,j) = ((i·2654435761 + j·40503) % 7) − 3. Same integer arithmetic in
     * both engines; i is the 0-based dimension, j the 0-based plane. */
-  private def planeWeightExpr(i: String, j: String): String =
+  private[graft] def planeWeightExpr(i: String, j: String): String =
     s"((($i) * 2654435761 + ($j) * 40503) % 7) - 3"
 
-  /** 8-bit sign-LSH bucket of a quantized vector (exact integer math).
-    * No longer on the query path (EmbedOps.lshBucket is its native form) but
-    * kept as the formulation of record: the equivalence test compares the
-    * native kernel against this, and bucketSql mirrors it. */
-  private[graft] def bucketExpr(qlCol: String): String = {
-    val bits = (0 until 8).map { j =>
-      val dot = s"aggregate(transform(sequence(0, 63), " +
-        s"i -> $qlCol[i] * (${planeWeightExpr("cast(i as bigint)", j.toString)})), " +
-        s"cast(0 as bigint), (a, x) -> a + x)"
-      s"(CASE WHEN $dot > 0 THEN ${1 << j} ELSE 0 END)"
-    }
-    bits.mkString(" + ")
-  }
-
+  /** 8-bit sign-LSH bucket of a quantized vector in DuckDB SQL: the
+    * oracle's mirror of the native EmbedOps.lshBucket (OperatorsSpec pins
+    * the kernel against the same math in Spark built-ins). */
   private def bucketSql(qlCol: String): String = {
     val bits = (0 until 8).map { j =>
       val dot = s"list_sum(list_transform(range(0, 64), " +
@@ -153,7 +142,7 @@ object Similarity {
       "sim_ann_lsh",
       (s, dir) => {
         // bucket is the native EmbedOps.lshBucket kernel (same exact integer
-        // math as bucketExpr above, which remains the oracle's mirror): the
+        // math as bucketSql above, the oracle's mirror): the
         // built-in form ran 8 planes × aggregate(transform(sequence(0,63)))
         // = 512 interpreted lambda calls per row (guide §4.1 — prefer
         // codegen'd expressions in the hot path). With the bucket native,

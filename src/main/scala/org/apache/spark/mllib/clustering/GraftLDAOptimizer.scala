@@ -1,0 +1,161 @@
+package org.apache.spark.mllib.clustering
+
+import java.util.Random
+
+import breeze.linalg.{all, sum, DenseMatrix => BDM, DenseVector => BDV}
+import breeze.numerics.{exp, trigamma}
+import breeze.stats.distributions.{Gamma, RandBasis}
+import org.apache.commons.math3.random.MersenneTwister
+
+import org.apache.spark.TaskContext
+import org.apache.spark.mllib.linalg.{Matrices, Vector, Vectors}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.util.random.PoissonSampler
+
+/** MLlib's online variational-Bayes LDA (`LDA.run` with an
+  * [[OnlineLDAOptimizer]]) in one Spark job per iteration. `LDA.run` runs
+  * `count` and `first` jobs to initialize, then per iteration an `isEmpty`
+  * probe of the sampled minibatch and a `treeAggregate` of its E-step:
+  * 2N + 2 jobs for N iterations, each with its own driver overhead. Here
+  * each iteration is one `runJob` whose task samples its partition, counts
+  * its docs and runs the E-step; the driver sums the partitions' statistics
+  * in partition order, so the merge no longer depends on the order in which
+  * tasks complete.
+  *
+  * It calls MLlib's own `variationalTopicInference` and
+  * `dirichletExpectation` (package-private, hence this package) and repeats
+  * Spark 4.1.2's `initialize`, `next`, `submitMiniBatch`, `updateLambda`,
+  * `updateAlpha` and `getLDAModel` step for step, drawing the same random
+  * stream: on a one-partition input the model equals `LDA.run`'s bit for
+  * bit (LdaSpec checks it).
+  */
+object GraftLDAOptimizer {
+
+  /** The optimizer's fixed gamma shape, and its default of sampling with
+    * replacement (`RDD.sample(true, …)`, a [[PoissonSampler]]): neither has
+    * a getter, and graft never changes them. */
+  private val GammaShape = 100.0
+
+  /** One partition's part of an iteration: its docs, the docs it sampled
+    * (with repeats), the non-empty ones among those, their topic-word
+    * statistics, and the sum of their E[log θ] when α is optimized. */
+  private final case class Part(docs: Long, sampled: Long, nonEmpty: Long,
+      stat: BDM[Double], logphat: Option[BDV[Double]])
+
+  /** `lda.run(docs)` for an `lda` with an [[OnlineLDAOptimizer]], given the
+    * length of `docs`' vectors (`initialize` reads it with a `first` job).
+    * The corpus size comes from the first iteration's job. */
+  def run(lda: LDA, docs: RDD[(Long, Vector)], vocabSize: Int): LocalLDAModel = {
+    val opt = lda.getOptimizer.asInstanceOf[OnlineLDAOptimizer]
+    val k = lda.getK
+    val fraction = opt.getMiniBatchFraction
+    val optimizeAlpha = opt.getOptimizeDocConcentration
+    val docConcentration = lda.getAsymmetricDocConcentration
+    var alpha =
+      if (docConcentration.size == 1) {
+        val a0 = if (docConcentration(0) == -1) 1.0 / k else docConcentration(0)
+        require(a0 >= 0, s"all entries in alpha must be >=0, got: $a0")
+        Vectors.dense(Array.fill(k)(a0))
+      } else {
+        require(docConcentration.size == k && docConcentration.toArray.forall(_ >= 0),
+          s"alpha must have length k and entries >= 0, got: $docConcentration")
+        docConcentration
+      }
+    val eta = if (lda.getTopicConcentration == -1) 1.0 / k else lda.getTopicConcentration
+    val random = new Random(lda.getSeed)
+    val lambda = gammaMatrix(k, vocabSize, random)
+    var iteration = 0
+    var corpusSize = -1L
+    // `next` draws the sample seed and, only for a non-empty minibatch,
+    // `submitMiniBatch` draws the inference seed. The job needs both up
+    // front, so after an empty minibatch the drawn inference seed is the
+    // next draw: the following sample seed, or the model's seed.
+    var drawn: Option[Long] = None
+    def draw(): Long = { val s = drawn.getOrElse(random.nextLong()); drawn = None; s }
+    def rho(): Double = math.pow(opt.getTau0 + iteration, -opt.getKappa)
+
+    if (lda.getMaxIterations == 0 && docs.isEmpty()) emptyCorpus()
+    for (_ <- 1 to lda.getMaxIterations) {
+      // `RDD.sample`'s per-partition seeds, as `PartitionwiseSampledRDD` draws them
+      val sampleRandom = new Random(draw())
+      val sampleSeeds = Array.fill(docs.partitions.length)(sampleRandom.nextLong())
+      val seed = random.nextLong()
+      val expElogbeta = exp(LDAUtils.dirichletExpectation(lambda)).t
+      val alphaB = alpha.asBreeze
+      val parts = docs.sparkContext.runJob(docs,
+        (ctx: TaskContext, it: Iterator[(Long, Vector)]) => {
+          val index = ctx.partitionId()
+          val sampler = new PoissonSampler[(Long, Vector)](fraction)
+          sampler.setSeed(sampleSeeds(index))
+          var n, sampled, nonEmpty = 0L
+          val stat = BDM.zeros[Double](k, vocabSize)
+          val logphat = if (optimizeAlpha) Some(BDV.zeros[Double](k)) else None
+          sampler.sample(it.map { d => n += 1; d }).foreach { case (_, termCounts) =>
+            sampled += 1
+            if (termCounts.numNonzeros > 0) {
+              nonEmpty += 1
+              val (gammad, sstats, ids) = OnlineLDAOptimizer.variationalTopicInference(
+                termCounts, expElogbeta, alphaB, GammaShape, k, seed + index)
+              stat(::, ids) := stat(::, ids) + sstats
+              logphat.foreach(_ += LDAUtils.dirichletExpectation(gammad))
+            }
+          }
+          Part(n, sampled, nonEmpty, stat, logphat)
+        })
+      if (corpusSize < 0) {
+        corpusSize = parts.map(_.docs).sum
+        if (corpusSize == 0) emptyCorpus()
+      }
+      if (parts.map(_.sampled).sum == 0) drawn = Some(seed)
+      else {
+        iteration += 1
+        val nonEmptyDocsN = parts.map(_.nonEmpty).sum
+        if (nonEmptyDocsN > 0) {
+          val statsSum = BDM.zeros[Double](k, vocabSize)
+          val logphatSum = if (optimizeAlpha) Some(BDV.zeros[Double](k)) else None
+          parts.foreach { p =>
+            statsSum += p.stat
+            logphatSum.foreach(_ += p.logphat.get)
+          }
+          // updateLambda, with batchSize = ceil(fraction · corpusSize)
+          val batchSize = (fraction * corpusSize).ceil.toInt
+          val weight = rho()
+          lambda := (1 - weight) * lambda +
+            weight * ((statsSum *:* expElogbeta.t) * (corpusSize.toDouble / batchSize.toDouble) + eta)
+          logphatSum.foreach { logphat =>
+            logphat /= nonEmptyDocsN.toDouble
+            alpha = updatedAlpha(alpha, logphat, nonEmptyDocsN.toDouble, rho())
+          }
+        }
+      }
+    }
+    new LocalLDAModel(Matrices.fromBreeze(lambda).transpose, alpha, eta, GammaShape)
+      .setSeed(draw())
+  }
+
+  /** What `first()` throws on an empty RDD, as `initialize` did. */
+  private def emptyCorpus(): Nothing = throw new UnsupportedOperationException("empty collection")
+
+  /** `getGammaMatrix`: the initial λ, k × V. */
+  private def gammaMatrix(row: Int, col: Int, random: Random): BDM[Double] = {
+    val randBasis = new RandBasis(new MersenneTwister(random.nextLong()))
+    val temp = new Gamma(GammaShape, 1.0 / GammaShape)(randBasis).sample(row * col).toArray
+    new BDM[Double](col, row, temp).t
+  }
+
+  /** `updateAlpha`: one Newton–Raphson step on α from the minibatch's mean
+    * E[log θ], kept only if every entry stays positive. */
+  private def updatedAlpha(current: Vector, logphat: BDV[Double], nonEmptyDocsN: Double,
+      weight: Double): Vector = {
+    val alpha = current.asBreeze.toDenseVector
+    val gradf = nonEmptyDocsN * (-LDAUtils.dirichletExpectation(alpha) + logphat)
+    val c = nonEmptyDocsN * trigamma(sum(alpha))
+    val q = -nonEmptyDocsN * trigamma(alpha)
+    val b = sum(gradf / q) / (1D / c + sum(1D / q))
+    val dalpha = -(gradf - b) / q
+    if (all((weight * dalpha + alpha) >:> 0D)) {
+      alpha :+= weight * dalpha
+      Vectors.dense(alpha.toArray)
+    } else current
+  }
+}

@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import graft.functions.Cleaning
 
 /** F1–F7 semantics (SURVEY §2.3) on handwritten strings, including the
   * order-of-application traps in SURVEY §7.5.5. */
 class CleaningSpec extends SparkSpec {
   import spark.implicits._
+  import CleaningSpec._
 
   private def clean(s: String): String =
     Seq(s).toDF("text").select(Cleaning.cleanText(col("text")).as("c"))
@@ -64,7 +66,7 @@ class CleaningSpec extends SparkSpec {
     val df = cases.toDF("text")
     val out = df.select(
       Cleaning.cleanText(col("text")).as("native"),
-      Cleaning.cleanTextBuiltins(col("text")).as("builtins")).collect()
+      cleanTextBuiltins(col("text")).as("builtins")).collect()
     out.zip(cases).foreach { case (r, in) =>
       assert(r.getString(0) == r.getString(1), s"mismatch for input '$in'")
     }
@@ -87,7 +89,7 @@ class CleaningSpec extends SparkSpec {
     val df = cases.toDF("text")
     val out = df.select(
       Cleaning.removeEmojiTokens(col("text")).as("native"),
-      Cleaning.removeEmojiTokensHof(col("text")).as("hof")).collect()
+      removeEmojiTokensHof(col("text")).as("hof")).collect()
     out.zip(cases).foreach { case (r, in) =>
       assert(r.getString(0) == r.getString(1), s"mismatch for input '$in'")
     }
@@ -111,4 +113,74 @@ class CleaningSpec extends SparkSpec {
     assert(r.getString(4) == "abc xy")
     assert(r.getSeq[Long](5) == Seq(100000L, -2000001L, 0L))
   }
+}
+
+/** The cleaning suite in Spark built-ins only: the formulations of record
+  * that the native kernels of [[graft.functions.Cleaning]] are pinned
+  * against. */
+object CleaningSpec {
+
+  /** F1 — emoji-token removal (py:122-125). The reference drops the WHOLE
+    * whitespace-token if it contains any emoji codepoint, not just the emoji
+    * char. Expressed as a higher-order `filter` over `split` — array lambdas
+    * are codegen-friendly and keep exact drop-the-token semantics. */
+  private val EmojiClass =
+    "[\\x{1F300}-\\x{1FAFF}\\x{2600}-\\x{27BF}\\x{1F000}-\\x{1F02F}" +
+      "\\x{1F0A0}-\\x{1F0FF}\\x{1F100}-\\x{1F1FF}\\x{1F200}-\\x{1F2FF}" +
+      "\\x{2190}-\\x{21FF}\\x{2B00}-\\x{2BFF}\\x{FE00}-\\x{FE0F}\\x{200D}]"
+
+  /** Built-in-only form of EmojiOps.strip. */
+  def removeEmojiTokensHof(c: Column): Column =
+    array_join(
+      filter(split(c, "\\s+"), t => !(t rlike EmojiClass)),
+      " ")
+
+  /** F2 — URL removal: re.sub(r'http\S+','') (py:128-130). */
+  def removeUrls(c: Column): Column = regexp_replace(c, "http\\S+", "")
+
+  /** F3 — @username removal (py:133-135). */
+  def removeUsernames(c: Column): Column = regexp_replace(c, "@\\w+", "")
+
+  /** F4 — case-insensitive whole-word removal of the covid family, in the
+    * reference's list order so 'covid-19' is removed before 'covid' could
+    * match its prefix (py:28,138-141).
+    *
+    * Fused: four sequential passes → ONE ordered alternation. Equivalence
+    * proof (guide §1 first-principles; r22):
+    *  - every match is \b-delimited on both sides, so the chars adjacent to
+    *    a removed span are non-word (or string edges). A splice therefore
+    *    joins non-word to non-word and can neither create a new covid match
+    *    (all start with the word char 'c') nor flip a \b elsewhere (\b
+    *    depends only on immediately adjacent chars) — so the sequential
+    *    passes never enable matches the single pass misses;
+    *  - matches of different family words at DIFFERENT starts cannot
+    *    overlap (no word contains another except at offset 0), so removal
+    *    order across positions is irrelevant;
+    *  - at a SHARED start the only ambiguity is covid-19 vs covid (the
+    *    '-'/'_'/digit after 'covid' make the rest mutually exclusive), and
+    *    both leftmost-first (java.util.regex, RE2 default — so the DuckDB
+    *    mirror Cleaning.CleanTextSql moves identically) and leftmost-longest semantics pick
+    *    covid-19, which is also the sequential pass order. */
+  def removeWords(c: Column, words: Seq[String] =
+      Seq("covid-19", "covid19", "covid_19", "covid")): Column =
+    regexp_replace(c,
+      words.map(java.util.regex.Pattern.quote)
+        .mkString("(?i)\\b(?:", "|", ")\\b"), "")
+
+  /** F5 — keep only ASCII letters and spaces (py:144-146). */
+  def keepAlphaWhitespace(c: Column): Column =
+    regexp_replace(c, "[^A-Za-z ]+", "")
+
+  /** F6 — collapse runs of whitespace to one space (py:149-151). */
+  def collapseWhitespace(c: Column): Column =
+    trim(regexp_replace(c, "\\s+", " "))
+
+  /** F7 — lowercase (py:164, applied last). */
+  def toLower(c: Column): Column = lower(c)
+
+  /** Built-in-only form of Cleaning.cleanText: F1→F7 as the reference
+    * composes them (py:158-164). */
+  def cleanTextBuiltins(c: Column): Column =
+    toLower(collapseWhitespace(keepAlphaWhitespace(
+      removeWords(removeUsernames(removeUrls(removeEmojiTokensHof(c)))))))
 }

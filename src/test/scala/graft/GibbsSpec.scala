@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
+import org.apache.spark.JobLog
 import org.apache.spark.sql.Row
 
 import graft.lda.{GibbsLda, LdaPipeline}
@@ -86,5 +87,14 @@ class GibbsSpec extends SparkSpec {
       }
       assert(fitIn(dir.toString) == fitIn(sf0001))
     } finally FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("a fit launches one vocabulary job and maxIter + 1 countPhi jobs") {
+    val (m, jobs) = JobLog(spark.sparkContext)(
+      GibbsLda.fit(spark, sf0001, vocabSize = 100, numTopics = 3, maxIter = 3))
+    m.docs.unpersist()
+    assert(jobs.count(_.contains("LdaPipeline$.vocabulary")) == 1)
+    assert(jobs.count(_.contains("GibbsLda$.countPhi")) == 4)
+    assert(jobs.size == 5)
   }
 }

@@ -3,8 +3,12 @@ package graft
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
+import org.apache.spark.{HashPartitioner, JobLog}
 import org.apache.spark.ml.clustering.LDA
 import org.apache.spark.ml.feature.CountVectorizer
+import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LocalLDAModel}
+import org.apache.spark.mllib.linalg.{Vector, Vectors}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -105,5 +109,84 @@ class LdaSpec extends SparkSpec {
       // a zero count vector: θ is all zeros, so topic 0 of weight 0
       assert(rows.last == Row(Long.MaxValue, 0, 0.0))
     } finally FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  /** Topics, α, β, and θ of every doc of `docs`, compared with `==` on
+    * doubles. θ also checks the model's seed, which seeds its inference. */
+  private def assertSameModel(model: LocalLDAModel, reference: LocalLDAModel,
+      docs: RDD[(Long, Vector)]): Unit = {
+    def theta(m: LocalLDAModel) =
+      m.topicDistributions(docs).collect().toSeq.map { case (id, t) => (id, t.toArray.toSeq) }
+    assert(model.topicsMatrix.toArray.toSeq == reference.topicsMatrix.toArray.toSeq)
+    assert(model.docConcentration.toArray.toSeq == reference.docConcentration.toArray.toSeq)
+    assert(model.topicConcentration == reference.topicConcentration)
+    assert(theta(model) == theta(reference))
+  }
+
+  /** lda_topics' training vectors at sf0.001 (V 1000), in one cached
+    * partition, and their length. */
+  private def sf0001Training(): (RDD[(Long, Vector)], Int) = {
+    val docs = LdaPipeline.tokenPairs(LdaPipeline.corpus(spark, sf0001))
+    val vocab = LdaPipeline.vocabulary(docs, 1000)
+    val training = LdaPipeline.vectors(docs, vocab).coalesce(1).persist()
+    training.count()
+    spark.sharedState.cacheManager.clearCache()
+    (training, vocab.length)
+  }
+
+  test("on one partition the one-job-per-iteration fit equals LDA.run's bit for bit") {
+    val (training, v) = sf0001Training()
+    val lda = LdaPipeline.lda(numTopics = 5, maxIter = 10, seed = 42L)
+    val model = GraftLDAOptimizer.run(lda, training, v)
+    assertSameModel(model, lda.run(training).asInstanceOf[LocalLDAModel], training)
+    training.unpersist()
+  }
+
+  test("empty and zero-vector minibatches, corpus size and an empty corpus as in LDA.run") {
+    // 24 docs over 6 words, every third a zero vector. At the 0.05 fraction
+    // about 30% of minibatches are empty and about 15% hold only zero
+    // vectors; ceil(0.05 · 24) = 2, where the 16 non-zero docs alone would
+    // give a batch size of 1.
+    val rows = (0 until 24).map { i =>
+      (i.toLong,
+        if (i % 3 == 2) Vectors.sparse(6, Seq.empty)
+        else Vectors.sparse(6, Seq((i % 6, 1.0 + i % 4), ((i + 2) % 6, 2.0))))
+    }
+    val training = spark.sparkContext.parallelize(rows, 1).persist()
+    Seq(1, 2, 3, 5, 8, 13, 21, 34).foreach { n =>
+      val lda = LdaPipeline.lda(numTopics = 3, maxIter = n, seed = 7L)
+      assertSameModel(GraftLDAOptimizer.run(lda, training, 6),
+        lda.run(training).asInstanceOf[LocalLDAModel], training)
+    }
+    training.unpersist()
+    val empty = spark.sparkContext.parallelize(Seq.empty[(Long, Vector)], 1)
+    val lda = LdaPipeline.lda(numTopics = 3, maxIter = 2, seed = 7L)
+    intercept[UnsupportedOperationException](lda.run(empty))
+    intercept[UnsupportedOperationException](GraftLDAOptimizer.run(lda, empty, 6))
+  }
+
+  test("a fit of maxIter N launches N jobs, filed under the optimizer's call site") {
+    val (training, v) = sf0001Training()
+    val lda = LdaPipeline.lda(numTopics = 5, maxIter = 7, seed = 42L)
+    val (_, jobs) = JobLog(spark.sparkContext)(GraftLDAOptimizer.run(lda, training, v))
+    // LDA.run: count, first, and an isEmpty probe + a treeAggregate per iteration
+    val (_, reference) = JobLog(spark.sparkContext)(lda.run(training))
+    training.unpersist()
+    assert(jobs.size == 7)
+    assert(jobs.forall(_.contains("GraftLDAOptimizer$.run")))
+    assert(reference.size == 2 * 7 + 2)
+  }
+
+  test("a fit on 4 hash partitions gives the same lda_topics rows in 10 runs") {
+    // The fit sums the partitions' statistics in partition order, whatever
+    // order their tasks complete in.
+    val docs = LdaPipeline.tokenPairs(LdaPipeline.corpus(spark, sf001))
+      .partitionBy(new HashPartitioner(4)).persist()
+    val vocab = LdaPipeline.vocabulary(docs, 1000)
+    spark.sharedState.cacheManager.clearCache()
+    val runs = (1 to 10).map(_ =>
+      LdaPipeline.topics(docs, vocab, numTopics = 5, maxIter = 10, topWords = 20, seed = 42L))
+    docs.unpersist()
+    assert(runs.distinct.size == 1)
   }
 }

@@ -154,7 +154,7 @@ class OperatorsSpec extends SparkSpec {
     Seq(fixture, edges).foreach { df =>
       val out = df.select(
         graft.functions.QDot.lshBucket(col("ql")).as("native"),
-        expr(graft.operators.Similarity.bucketExpr("ql")).cast("long").as("builtin"))
+        expr(OperatorsSpec.bucketExpr("ql")).cast("long").as("builtin"))
         .collect()
       assert(out.nonEmpty)
       out.foreach(r => assert(!r.isNullAt(0) && r.getLong(0) == r.getLong(1),
@@ -224,5 +224,22 @@ class OperatorsSpec extends SparkSpec {
       val expected = docs(r.getLong(0)).getBytes("UTF-8").map(_ & 0xff).sum.toDouble
       assert(math.abs(r.getDouble(4) - expected) < 0.51)
     }
+  }
+}
+
+object OperatorsSpec {
+
+  /** 8-bit sign-LSH bucket of a quantized vector in Spark built-ins (exact
+    * integer math): the formulation of record of the native
+    * EmbedOps.lshBucket, with the planes of Similarity's oracle mirror. */
+  def bucketExpr(qlCol: String): String = {
+    import graft.operators.Similarity.planeWeightExpr
+    val bits = (0 until 8).map { j =>
+      val dot = s"aggregate(transform(sequence(0, 63), " +
+        s"i -> $qlCol[i] * (${planeWeightExpr("cast(i as bigint)", j.toString)})), " +
+        s"cast(0 as bigint), (a, x) -> a + x)"
+      s"(CASE WHEN $dot > 0 THEN ${1 << j} ELSE 0 END)"
+    }
+    bits.mkString(" + ")
   }
 }

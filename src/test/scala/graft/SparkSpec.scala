@@ -15,6 +15,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val sf0001 = "/root/testdata/sf0.001"
+  /** The sf0.01 fixture, next to sf0.001. */
+  val sf001: String = java.nio.file.Paths.get(sf0001).resolveSibling("sf0.01").toString
 }
 
 object SparkSpec {
