@@ -3,7 +3,6 @@ package graft.lda
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Tables
@@ -18,8 +17,12 @@ import graft.sources.Tables
   * with the current word excluded (the "−1", SURVEY §7.5.7) and α = β = 1/T
   * (§7.5.6). Differences, by design (SURVEY §7.5.1): topic init is j mod T
   * on a DETERMINISTIC doc-term encoding (the reference's is shuffle-order-
-  * dependent), and sampling uses a per-(doc, sweep) seeded RNG, so the whole
-  * fit is reproducible under any partitioning.
+  * dependent), and sampling uses a per-(doc, sweep) seeded RNG: sweep i
+  * (from 1) of doc d draws from `java.util.Random(seed · 1000003 + d · 31 +
+  * i)`, one `nextDouble` u per word slot in order, and takes the first
+  * topic whose running sum of the weights above reaches u times their
+  * total. Each doc sees the sweep-start Φ and n_z plus only its own
+  * updates, so the whole fit is reproducible under any partitioning.
   *
   * Scale posture: doc states (positions + topics) stay partitioned across
   * executors in a persisted RDD, serialized ([[Cached]]). Each sweep is
@@ -28,25 +31,23 @@ import graft.sources.Tables
   * [[countPhi]]'s per-task dense T×V count; the driver sums the counts in
   * partition order, which rebuilds the exact global counts. The dense
   * per-task array is the same size as the broadcast Φ every task already
-  * holds. Driver/broadcast
-  * state is Φ (T×V longs) + n_z (T longs) — bounded by MODEL size, never
-  * by corpus size. No O(N·V) one-hot densification anywhere (SURVEY
-  * §4.2.1).
+  * holds. Driver/broadcast state is Φ (T×V longs) + n_z (T longs) —
+  * bounded by MODEL size, never by corpus size. No O(N·V) one-hot
+  * densification anywhere (SURVEY §4.2.1).
   */
 object GibbsLda {
 
   final case class DocState(docId: Long, words: Array[Int], topics: Array[Int])
 
-  /** Storage of the token and doc-state caches: serialized. Spark sizes a
+  /** Storage of the doc-state caches: serialized. Spark sizes a
     * deserialized block while it unrolls it, by walking the object graph of
-    * sampled rows (`SizeEstimator`), and these caches hold many small
-    * objects: a tuple and a String per token, or a DocState and two arrays
-    * per doc. A serialized block is sized by its byte count. Each cache is
-    * written once and read back once or twice (the vocab count and the
-    * encoding; the next sweep), so one deserialization per read costs less
-    * than the walks did: with this and the native word split, SizeEstimator
-    * fell from 30% to 16% of the executor CPU samples of topic_model's warm
-    * passes (JFR, 4-core x86 VM). */
+    * sampled rows (`SizeEstimator`), and these caches hold a DocState and
+    * two arrays per doc. A serialized block is sized by its byte count. Each
+    * cache is written once and read back once (by the next sweep), so one
+    * deserialization per read costs less than the walks did: with this and
+    * the native word split, SizeEstimator fell from 30% to 16% of the
+    * executor CPU samples of topic_model's warm passes (JFR, 4-core x86 VM).
+    * The corpus itself is [[LdaPipeline.preprocess]]'s DataFrame cache. */
   private val Cached = StorageLevel.MEMORY_AND_DISK_SER
 
   final case class GibbsModel(
@@ -54,26 +55,6 @@ object GibbsLda {
       nz: Array[Long],         // T topic totals
       docs: RDD[DocState],
       vocab: Array[String])
-
-  /** Deterministic doc-term encoding of a preprocessed corpus (`doc_id`,
-    * `tokens`): the top-V vocabulary shared with the MLlib fit
-    * ([[LdaPipeline.vocabulary]], count desc, word asc) → per-doc position list
-    * ordered by token position (doc identity kept throughout, SURVEY
-    * §7.5.3). Also returns the persisted token RDD the encoding reads; the
-    * caller unpersists it once the encoded DocStates are materialized. */
-  private def encode(corpus: DataFrame, vocabSize: Int):
-      (RDD[(Long, Array[Int])], Array[String], RDD[(Long, Array[String])]) = {
-    // Persisted: the tokens feed BOTH the vocabulary count and the encoding
-    // — without the cache the clean+tokenize+stopword chain runs twice over
-    // the corpus (guide §2.4 / §5).
-    val docs = LdaPipeline.tokenPairs(corpus).persist(Cached)
-    val vocab = LdaPipeline.vocabulary(docs, vocabSize)
-    val bc = docs.sparkContext.broadcast(vocab.zipWithIndex.toMap)
-    val encoded = docs.map { case (id, toks) =>
-      (id, toks.iterator.flatMap(bc.value.get).toArray)
-    }.filter(_._2.nonEmpty)
-    (encoded, vocab, docs)
-  }
 
   /** Exact topic-word counts: each task counts its docs into a dense T×V
     * array, and the driver sums the arrays in partition order — one plain
@@ -158,22 +139,23 @@ object GibbsLda {
     }
   }
 
-  /** Fits `documents`. Docs with NULL text (NULL tokens) are dropped in the
-    * scan. Docs with empty tokens are not filtered out ahead: they count no
-    * word and encode to nothing, and the encoding drops every doc without a
-    * vocabulary word, so the fit equals one on [[LdaPipeline.preprocess]],
-    * whose `size(tokens) > 0` filter would clean each row twice. */
+  /** Fits the docs of `documents` with at least one token
+    * ([[LdaPipeline.preprocess]], the corpus of the MLlib fits too). */
   def fit(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
       maxIter: Int = 10, seed: Long = 42L): GibbsModel =
-    fitCorpus(LdaPipeline.tokenize(Tables.documents(spark, dir)
-      .filter(col("text").isNotNull)), vocabSize, numTopics, maxIter, seed)
+    fitCorpus(LdaPipeline.preprocess(Tables.documents(spark, dir)), vocabSize, numTopics,
+      maxIter, seed)
 
   /** [[fit]] on an already preprocessed corpus (`doc_id`, `tokens`), in
     * whatever partitioning it arrives — the seam the partition-invariance
-    * test drives. */
+    * test drives. Each doc is encoded as its vocabulary positions in token
+    * order ([[LdaPipeline.encode]] over [[LdaPipeline.vocabulary]], doc
+    * identity kept throughout, SURVEY §7.5.3); a doc with no vocabulary word
+    * is dropped, the reference's inner-join shrink. */
   private[graft] def fitCorpus(corpus: DataFrame, vocabSize: Int,
       numTopics: Int, maxIter: Int, seed: Long): GibbsModel = {
-    val (encoded, vocab, tokenCache) = encode(corpus, vocabSize)
+    val tokens = LdaPipeline.tokenPairs(corpus)
+    val vocab = LdaPipeline.vocabulary(tokens, vocabSize)
     val v = vocab.length
     // M1: deterministic init, topic = slot index mod T (py:110-121).
     // NOT fanned out, by measurement: the sampler is partitioning-independent
@@ -184,9 +166,9 @@ object GibbsLda {
     // sampling is too cheap per token to recoup it. At real scale the input
     // arrives with ≥ cores partitions and the sweeps parallelize without any
     // explicit repartition.
-    var docs = encoded.map { case (id, words) =>
-      DocState(id, words, Array.tabulate(words.length)(_ % numTopics))
-    }.persist(Cached)
+    var docs = LdaPipeline.encode(tokens, vocab).filter(_._2.nonEmpty)
+      .map { case (id, words) => DocState(id, words, Array.tabulate(words.length)(_ % numTopics)) }
+      .persist(Cached)
     val alpha = 1.0 / numTopics
     val beta = 1.0 / numTopics
     // countPhi is the SOLE consumer of each fresh persist, so its job runs
@@ -194,7 +176,6 @@ object GibbsLda {
     // The previous state is unpersisted only after the new one is
     // materialized.
     var (phi, nz) = countPhi(docs, numTopics, v)
-    tokenCache.unpersist() // DocStates are materialized; the token cache is dead
     for (i <- 1 to maxIter) {
       val next = sweep(docs, phi, nz, numTopics, v, alpha, beta, i, seed)
         .persist(Cached)

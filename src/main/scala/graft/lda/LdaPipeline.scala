@@ -41,11 +41,12 @@ import graft.functions.{Cleaning, Words}
   * (bounded by the V parameter, same as the reference's broadcast dictionary)
   * and the T×V topic matrix (bounded by hyperparameters, not data size).
   *
-  * Persistence: each query caches its corpus as a DataFrame of two columns,
-  * `doc_id, tokens` ([[corpus]]), which the vocabulary and the encoding
-  * both read. A DataFrame cache stores columnar batches of byte arrays,
-  * which Spark sizes without walking per-row objects. The training RDD is
-  * unpersisted after the fit, so no RDD cache outlives the query: the
+  * Persistence: the three topic models read one corpus, [[preprocess]]'s
+  * `doc_id, tokens`, cached lazily as a DataFrame of those two columns, and
+  * one encoding of it, [[encode]]. A DataFrame cache stores columnar
+  * batches of byte arrays, which Spark sizes without walking per-row
+  * objects. The training RDD is unpersisted after the fit, and Gibbs's
+  * doc states after its report, so no RDD cache outlives the query: the
   * Catalog drops only DataFrame caches.
   */
 object LdaPipeline {
@@ -55,35 +56,24 @@ object LdaPipeline {
   val StopWords: Seq[String] =
     StopWordsRemover.loadDefaultStopWords("english").toSeq ++ Cleaning.ExtraStopWords
 
-  /** `df` with its `tokens`, the reference's tokenize + stopword filter
-    * (py:34-41): one native word split over the cleaned text
+  /** The topic models' corpus: `doc_id` and `tokens` of every doc of `df`
+    * with at least one token. The tokens are the reference's tokenize +
+    * stopword filter (py:34-41): one native word split over the cleaned text
     * ([[graft.functions.Words]]). It equals MLlib's `RegexTokenizer` +
     * `StopWordsRemover` on that text (a property test checks it), without
-    * their two ScalaUDF conversions per row. Docs without tokens are kept. */
-  private[lda] def tokenize(df: DataFrame): DataFrame =
-    df.withColumn("tokens", Words(Cleaning.cleanText(col("text")), StopWords))
-
-  private def hasTokens = size(col("tokens")) > 0
-
-  /** [[tokenize]] less the docs with no surviving tokens, matching the
-    * reference's inner-join corpus shrink (py:75,93; SURVEY §7.5.2). Input
-    * must have `doc_id` and `text` columns; output adds `tokens`. The filter
-    * sits above a lazy cache of the tokenized rows: below the projection,
-    * Catalyst would inline the token expression into it and clean each row
-    * twice. */
-  def preprocess(df: DataFrame): DataFrame = tokenize(df).persist().filter(hasTokens)
-
-  /** The docs with tokens of `documents` as the two LDA queries read them:
-    * `doc_id, tokens` of every doc, persisted lazily, filtered by
-    * [[hasTokens]] above the cache, as in [[preprocess]]. Only these two
-    * columns are cached, not the raw text. The cache stays for the caller's
-    * action (the Catalog cache-hygiene contract drops it). */
-  private[graft] def corpus(spark: SparkSession, dir: String): DataFrame =
-    tokenize(Tables.documents(spark, dir)).select(col("doc_id"), col("tokens")).persist()
-      .filter(hasTokens)
+    * their two ScalaUDF conversions per row. Dropping the docs without
+    * tokens (NULL text gives NULL tokens) is the reference's inner-join
+    * corpus shrink (py:75,93; SURVEY §7.5.2). Input must have `doc_id` and
+    * `text` columns. The filter sits above a lazy cache of the two columns:
+    * below the projection, Catalyst would inline the token expression into
+    * it and clean each row twice. The cache stays for the caller's action
+    * (the Catalog cache-hygiene contract drops it). */
+  def preprocess(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), Words(Cleaning.cleanText(col("text")), StopWords).as("tokens"))
+      .persist().filter(size(col("tokens")) > 0)
 
   /** The `doc_id, tokens` of a corpus as `(doc_id, tokens)` pairs, read
-    * through Row getters: the input of both fits' vocabulary and encoding. */
+    * through Row getters: the input of every fit's vocabulary and encoding. */
   private[graft] def tokenPairs(corpus: DataFrame): RDD[(Long, Array[String])] =
     corpus.select(col("doc_id"), col("tokens")).rdd
       .map(r => (r.getLong(0), r.getSeq[String](1).toArray))
@@ -92,7 +82,7 @@ object LdaPipeline {
     * asc): the reference's top-V vocabulary (py:43-68), in one
     * `reduceByKey` + `takeOrdered` job. Tokens are lowercase ASCII
     * (Cleaning.cleanText), so String order is the byte order a SQL
-    * `ORDER BY word` uses. Both LDA fits and [[GibbsLda]] use it. */
+    * `ORDER BY word` uses. All three topic models use it. */
   private[graft] def vocabulary(docs: RDD[(Long, Array[String])], vocabSize: Int): Array[String] =
     docs.flatMap(_._2.iterator.map(w => (w, 1L)))
       .reduceByKey(_ + _)
@@ -101,17 +91,23 @@ object LdaPipeline {
       })
       .map(_._1)
 
-  /** Each doc as its counts of the `vocab` words, indices ascending. A doc
-    * with none of the words is a zero vector: it stays in the corpus, as
-    * `CountVectorizer` kept it. */
-  private[graft] def vectors(docs: RDD[(Long, Array[String])], vocab: Array[String]):
-      RDD[(Long, Vector)] = {
+  /** Each doc as the `vocab` positions of its tokens, in token order;
+    * tokens outside `vocab` are skipped. Gibbs samples one topic per
+    * position, and [[vectors]] counts them. One broadcast index per call. */
+  private[graft] def encode(docs: RDD[(Long, Array[String])], vocab: Array[String]):
+      RDD[(Long, Array[Int])] = {
     val index = docs.sparkContext.broadcast(vocab.zipWithIndex.toMap)
-    docs.map { case (id, tokens) =>
-      val counts = tokens.flatMap(index.value.get).groupMapReduce(identity)(_ => 1.0)(_ + _)
-      (id, Vectors.sparse(index.value.size, counts.toSeq))
-    }
+    docs.map { case (id, tokens) => (id, tokens.flatMap(index.value.get)) }
   }
+
+  /** Each encoded doc as its counts over a vocabulary of `vocabSize` words,
+    * indices ascending. A doc with no vocabulary word is a zero vector: it
+    * stays in the corpus, as `CountVectorizer` kept it. */
+  private[graft] def vectors(encoded: RDD[(Long, Array[Int])], vocabSize: Int):
+      RDD[(Long, Vector)] =
+    encoded.map { case (id, words) =>
+      (id, Vectors.sparse(vocabSize, words.groupMapReduce(identity)(_ => 1.0)(_ + _).toSeq))
+    }
 
   /** MLlib's online LDA on `docs` over `vocab`, with the parameters
     * `ml.clustering.LDA` passes it by default: τ0 1024, κ 0.51, minibatch
@@ -127,11 +123,11 @@ object LdaPipeline {
       .setOptimizer(new OnlineLDAOptimizer().setTau0(1024).setKappa(0.51)
         .setMiniBatchFraction(0.05).setOptimizeDocConcentration(true))
 
-  /** [[lda]] fitted on `docs` over `vocab`. */
-  private def fit(docs: RDD[(Long, Array[String])], vocab: Array[String], numTopics: Int,
+  /** [[lda]] fitted on docs encoded over a vocabulary of `vocabSize` words. */
+  private def fit(encoded: RDD[(Long, Array[Int])], vocabSize: Int, numTopics: Int,
       maxIter: Int, seed: Long): LocalLDAModel = {
-    val training = vectors(docs, vocab).localCheckpoint()
-    val model = GraftLDAOptimizer.run(lda(numTopics, maxIter, seed), training, vocab.length)
+    val training = vectors(encoded, vocabSize).localCheckpoint()
+    val model = GraftLDAOptimizer.run(lda(numTopics, maxIter, seed), training, vocabSize)
     training.unpersist()
     model
   }
@@ -145,17 +141,18 @@ object LdaPipeline {
   def docTopics(spark: SparkSession, dir: String, vocabSize: Int,
       numTopics: Int, maxIter: Int, seed: Long = 42L): DataFrame = {
     import spark.implicits._
-    val docs = tokenPairs(corpus(spark, dir))
+    val docs = tokenPairs(preprocess(Tables.documents(spark, dir)))
     val vocab = vocabulary(docs, vocabSize)
-    val model = fit(docs, vocab, numTopics, maxIter, seed)
-    // Inference reads a fresh encoding of the cached corpus, range-
+    val encoded = encode(docs, vocab)
+    val model = fit(encoded, vocab.length, numTopics, maxIter, seed)
+    // Inference recomputes the fit's encoding from the cached corpus, range-
     // partitioned on doc_id: that fans the per-doc variational inference
     // out to every core (the single-row-group fixture gives the corpus one
     // partition) and leaves the rows in doc_id order, so no sort follows.
     // Each doc's inference is seeded by its doc_id, so the partitioning
     // cannot change its θ.
     model.topicDistributions(
-        vectors(docs, vocab).sortByKey(numPartitions = spark.sparkContext.defaultParallelism))
+        vectors(encoded, vocab.length).sortByKey(numPartitions = spark.sparkContext.defaultParallelism))
       .map { case (id, theta) => (id, theta.argmax, rounded(theta(theta.argmax), 4)) }
       .toDF("doc_id", "topic", "weight")
   }
@@ -169,7 +166,7 @@ object LdaPipeline {
   def topicReport(spark: SparkSession, dir: String, vocabSize: Int,
       numTopics: Int, maxIter: Int, topWords: Int = 20, seed: Long = 42L): DataFrame = {
     import spark.implicits._
-    val docs = tokenPairs(corpus(spark, dir))
+    val docs = tokenPairs(preprocess(Tables.documents(spark, dir)))
     // A local relation in topic order: no Spark job builds it, and no
     // orderBy, whose sort would cost jobs.
     topics(docs, vocabulary(docs, vocabSize), numTopics, maxIter, topWords, seed)
@@ -182,7 +179,7 @@ object LdaPipeline {
     * lookup, py:192-194); weights are rounded to 6 places. */
   private[graft] def topics(docs: RDD[(Long, Array[String])], vocab: Array[String],
       numTopics: Int, maxIter: Int, topWords: Int, seed: Long): Seq[(Int, String, String)] =
-    fit(docs, vocab, numTopics, maxIter, seed).describeTopics(topWords).toSeq.zipWithIndex
+    fit(encode(docs, vocab), vocab.length, numTopics, maxIter, seed).describeTopics(topWords).toSeq.zipWithIndex
       .map { case ((terms, weights), t) =>
         (t, terms.map(vocab).mkString(" "), weights.map(rounded(_, 6)).mkString(" "))
       }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
@@ -197,8 +197,7 @@ object Similarity {
           .select(col("vec_id"), col("embedding"),
             qCol(col("embedding")).as("ql"))
           .withColumn("nrm", qDot(col("ql"), col("ql")))
-          .withColumn("fv", array_to_vector(
-            transform(col("embedding"), x => x.cast("double"))))
+          .withColumn("fv", array_to_vector(col("embedding").cast("array<double>")))
           .persist()
         val km = new KMeans().setK(16).setSeed(42L)
           .setFeaturesCol("fv").setPredictionCol("cell")

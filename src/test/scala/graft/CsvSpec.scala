@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables
 

@@ -89,6 +89,36 @@ class GibbsSpec extends SparkSpec {
     } finally FileUtils.deleteDirectory(dir.toFile)
   }
 
+  /** A fit's vocabulary, Φ, n_z and doc states, in the reference's shape. */
+  private def asReference(m: GibbsLda.GibbsModel): GibbsReference.Fit = {
+    val docs = m.docs.collect().sortBy(_.docId)
+      .map(d => (d.docId, d.words.toSeq, d.topics.toSeq)).toSeq
+    m.docs.unpersist()
+    GibbsReference.Fit(m.vocab.toSeq, m.phi.map(_.toSeq).toSeq, m.nz.toSeq, docs)
+  }
+
+  test("gibbs_topics' fit at sf0.001 equals the sequential reference sampler") {
+    val corpus = LdaPipeline.preprocess(Tables.documents(spark, sf0001)).collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[String](1)))
+    val m = GibbsLda.fit(spark, sf0001, vocabSize = 1000, numTopics = 5, maxIter = 5, seed = 42L)
+    spark.sharedState.cacheManager.clearCache()
+    assert(asReference(m) == GibbsReference.fit(corpus, 1000, 5, 5, 42L))
+  }
+
+  test("on generated corpora the fit equals the sequential reference sampler") {
+    import spark.implicits._
+    val rng = new scala.util.Random(3)
+    Seq((4, 10, 6), (2, 5, 3), (7, 20, 4)).foreach { case (t, v, sweeps) =>
+      // 31 words of skewed frequency: count ties at the vocabulary cut, docs
+      // with no vocabulary word, empty docs, and ids across the Long range.
+      val corpus = Seq.fill(80)(rng.nextLong() ->
+        Seq.fill(rng.nextInt(16))(f"w${rng.nextInt(9) * rng.nextInt(9)}%02d"))
+      val m = GibbsLda.fitCorpus(corpus.toDF("doc_id", "tokens").repartition(3), v, t,
+        sweeps, seed = 11L)
+      assert(asReference(m) == GibbsReference.fit(corpus, v, t, sweeps, 11L), (t, v, sweeps))
+    }
+  }
+
   test("a fit launches one vocabulary job and maxIter + 1 countPhi jobs") {
     val (m, jobs) = JobLog(spark.sparkContext)(
       GibbsLda.fit(spark, sf0001, vocabSize = 100, numTopics = 3, maxIter = 3))

@@ -55,7 +55,7 @@ class LdaSpec extends SparkSpec {
     // The reference: the ml pipeline the RDD fit replaced, at lda_topics'
     // settings. Given its vocabulary (ties in arbitrary order), the RDD fit
     // must reproduce its topics and weights exactly.
-    val docs = LdaPipeline.corpus(spark, sf0001)
+    val docs = LdaPipeline.preprocess(Tables.documents(spark, sf0001))
     val cv = new CountVectorizer().setInputCol("tokens").setOutputCol("features")
       .setVocabSize(1000).fit(docs)
     val vocab = cv.vocabulary
@@ -85,10 +85,12 @@ class LdaSpec extends SparkSpec {
   }
 
   test("two fits in one session give identical rows") {
-    Seq("lda_topics", "lda_doc_topics").foreach { q =>
+    spark.sharedState.cacheManager.clearCache()
+    Seq("lda_topics", "lda_doc_topics", "gibbs_topics").foreach { q =>
       def rows() = {
         val r = Catalog.byName(q).run(spark, sf0001).collect().toSeq
         spark.sharedState.cacheManager.clearCache()
+        assert(spark.sparkContext.getPersistentRDDs.isEmpty, q)
         r
       }
       assert(rows() == rows(), q)
@@ -126,9 +128,10 @@ class LdaSpec extends SparkSpec {
   /** lda_topics' training vectors at sf0.001 (V 1000), in one cached
     * partition, and their length. */
   private def sf0001Training(): (RDD[(Long, Vector)], Int) = {
-    val docs = LdaPipeline.tokenPairs(LdaPipeline.corpus(spark, sf0001))
+    val docs = LdaPipeline.tokenPairs(LdaPipeline.preprocess(Tables.documents(spark, sf0001)))
     val vocab = LdaPipeline.vocabulary(docs, 1000)
-    val training = LdaPipeline.vectors(docs, vocab).coalesce(1).persist()
+    val training = LdaPipeline.vectors(LdaPipeline.encode(docs, vocab), vocab.length)
+      .coalesce(1).persist()
     training.count()
     spark.sharedState.cacheManager.clearCache()
     (training, vocab.length)
@@ -180,7 +183,7 @@ class LdaSpec extends SparkSpec {
   test("a fit on 4 hash partitions gives the same lda_topics rows in 10 runs") {
     // The fit sums the partitions' statistics in partition order, whatever
     // order their tasks complete in.
-    val docs = LdaPipeline.tokenPairs(LdaPipeline.corpus(spark, sf001))
+    val docs = LdaPipeline.tokenPairs(LdaPipeline.preprocess(Tables.documents(spark, sf001)))
       .partitionBy(new HashPartitioner(4)).persist()
     val vocab = LdaPipeline.vocabulary(docs, 1000)
     spark.sharedState.cacheManager.clearCache()

@@ -122,7 +122,6 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("similarity score is symmetric and self-score is ~10000 bp") {
-    import spark.implicits._
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id"),
         transform(col("embedding"), x => floor(x.cast("double") * lit(1000000.0)).cast("long")).as("ql"))
