@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{asc, col, desc, explode}
 import graft.lda.LdaPipeline
 import graft.sources.Tables
 
@@ -42,18 +41,14 @@ object Main {
 
   /** The CLI's work after argument validation: the top-10 corpus-word
     * preview (T2, py:57), then a fit and one `Topic <t>: <terms>` line per
-    * topic (M1–M5, py:199-203), each line handed to `out`. The preview
-    * counts the tokens the model sees (LdaPipeline.preprocess), ordered by
-    * (count desc, word asc). */
+    * topic (M1–M5, py:199-203), each line handed to `out`. The preview is
+    * the model's own top-10 vocabulary (LdaPipeline.vocabulary over the
+    * tokens of LdaPipeline.preprocess), ordered by (count desc, word asc). */
   def run(spark: SparkSession, dir: String, vocabSize: Int, numTopics: Int,
       out: String => Unit): Unit = {
     out("Top 10 corpus words (word, count):")
-    LdaPipeline.preprocess(Tables.documents(spark, dir))
-      .select(explode(col("tokens")).as("word"))
-      .groupBy(col("word")).count()
-      .orderBy(desc("count"), asc("word"))
-      .limit(10).collect()
-      .foreach(r => out(s"  ${r.getString(0)}\t${r.getLong(1)}"))
+    val docs = LdaPipeline.tokenPairs(LdaPipeline.preprocess(Tables.documents(spark, dir)))
+    LdaPipeline.vocabulary(docs, 10).foreach { case (w, n) => out(s"  $w\t$n") }
     LdaPipeline.topicReport(spark, dir,
       vocabSize = vocabSize, numTopics = numTopics, maxIter = 10)
       .collect()

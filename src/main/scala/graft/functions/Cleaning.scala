@@ -58,6 +58,11 @@ object Cleaning {
     s"lower(trim($f6))"                      // + trim, F7 lower
   }
 
+  /** The DuckDB-SQL mirror of [[Words]] without stopwords over the oracles'
+    * `clean` column ([[CleanTextSql]]): the non-empty tokens of its
+    * single-space split. */
+  val WordsSql: String = "list_filter(string_split(clean, ' '), t -> t <> '')"
+
   /** The reference's custom stopword additions beyond the standard english
     * list: 11 domain words + 26 single letters + the empty token
     * (LDATopicModelingWithGibbs.py:36-41; SURVEY §7.5.4). */

@@ -155,7 +155,7 @@ object GibbsLda {
   private[graft] def fitCorpus(corpus: DataFrame, vocabSize: Int,
       numTopics: Int, maxIter: Int, seed: Long): GibbsModel = {
     val tokens = LdaPipeline.tokenPairs(corpus)
-    val vocab = LdaPipeline.vocabulary(tokens, vocabSize)
+    val vocab = LdaPipeline.vocabulary(tokens, vocabSize).map(_._1)
     val v = vocab.length
     // M1: deterministic init, topic = slot index mod T (py:110-121).
     // NOT fanned out, by measurement: the sampler is partitioning-independent

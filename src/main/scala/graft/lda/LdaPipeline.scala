@@ -3,7 +3,7 @@ package graft.lda
 import scala.math.BigDecimal.RoundingMode
 
 import org.apache.spark.ml.feature.StopWordsRemover
-import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LDA, LocalLDAModel, OnlineLDAOptimizer}
+import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LocalLDAModel}
 import org.apache.spark.mllib.linalg.{Vector, Vectors}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -63,14 +63,12 @@ object LdaPipeline {
     * `StopWordsRemover` on that text (a property test checks it), without
     * their two ScalaUDF conversions per row. Dropping the docs without
     * tokens (NULL text gives NULL tokens) is the reference's inner-join
-    * corpus shrink (py:75,93; SURVEY §7.5.2). Input must have `doc_id` and
-    * `text` columns. The filter sits above a lazy cache of the two columns:
-    * below the projection, Catalyst would inline the token expression into
-    * it and clean each row twice. The cache stays for the caller's action
-    * (the Catalog cache-hygiene contract drops it). */
-  def preprocess(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), Words(Cleaning.cleanText(col("text")), StopWords).as("tokens"))
-      .persist().filter(size(col("tokens")) > 0)
+    * corpus shrink (py:75,93; SURVEY §7.5.2), filtered above a lazy cache
+    * of the two columns ([[Tables.nonEmpty]]). Input must have `doc_id` and
+    * `text` columns. */
+  def preprocess(df: DataFrame): DataFrame = Tables.nonEmpty(
+    df.select(col("doc_id"), Words(Cleaning.cleanText(col("text")), StopWords).as("tokens")),
+    "tokens")
 
   /** The `doc_id, tokens` of a corpus as `(doc_id, tokens)` pairs, read
     * through Row getters: the input of every fit's vocabulary and encoding. */
@@ -78,18 +76,19 @@ object LdaPipeline {
     corpus.select(col("doc_id"), col("tokens")).rdd
       .map(r => (r.getLong(0), r.getSeq[String](1).toArray))
 
-  /** The `vocabSize` most frequent words of `docs`, by (count desc, word
-    * asc): the reference's top-V vocabulary (py:43-68), in one
-    * `reduceByKey` + `takeOrdered` job. Tokens are lowercase ASCII
+  /** The `vocabSize` most frequent words of `docs` with their counts, by
+    * (count desc, word asc): the reference's top-V vocabulary (py:43-68), in
+    * one `reduceByKey` + `takeOrdered` job. Tokens are lowercase ASCII
     * (Cleaning.cleanText), so String order is the byte order a SQL
-    * `ORDER BY word` uses. All three topic models use it. */
-  private[graft] def vocabulary(docs: RDD[(Long, Array[String])], vocabSize: Int): Array[String] =
+    * `ORDER BY word` uses. All three topic models and `graft.Main`'s
+    * preview use it. */
+  private[graft] def vocabulary(docs: RDD[(Long, Array[String])], vocabSize: Int):
+      Array[(String, Long)] =
     docs.flatMap(_._2.iterator.map(w => (w, 1L)))
       .reduceByKey(_ + _)
       .takeOrdered(vocabSize)(Ordering.by[(String, Long), (Long, String)] {
         case (w, c) => (-c, w)
       })
-      .map(_._1)
 
   /** Each doc as the `vocab` positions of its tokens, in token order;
     * tokens outside `vocab` are skipped. Gibbs samples one topic per
@@ -109,25 +108,13 @@ object LdaPipeline {
       (id, Vectors.sparse(vocabSize, words.groupMapReduce(identity)(_ => 1.0)(_ + _).toSeq))
     }
 
-  /** MLlib's online LDA on `docs` over `vocab`, with the parameters
-    * `ml.clustering.LDA` passes it by default: τ0 1024, κ 0.51, minibatch
-    * fraction 0.05, an optimized doc concentration and checkpoint interval
-    * 10; α = β = 1/T, the reference's coupling (py:98-100; SURVEY §7.5.6).
-    * The fit keeps its input's partitioning: each minibatch is sampled per
-    * partition. */
-  private[graft] def lda(numTopics: Int, maxIter: Int, seed: Long): LDA =
-    new LDA()
-      .setK(numTopics).setMaxIterations(maxIter).setSeed(seed)
-      .setDocConcentration(1.0 / numTopics).setTopicConcentration(1.0 / numTopics)
-      .setCheckpointInterval(10)
-      .setOptimizer(new OnlineLDAOptimizer().setTau0(1024).setKappa(0.51)
-        .setMiniBatchFraction(0.05).setOptimizeDocConcentration(true))
-
-  /** [[lda]] fitted on docs encoded over a vocabulary of `vocabSize` words. */
+  /** MLlib's online LDA ([[GraftLDAOptimizer]]) fitted on docs encoded over
+    * a vocabulary of `vocabSize` words. The fit keeps its input's
+    * partitioning: each minibatch is sampled per partition. */
   private def fit(encoded: RDD[(Long, Array[Int])], vocabSize: Int, numTopics: Int,
       maxIter: Int, seed: Long): LocalLDAModel = {
     val training = vectors(encoded, vocabSize).localCheckpoint()
-    val model = GraftLDAOptimizer.run(lda(numTopics, maxIter, seed), training, vocabSize)
+    val model = GraftLDAOptimizer.run(training, vocabSize, numTopics, maxIter, seed)
     training.unpersist()
     model
   }
@@ -142,7 +129,7 @@ object LdaPipeline {
       numTopics: Int, maxIter: Int, seed: Long = 42L): DataFrame = {
     import spark.implicits._
     val docs = tokenPairs(preprocess(Tables.documents(spark, dir)))
-    val vocab = vocabulary(docs, vocabSize)
+    val vocab = vocabulary(docs, vocabSize).map(_._1)
     val encoded = encode(docs, vocab)
     val model = fit(encoded, vocab.length, numTopics, maxIter, seed)
     // Inference recomputes the fit's encoding from the cached corpus, range-
@@ -169,7 +156,7 @@ object LdaPipeline {
     val docs = tokenPairs(preprocess(Tables.documents(spark, dir)))
     // A local relation in topic order: no Spark job builds it, and no
     // orderBy, whose sort would cost jobs.
-    topics(docs, vocabulary(docs, vocabSize), numTopics, maxIter, topWords, seed)
+    topics(docs, vocabulary(docs, vocabSize).map(_._1), numTopics, maxIter, topWords, seed)
       .toDF("topic", "terms", "weights")
   }
 

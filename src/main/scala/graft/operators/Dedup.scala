@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
@@ -34,13 +34,30 @@ object Dedup {
   private val JNum = 9
   private val JDen = 10
 
-  /** documents scan fanned out to every core (guide §2.2: the single-row-
-    * group fixture plans as ONE scan task, serializing the regex chain). */
-  private def docsSrc(s: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(Tables.documents(s, dir), s"$dir/documents")
+  /** Exact Jaccard |a∩b|/|a∪b| in basis points, floor-divided (rule 2),
+    * from the intersection size `ni` and the set sizes `na`, `nb`. */
+  private def jaccardBp(ni: Column, na: Column, nb: Column): Column =
+    floor(lit(10000) * ni / (na + nb - ni)).cast("long")
 
-  /** Shared oracle mirror of the cleaning chain (see Cleaning.CleanTextSql). */
-  private val cleanSql: String = Cleaning.CleanTextSql
+  /** The oracles' exact-Jaccard pairs of CTE `d` (doc_id, source and a set
+    * column `set`) at `j_bp >= minBp`: every pair of a source sharing a
+    * member (aliased `tok`), its intersection counted by a join, then
+    * scored as [[jaccardBp]]. Ends the query: `d1, d2, j_bp` by (d1, d2). */
+  private def jaccardSql(set: String, tok: String, minBp: Int): String =
+    s"""tok AS (SELECT doc_id, source, unnest($set) AS $tok FROM d),
+       |sizes AS (SELECT doc_id, len($set) AS n FROM d),
+       |inter AS (
+       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS ni
+       |  FROM tok a JOIN tok b
+       |    ON a.$tok = b.$tok AND a.source = b.source AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)
+       |SELECT d1, d2,
+       |  CAST((10000 * ni) // (sa.n + sb.n - ni) AS BIGINT) AS j_bp
+       |FROM inter
+       |JOIN sizes sa ON d1 = sa.doc_id
+       |JOIN sizes sb ON d2 = sb.doc_id
+       |WHERE (10000 * ni) // (sa.n + sb.n - ni) >= $minBp
+       |ORDER BY d1, d2""".stripMargin
 
   /** DuckDB mirror of the native TokenOps.strHash31 kernel (graft.functions):
     * weighted character-code sum × Knuth multiplier mod a Mersenne prime.
@@ -56,13 +73,13 @@ object Dedup {
       "dedup_exact",
       (s, dir) => {
         val w = Window.partitionBy(col("doc_md5"))
-        docsSrc(s, dir)
+        TextOps.docs(s, dir)
           .select(col("doc_id"), md5(cleanCol.cast("binary")).as("doc_md5"))
           .withColumn("canonical_id", min(col("doc_id")).over(w))
           .withColumn("is_dup", (col("doc_id") =!= col("canonical_id")).cast("int"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH h AS (SELECT doc_id, md5($cleanSql) AS doc_md5 FROM documents)
+      Some(s"""WITH h AS (SELECT doc_id, md5(${Cleaning.CleanTextSql}) AS doc_md5 FROM documents)
               |SELECT doc_id, doc_md5,
               |  min(doc_id) OVER (PARTITION BY doc_md5) AS canonical_id,
               |  CAST(doc_id <> min(doc_id) OVER (PARTITION BY doc_md5) AS INT) AS is_dup
@@ -76,7 +93,7 @@ object Dedup {
         // Persist the cleaned text: the three fingerprints below each
         // reference it (CollapseProject would inline the 8-regex chain into
         // all three, running it 3× per doc — guide §2.4 / §5).
-        val cleaned = docsSrc(s, dir)
+        val cleaned = TextOps.docs(s, dir)
           .select(cleanCol.as("clean"))
           .persist()
         val words = Words(col("clean"))
@@ -90,12 +107,10 @@ object Dedup {
             countDistinct(col("h_bow")).as("n_unique_bow"),
             countDistinct(col("h_set")).as("n_unique_set"))
       },
-      Some(s"""WITH c AS (SELECT $cleanSql AS clean FROM documents),
+      Some(s"""WITH c AS (SELECT ${Cleaning.CleanTextSql} AS clean FROM documents),
               |h AS (SELECT md5(clean) AS h_exact,
-              |  md5(array_to_string(list_sort(list_filter(string_split(clean, ' '),
-              |    t -> t <> '')), ' ')) AS h_bow,
-              |  md5(array_to_string(list_sort(list_distinct(list_filter(
-              |    string_split(clean, ' '), t -> t <> ''))), ' ')) AS h_set
+              |  md5(array_to_string(list_sort(${Cleaning.WordsSql}), ' ')) AS h_bow,
+              |  md5(array_to_string(list_sort(list_distinct(${Cleaning.WordsSql})), ' ')) AS h_set
               |  FROM c)
               |SELECT count(*) AS n_docs,
               |  count(DISTINCT h_exact) AS n_unique_exact,
@@ -134,7 +149,7 @@ object Dedup {
         // rows. `ws` is then non-nullable, so Catalyst infers no
         // isnotnull(ws) filter, which would run the cleaning chain in the
         // scan's single task ahead of the fan-out.
-        val docs = docsSrc(s, dir)
+        val docs = TextOps.docs(s, dir)
           .select(col("doc_id"), col("source"),
             coalesce(sort_array(array_distinct(Words(cleanCol))),
               typedLit(Array.empty[String])).as("ws"))
@@ -150,28 +165,15 @@ object Dedup {
               lit(JNum) * col("b.n") <= lit(JDen) * col("a.n") &&
               lit(JDen + JNum) * ni >= lit(JNum) * (col("a.n") + col("b.n")))
           .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-            floor(lit(10000) * ni / (col("a.n") + col("b.n") - ni)).cast("long").as("j_bp"))
+            jaccardBp(ni, col("a.n"), col("b.n")).as("j_bp"))
           .distinct()
           .orderBy(col("d1"), col("d2"))
       },
-      Some(s"""WITH c AS (SELECT doc_id, source, $cleanSql AS clean FROM documents),
+      Some(s"""WITH c AS (SELECT doc_id, source, ${Cleaning.CleanTextSql} AS clean FROM documents),
               |d AS (SELECT doc_id, source,
-              |  list_distinct(list_filter(string_split(clean, ' '), t -> t <> '')) AS ws
+              |  list_distinct(${Cleaning.WordsSql}) AS ws
               |  FROM c),
-              |tok AS (SELECT doc_id, source, unnest(ws) AS word FROM d),
-              |sizes AS (SELECT doc_id, len(ws) AS n FROM d),
-              |inter AS (
-              |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS ni
-              |  FROM tok a JOIN tok b
-              |    ON a.word = b.word AND a.source = b.source AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT d1, d2,
-              |  CAST((10000 * ni) // (sa.n + sb.n - ni) AS BIGINT) AS j_bp
-              |FROM inter
-              |JOIN sizes sa ON d1 = sa.doc_id
-              |JOIN sizes sb ON d2 = sb.doc_id
-              |WHERE (10000 * ni) // (sa.n + sb.n - ni) >= 9000
-              |ORDER BY d1, d2""".stripMargin)),
+              |${jaccardSql("ws", "word", 9000)}""".stripMargin)),
 
     // ---- n-gram (3-shingle) Jaccard near-dup pairs. Word-SET Jaccard is
     // saturated on this small-vocabulary corpus (hundreds of ≥0.9 pairs);
@@ -192,7 +194,7 @@ object Dedup {
         // which explodes to no rows, and Catalyst would push such a filter
         // below the fan-out exchange, cleaning every doc twice, once in the
         // scan's single task.
-        val docs = docsSrc(s, dir)
+        val docs = TextOps.docs(s, dir)
           .select(col("doc_id"), col("source"),
             graft.functions.ShingleSet(Words(cleanCol)).as("sh"))
           .persist()
@@ -205,34 +207,19 @@ object Dedup {
           .agg(count(lit(1)).as("ni"))
           .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n", "na"), "d1")
           .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "nb"), "d2")
-          .select(col("d1"), col("d2"),
-            floor(lit(10000) * col("ni") / (col("na") + col("nb") - col("ni")))
-              .cast("long").as("j_bp"))
+          .select(col("d1"), col("d2"), jaccardBp(col("ni"), col("na"), col("nb")).as("j_bp"))
           .filter(col("j_bp") >= 2000)
           .orderBy(col("d1"), col("d2"))
       },
-      Some(s"""WITH c AS (SELECT doc_id, source, $cleanSql AS clean FROM documents),
+      Some(s"""WITH c AS (SELECT doc_id, source, ${Cleaning.CleanTextSql} AS clean FROM documents),
               |w AS (SELECT doc_id, source,
-              |  list_filter(string_split(clean, ' '), t -> t <> '') AS w
+              |  ${Cleaning.WordsSql} AS w
               |  FROM c),
               |d AS (SELECT doc_id, source,
               |  list_distinct(list_transform(generate_series(1, len(w) - 2),
               |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
               |  FROM w WHERE len(w) >= 3),
-              |tok AS (SELECT doc_id, source, unnest(sh) AS g FROM d),
-              |sizes AS (SELECT doc_id, len(sh) AS n FROM d),
-              |inter AS (
-              |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS ni
-              |  FROM tok a JOIN tok b
-              |    ON a.g = b.g AND a.source = b.source AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2)
-              |SELECT d1, d2,
-              |  CAST((10000 * ni) // (sa.n + sb.n - ni) AS BIGINT) AS j_bp
-              |FROM inter
-              |JOIN sizes sa ON d1 = sa.doc_id
-              |JOIN sizes sb ON d2 = sb.doc_id
-              |WHERE (10000 * ni) // (sa.n + sb.n - ni) >= 2000
-              |ORDER BY d1, d2""".stripMargin),
+              |${jaccardSql("sh", "g", 2000)}""".stripMargin),
       headline = true),
 
     // ---- SimHash-16 fingerprint: per-word 31-bit hashes vote (weighted by
@@ -247,15 +234,11 @@ object Dedup {
         // co-located in the row's array. Voting ±1 per occurrence equals
         // Σ cnt·(±1) over distinct words exactly, so the fingerprint is
         // bit-identical (oracle-checked) and both Exchanges vanish. The
-        // size filter replicates explode's drop of token-less docs; it sits
-        // above a lazy cache, as in dedup_minhash_lsh, since below it
-        // Catalyst would push it under the fan-out exchange and clean every
-        // doc twice. SimHash16 of no words is 0, a legal fingerprint, so the
-        // filter cannot move onto the output instead.
-        docsSrc(s, dir)
-          .select(col("doc_id"), Words(cleanCol).as("w"))
-          .persist()
-          .filter(size(col("w")) > 0)
+        // filter replicates explode's drop of token-less docs. SimHash16 of
+        // no words is 0, a legal fingerprint, so the filter cannot move onto
+        // the output instead.
+        Tables.nonEmpty(TextOps.docs(s, dir).select(col("doc_id"), Words(cleanCol).as("w")),
+            "w")
           .select(col("doc_id"),
             graft.functions.SimHash16(col("w")).as("simhash16"))
           .orderBy(col("doc_id"))
@@ -268,10 +251,10 @@ object Dedup {
         val hashExpr = (0 until 16).map { j =>
           s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END"
         }.mkString(" + ")
-        s"""WITH c AS (SELECT doc_id, $cleanSql AS clean FROM documents),
+        s"""WITH c AS (SELECT doc_id, ${Cleaning.CleanTextSql} AS clean FROM documents),
            |tok AS (
            |  SELECT doc_id, word, count(*) AS cnt
-           |  FROM c, unnest(list_filter(string_split(clean, ' '), t -> t <> '')) AS u(word)
+           |  FROM c, unnest(${Cleaning.WordsSql}) AS u(word)
            |  GROUP BY 1, 2),
            |hashed AS (SELECT doc_id, cnt, ${wordHashSql("word")} AS wh FROM tok),
            |bits AS (SELECT doc_id,
@@ -299,13 +282,9 @@ object Dedup {
         // Eager materialization (OPTIMIZATION_r22.md) REVERTED with numbers:
         // accurate IMR stats flip the rerank joins to sort-merge — 7.4–9.5 s
         // lazy vs 14.9–32.8 s eager at the 10× fixture. Docs with fewer than
-        // 3 words (no shingle) are filtered above the cache: below it,
-        // Catalyst would push the filter under the fan-out exchange and
-        // clean every doc twice, once in the scan's single task.
-        val docs = docsSrc(s, dir)
-          .select(col("doc_id"), graft.functions.ShingleSet(Words(cleanCol)).as("sh"))
-          .persist()
-          .filter(size(col("sh")) > 0)
+        // 3 words (no shingle) are dropped.
+        val docs = Tables.nonEmpty(TextOps.docs(s, dir)
+          .select(col("doc_id"), graft.functions.ShingleSet(Words(cleanCol)).as("sh")), "sh")
         // 16 minhashes in ONE pass over each row's shingle array (native
         // MinHashSig; guide §2.4): the previous explode + strHash31 +
         // 16-min groupBy(doc_id) shuffled O(shingles) rows only to regroup
@@ -330,9 +309,7 @@ object Dedup {
             graft.functions.SortedIntersectSize(col("sh1"), col("sh2")).as("ni"),
             size(col("sh1")).cast("long").as("na"),
             size(col("sh2")).cast("long").as("nb"))
-          .select(col("d1"), col("d2"),
-            floor(lit(10000) * col("ni") / (col("na") + col("nb") - col("ni")))
-              .cast("long").as("j_bp"))
+          .select(col("d1"), col("d2"), jaccardBp(col("ni"), col("na"), col("nb")).as("j_bp"))
           .filter(col("j_bp") >= 2000)
           .orderBy(col("d1"), col("d2"))
       },

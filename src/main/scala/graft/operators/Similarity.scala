@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
 import graft.sources.Tables
+import graft.functions.QDot
 
 /** Similarity search over the `embeddings` fixture (vec_id, embedding
   * ARRAY<FLOAT> dim 64, label) — the LLM-pipeline ANN north star.
@@ -25,15 +26,28 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  /** Quantize ARRAY<FLOAT> → ARRAY<BIGINT> at 1e6 (native kernel
-    * EmbedOps.quantizeD; semantics = transform(c, x -> floor(double(x)·1e6))). */
-  private def qCol(c: Column): Column = graft.functions.QDot.quantize(c)
+  /** Rule 4 (object doc): the `keep` columns of the embeddings, the
+    * quantized vector `ql` (native QDot.quantize, floor(x·10⁶) as BIGINT)
+    * and its exact squared norm `nrm` (native QDot: Σ ql[i]²). */
+  private def quantized(s: SparkSession, dir: String, keep: Column*): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(keep :+ QDot.quantize(col("embedding")).as("ql"): _*)
+      .withColumn("nrm", QDot(col("ql"), col("ql")))
 
-  /** Exact integer dot product of two quantized vectors (native kernel
-    * EmbedOps.qdot; semantics = aggregate(zip_with(a, b, *), 0, +)). */
-  private def qDot(a: Column, b: Column): Column = graft.functions.QDot(a, b)
+  /** The exact 64-dim dot product of quantized vectors `a` and `b` in
+    * DuckDB SQL: the oracle's mirror of QDot. */
+  private def dotSql(a: String, b: String): String =
+    s"CAST(list_sum(list_transform(range(0, 64), i -> $a[i+1] * $b[i+1])) AS BIGINT)"
 
-  private val qSql = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
+  /** The oracle's mirror of [[quantized]]: CTE `e` (`keep` and `ql`), and
+    * CTE `n` (`keep`, `ql`, `nrm`, then `extra`). */
+  private def quantizedSql(keep: String, extra: String = ""): String =
+    s"""WITH e AS (SELECT $keep,
+       |  list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)) AS ql
+       |  FROM embeddings),
+       |n AS (SELECT $keep, ql,
+       |  ${dotSql("ql", "ql")} AS nrm$extra
+       |  FROM e)""".stripMargin
 
   /** Deterministic pseudo-random hyperplane weight in {-3..3}:
     * w(i,j) = ((i·2654435761 + j·40503) % 7) − 3. Same integer arithmetic in
@@ -68,14 +82,12 @@ object Similarity {
     Q(
       "sim_topk_bruteforce",
       (s, dir) => {
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), qCol(col("embedding")).as("ql"))
-          .withColumn("nrm", qDot(col("ql"), col("ql")))
+        val e = quantized(s, dir, col("vec_id"))
         val q = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), col("ql").as("qv"), col("nrm").as("qn"))
         val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            scoreBp(qDot(col("qv"), col("ql")), col("qn"), col("nrm")).as("score_bp"))
+            scoreBp(QDot(col("qv"), col("ql")), col("qn"), col("nrm")).as("score_bp"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(desc("score_bp"), asc("n_id"))
         scored.withColumn("rank", row_number().over(w))
@@ -83,15 +95,11 @@ object Similarity {
           .select(col("q_id"), col("rank"), col("n_id"), col("score_bp"))
           .orderBy(col("q_id"), col("rank"))
       },
-      Some(s"""WITH e AS (
-              |  SELECT vec_id, $qSql AS ql FROM embeddings),
-              |n AS (SELECT vec_id, ql,
-              |  CAST(list_sum(list_transform(range(0, 64), i -> ql[i+1] * ql[i+1])) AS BIGINT) AS nrm
-              |  FROM e),
+      Some(s"""${quantizedSql("vec_id")},
               |q AS (SELECT vec_id AS q_id, ql AS qv, nrm AS qn FROM n WHERE vec_id < 5),
               |scored AS (
               |  SELECT q_id, vec_id AS n_id,
-              |    CAST(list_sum(list_transform(range(0, 64), i -> qv[i+1] * ql[i+1])) AS BIGINT) AS dot,
+              |    ${dotSql("qv", "ql")} AS dot,
               |    qn AS na, nrm AS nb
               |  FROM n CROSS JOIN q WHERE vec_id <> q_id),
               |ranked AS (
@@ -109,24 +117,19 @@ object Similarity {
     Q(
       "sim_pairs_threshold",
       (s, dir) => {
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), col("label"), qCol(col("embedding")).as("ql"))
-          .withColumn("nrm", qDot(col("ql"), col("ql")))
+        val e = quantized(s, dir, col("vec_id"), col("label"))
         e.as("a").join(e.as("b"),
             col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
             col("a.label").as("label"),
-            scoreBp(qDot(col("a.ql"), col("b.ql")), col("a.nrm"), col("b.nrm")).as("score_bp"))
+            scoreBp(QDot(col("a.ql"), col("b.ql")), col("a.nrm"), col("b.nrm")).as("score_bp"))
           .filter(col("score_bp") >= 2500)
           .orderBy(col("v1"), col("v2"))
       },
-      Some(s"""WITH e AS (SELECT vec_id, label, $qSql AS ql FROM embeddings),
-              |n AS (SELECT vec_id, label, ql,
-              |  CAST(list_sum(list_transform(range(0, 64), i -> ql[i+1] * ql[i+1])) AS BIGINT) AS nrm
-              |  FROM e),
+      Some(s"""${quantizedSql("vec_id, label")},
               |pairs AS (
               |  SELECT a.vec_id AS v1, b.vec_id AS v2, a.label AS label,
-              |    CAST(list_sum(list_transform(range(0, 64), i -> a.ql[i+1] * b.ql[i+1])) AS BIGINT) AS dot,
+              |    ${dotSql("a.ql", "b.ql")} AS dot,
               |    a.nrm AS na, b.nrm AS nb
               |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id)
               |SELECT v1, v2, label, $scoreBpSql AS score_bp
@@ -149,26 +152,20 @@ object Similarity {
         // the r21 fanOut no longer pays (0.56 s plain vs 0.79 fanned median
         // at sf0.1; 10× fixture scans arrive ≥ cores partitions anyway), so
         // the scan is direct again — one less Exchange.
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), qCol(col("embedding")).as("ql"))
-          .withColumn("nrm", qDot(col("ql"), col("ql")))
-          .withColumn("bucket", graft.functions.QDot.lshBucket(col("ql")))
+        val e = quantized(s, dir, col("vec_id"))
+          .withColumn("bucket", QDot.lshBucket(col("ql")))
         e.as("a").join(e.as("b"),
             col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
             col("a.bucket").as("bucket"),
-            scoreBp(qDot(col("a.ql"), col("b.ql")), col("a.nrm"), col("b.nrm")).as("score_bp"))
+            scoreBp(QDot(col("a.ql"), col("b.ql")), col("a.nrm"), col("b.nrm")).as("score_bp"))
           .filter(col("score_bp") >= 0)
           .orderBy(col("v1"), col("v2"))
       },
-      Some(s"""WITH e AS (SELECT vec_id, $qSql AS ql FROM embeddings),
-              |n AS (SELECT vec_id, ql,
-              |  CAST(list_sum(list_transform(range(0, 64), i -> ql[i+1] * ql[i+1])) AS BIGINT) AS nrm,
-              |  CAST(${bucketSql("ql")} AS BIGINT) AS bucket
-              |  FROM e),
+      Some(s"""${quantizedSql("vec_id", s",\n  CAST(${bucketSql("ql")} AS BIGINT) AS bucket")},
               |pairs AS (
               |  SELECT a.vec_id AS v1, b.vec_id AS v2, a.bucket AS bucket,
-              |    CAST(list_sum(list_transform(range(0, 64), i -> a.ql[i+1] * b.ql[i+1])) AS BIGINT) AS dot,
+              |    ${dotSql("a.ql", "b.ql")} AS dot,
               |    a.nrm AS na, b.nrm AS nb
               |  FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
               |SELECT v1, v2, bucket, $scoreBpSql AS score_bp
@@ -193,10 +190,7 @@ object Similarity {
         // probe join — without the caches the scan+quantize chain runs ~3×
         // (guide §2.4 / §5). Values and partitioning are unchanged, so the
         // seeded fit is unchanged.
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), col("embedding"),
-            qCol(col("embedding")).as("ql"))
-          .withColumn("nrm", qDot(col("ql"), col("ql")))
+        val e = quantized(s, dir, col("vec_id"), col("embedding"))
           .withColumn("fv", array_to_vector(col("embedding").cast("array<double>")))
           .persist()
         val km = new KMeans().setK(16).setSeed(42L)
@@ -232,7 +226,7 @@ object Similarity {
           .join(broadcast(qDf), "q_id")
           .filter(col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("n_id"),
-            scoreBp(qDot(col("qv"), col("ql")), col("qn"), col("nrm")).as("score_bp"))
+            scoreBp(QDot(col("qv"), col("ql")), col("qn"), col("nrm")).as("score_bp"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 10)
           .select(col("q_id"), col("rank"), col("n_id"), col("score_bp"))

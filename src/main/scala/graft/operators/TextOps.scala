@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Q
 import graft.sources.Tables
-import graft.functions.{Cleaning, Words}
+import graft.functions.{Cleaning, TokenStats, VocabPositions, WordTfPairs, Words}
 
 /** The text-processing surface over the `documents` fixture: the reference's
   * preprocessing DAG (clean → tokenize → stopword-filter → word count → top-V
@@ -43,7 +43,7 @@ object TextOps {
 
   /** documents scan fanned out to every core (guide §2.2: the single-row-
     * group fixture plans as ONE scan task, serializing the regex chain). */
-  private def docs(s: SparkSession, dir: String): DataFrame =
+  private[operators] def docs(s: SparkSession, dir: String): DataFrame =
     Tables.fanOut(Tables.documents(s, dir), s"$dir/documents")
 
   private def docsWithTokens(s: SparkSession, dir: String): DataFrame =
@@ -53,13 +53,9 @@ object TextOps {
   private def tokenStream(s: SparkSession, dir: String): DataFrame =
     docsWithTokens(s, dir).select(col("doc_id"), explode(col("w")).as("word"))
 
-  /** Shared oracle mirror of the cleaning chain (single source of truth in
-    * Cleaning.CleanTextSql so the text_* and dedup_* oracles cannot drift). */
-  private val cleanSql: String = Cleaning.CleanTextSql
-
   private val tokSql: String =
     s"""WITH cleaned AS (
-       |  SELECT doc_id, $cleanSql AS clean FROM documents),
+       |  SELECT doc_id, ${Cleaning.CleanTextSql} AS clean FROM documents),
        |tok AS (
        |  SELECT doc_id, word
        |  FROM cleaned, unnest(string_split(clean, ' ')) AS u(word)
@@ -81,18 +77,85 @@ object TextOps {
       .withColumn("pos", (row_number().over(w) - 1).cast("long"))
   }
 
-  /** Vocab from per-doc token ARRAYS via per-row WordTfPairs + sum — same
-    * totals as counting the exploded stream (guide §2.3, same rewrite as
-    * text_wordcount: Σ over per-doc in-array counts = Σ over exploded
-    * occurrences), hence the same top-V under the same (cnt DESC, word ASC)
-    * tiebreak. The hash aggregate consumes one row per DISTINCT word per
-    * doc instead of one per token occurrence. */
+  /** The per-doc token arrays `w` as one (word, in-doc count `c0`) row per
+    * DISTINCT word per doc (per-row WordTfPairs), grouped by word. Summing
+    * `c0` gives the same totals as counting the exploded stream (guide
+    * §2.3: Σ over per-doc in-array counts = Σ over exploded occurrences),
+    * and the hash aggregate consumes one row per distinct word per doc
+    * instead of one per token occurrence. */
+  private def wordTf(docsTok: DataFrame): RelationalGroupedDataset =
+    docsTok
+      .select(explode(WordTfPairs(col("w"))).as("p"))
+      .select(col("p.word").as("word"), col("p.cnt").as("c0"))
+      .groupBy(col("word"))
+
+  /** The corpus word counts `word, cnt`. */
+  private def wordCounts(docsTok: DataFrame): DataFrame =
+    wordTf(docsTok).agg(sum(col("c0")).as("cnt"))
+
+  /** Vocab from per-doc token arrays: the top-V of [[wordCounts]] under the
+    * same (cnt DESC, word ASC) tiebreak as the exploded stream's. */
   private def vocabFromArrays(docsTok: DataFrame, v: Int = 100): DataFrame =
-    vocabFromCounts(
-      docsTok
-        .select(explode(graft.functions.WordTfPairs(col("w"))).as("p"))
-        .select(col("p.word").as("word"), col("p.cnt").as("c0"))
-        .groupBy(col("word")).agg(sum(col("c0")).as("cnt")), v)
+    vocabFromCounts(wordCounts(docsTok), v)
+
+  /** `docsWithTokens` persisted, and each doc's sorted positions in its
+    * top-100 vocabulary as a Column over that cache. The vocabulary is
+    * bounded driver state, collected here, so the positions are computable
+    * per row (native VocabPositions: one hash probe per token, as the hash
+    * join's): the explode, the broadcast hash join and the groupBy(doc_id)
+    * regroup Exchange all disappear from the plan (guide §2.4; equivalence
+    * in RowStatOps.vocabPositions' scaladoc, pinned by a ScalaCheck
+    * property and the unchanged DuckDB oracle). The clean→tokenize chain
+    * feeds both the vocab aggregate and the positions, hence the persist:
+    * the chain runs once per doc. The collect materializes the cache
+    * sequentially inside the (timed) query build, so there is no
+    * concurrent cache-build race (the lazy-persist + broadcast-join form
+    * was bimodal 2.2–8.1 s at the 10× fixture for that reason). */
+  private def vocabPositions(s: SparkSession, dir: String): (DataFrame, Column) = {
+    val docsTok = docsWithTokens(s, dir).persist()
+    val vocab = vocabFromArrays(docsTok).select(col("word"), col("pos"))
+      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+    (docsTok, VocabPositions(col("w"), vocab))
+  }
+
+  /** Native TokenStats over the single-space split of `clean`, next to the
+    * `keep` columns of `df`: the token count, the stopword count and the
+    * total token length, the first `names.size` of them named `names`. The
+    * counts attach to the row the text lives on, so no explode, regroup or
+    * Exchange is needed (guide §2.4). */
+  private def tokenStats(df: DataFrame, keep: Seq[String], clean: Column,
+      names: String*): DataFrame = {
+    val kept = keep.map(col)
+    df.select(kept :+ TokenStats(split(clean, " "), StopWords).as("st"): _*)
+      .select(kept ++ names.zipWithIndex.map { case (n, i) =>
+        element_at(col("st"), i + 1).as(n)
+      }: _*)
+  }
+
+  /** The oracles' mirror of [[tokenStats]]: CTE `cleaned` (`keep` and the
+    * cleaned text) and CTE `stats` (`statsKeep` and the counts named
+    * `names`, each cast to BIGINT when `cast`). */
+  private def tokenStatsSql(keep: String, statsKeep: String, names: Seq[String],
+      cast: Boolean = false): String = {
+    val counts = Seq(s"len(${Cleaning.WordsSql})",
+      s"len(list_filter(string_split(clean, ' '), t -> t IN ($swSqlList)))",
+      s"list_sum(list_transform(${Cleaning.WordsSql}, t -> len(t)))")
+      .zip(names).map { case (e, n) => (if (cast) s"CAST($e AS BIGINT)" else e) + s" AS $n" }
+    s"""WITH cleaned AS (
+       |  SELECT $keep, ${Cleaning.CleanTextSql} AS clean FROM documents),
+       |stats AS (
+       |  SELECT $statsKeep,
+       |    ${counts.mkString(",\n    ")}
+       |  FROM cleaned)""".stripMargin
+  }
+
+  /** Rule 2 (object doc): ⌊k·x/n⌋ as a BIGINT, and 0 where n is 0. */
+  private def bp(x: Column, n: Column, k: Int = 10000): Column =
+    when(n > 0, floor(lit(k) * x / n)).otherwise(0L).cast("long")
+
+  /** [[bp]]'s SQL twin over columns `x` and `n`. */
+  private def bpSql(x: String, n: String, k: Int = 10000): String =
+    s"CAST(CASE WHEN $n > 0 THEN ($k * $x) // $n ELSE 0 END AS BIGINT)"
 
   /** Standalone vocab path (text_vocab). */
   private def vocab(s: SparkSession, dir: String, v: Int = 100): DataFrame =
@@ -105,7 +168,7 @@ object TextOps {
       (s, dir) => docs(s, dir)
         .select(col("doc_id"), Cleaning.cleanText(col("text")).as("clean"))
         .orderBy(col("doc_id")),
-      Some(s"""SELECT doc_id, $cleanSql AS clean
+      Some(s"""SELECT doc_id, ${Cleaning.CleanTextSql} AS clean
               |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // ---- P1/P2/E2: tokenize + stopword filter + word-with-doc explode.
@@ -119,11 +182,7 @@ object TextOps {
     // reduceByKey(add) (py:43-48).
     Q(
       "text_wordcount",
-      (s, dir) => docsWithTokens(s, dir)
-        .select(explode(graft.functions.WordTfPairs(col("w"))).as("p"))
-        .select(col("p.word").as("word"), col("p.cnt").as("c0"))
-        .groupBy(col("word")).agg(sum(col("c0")).as("cnt"))
-        .orderBy(desc("cnt"), asc("word")),
+      (s, dir) => wordCounts(docsWithTokens(s, dir)).orderBy(desc("cnt"), asc("word")),
       Some(s"""$tokSql
               |SELECT word, count(*) AS cnt FROM tok
               |GROUP BY word ORDER BY cnt DESC, word ASC""".stripMargin),
@@ -142,26 +201,9 @@ object TextOps {
     Q(
       "text_doc_term",
       (s, dir) => {
-        // The clean→tokenize chain feeds BOTH the vocab aggregate and the
-        // encoding pass; persist it so the chain runs once per doc (guide
-        // §2.4). The vocab collect below materializes the cache SEQUENTIALLY
-        // inside this (timed) invocation, so there is no concurrent
-        // cache-build race (the lazy-persist + broadcast-join form was
-        // bimodal 2.2–8.1 s at the 10× fixture for that reason).
-        val docsTok = docsWithTokens(s, dir).persist()
-        // Bounded driver state — the top-100 vocab, the same V-bound the LDA
-        // pipeline's vocabulary array and sim_ivf's query set already
-        // collect. With it embedded, the per-doc position list is computable
-        // PER ROW (native VocabPositions: one hash probe per token, same as
-        // the hash join's) — the explode, the broadcast hash join and the
-        // groupBy(doc_id) regroup Exchange all disappear from the plan
-        // (guide §2.4; equivalence in RowStatOps.vocabPositions' scaladoc,
-        // pinned by a ScalaCheck property and the unchanged DuckDB oracle).
-        val vocab = vocabFromArrays(docsTok).select(col("word"), col("pos"))
-          .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+        val (docsTok, positions) = vocabPositions(s, dir)
         docsTok
-          .select(col("doc_id"),
-            graft.functions.VocabPositions(col("w"), vocab).as("ps"))
+          .select(col("doc_id"), positions.as("ps"))
           // The inner join's corpus shrink. PushDownPredicates substitutes
           // ps into the pushed filter, so the expression evaluates twice per
           // row (once for the size test, once for the projection) — two
@@ -187,19 +229,15 @@ object TextOps {
     Q(
       "text_vocab_coverage",
       (s, dir) => {
-        // Same shared-token persist + collected bounded vocab + per-row
-        // VocabPositions as text_doc_term. The left join kept every doc the
-        // explode produced (≥1 token), counting all tokens and the matched
-        // ones: per row that is size(w) and size(positions).
-        val docsTok = docsWithTokens(s, dir).persist()
-        val vocab = vocabFromArrays(docsTok).select(col("word"), col("pos"))
-          .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
+        // The left join kept every doc the explode produced (≥1 token),
+        // counting all tokens and the matched ones: per row that is size(w)
+        // and size(positions).
+        val (docsTok, positions) = vocabPositions(s, dir)
         docsTok
           .filter(size(col("w")) > 0) // explode dropped token-less docs
           .select(col("doc_id"),
             size(col("w")).cast("long").as("n_tokens"),
-            size(graft.functions.VocabPositions(col("w"), vocab))
-              .cast("long").as("n_invocab"))
+            size(positions).cast("long").as("n_invocab"))
           .orderBy(col("doc_id"))
       },
       Some(s"""$tokSql, $vocabSqlCte
@@ -214,44 +252,19 @@ object TextOps {
     // lambdas would re-evaluate the chain per element — see ShingleOps).
     Q(
       "text_quality",
-      (s, dir) => {
-        // Per-row native TokenStats (guide §2.4): the previous explode →
-        // groupBy(doc_id, n_chars) conditional sums regrouped values
-        // already co-located in the row. Identical integer counts over the
-        // same split array; the explode + hash-agg + Exchange disappear.
-        docs(s, dir).select(
-            col("doc_id"), col("n_chars"),
-            graft.functions.TokenStats(
-              split(Cleaning.cleanText(col("text")), " "), StopWords).as("st"))
-          .select(col("doc_id"), col("n_chars"),
-            element_at(col("st"), 1).as("n_tokens"),
-            element_at(col("st"), 2).as("n_stop"),
-            element_at(col("st"), 3).as("tot_len"))
+      (s, dir) =>
+        tokenStats(docs(s, dir), Seq("doc_id", "n_chars"), Cleaning.cleanText(col("text")),
+            "n_tokens", "n_stop", "tot_len")
           .select(col("doc_id"), col("n_chars"), col("n_tokens"), col("n_stop"),
-            when(col("n_tokens") > 0,
-              floor(lit(10000) * col("n_stop") / col("n_tokens"))).otherwise(0L)
-              .cast("long").as("stop_bp"),
-            when(col("n_tokens") > 0,
-              floor(lit(100) * col("tot_len") / col("n_tokens"))).otherwise(0L)
-              .cast("long").as("avg_len_c"))
-          .orderBy(col("doc_id"))
-      },
-      Some(s"""WITH cleaned AS (
-              |  SELECT doc_id, n_chars, $cleanSql AS clean FROM documents),
-              |stats AS (
-              |  SELECT doc_id, n_chars,
-              |    len(list_filter(string_split(clean, ' '), t -> t <> '')) AS n_tokens,
-              |    len(list_filter(string_split(clean, ' '),
-              |        t -> t IN ($swSqlList))) AS n_stop,
-              |    list_sum(list_transform(list_filter(string_split(clean, ' '),
-              |        t -> t <> ''), t -> len(t))) AS tot_len
-              |  FROM cleaned)
+            bp(col("n_stop"), col("n_tokens")).as("stop_bp"),
+            bp(col("tot_len"), col("n_tokens"), 100).as("avg_len_c"))
+          .orderBy(col("doc_id")),
+      Some(s"""${tokenStatsSql("doc_id, n_chars", "doc_id, n_chars",
+                Seq("n_tokens", "n_stop", "tot_len"))}
               |SELECT doc_id, n_chars, CAST(n_tokens AS BIGINT) AS n_tokens,
               |  CAST(n_stop AS BIGINT) AS n_stop,
-              |  CAST(CASE WHEN n_tokens > 0 THEN (10000 * n_stop) // n_tokens
-              |       ELSE 0 END AS BIGINT) AS stop_bp,
-              |  CAST(CASE WHEN n_tokens > 0 THEN (100 * tot_len) // n_tokens
-              |       ELSE 0 END AS BIGINT) AS avg_len_c
+              |  ${bpSql("n_stop", "n_tokens")} AS stop_bp,
+              |  ${bpSql("tot_len", "n_tokens", 100)} AS avg_len_c
               |FROM stats ORDER BY doc_id""".stripMargin)),
 
     // ---- Language ID: marker-word heuristic (english function-word density
@@ -260,33 +273,17 @@ object TextOps {
     Q(
       "text_langid",
       (s, dir) => {
-        // Per-row native TokenStats — same rewrite as text_quality: the
-        // explode → groupBy(doc_id, lang) regroup and its Exchange go away.
-        val stats = docs(s, dir).select(
-            col("doc_id"), col("lang"),
-            graft.functions.TokenStats(
-              split(Cleaning.cleanText(col("text")), " "), StopWords).as("st"))
-          .select(col("doc_id"), col("lang"),
-            element_at(col("st"), 1).as("n_all"),
-            element_at(col("st"), 2).as("n_en"))
-        val bp = when(col("n_all") > 0,
-          floor(lit(10000) * col("n_en") / col("n_all"))).otherwise(0L).cast("long")
-        stats.select(col("doc_id"), col("lang").as("lang_label"),
-            bp.as("en_marker_bp"),
-            when(bp >= 400, lit("en")).otherwise(lit("und")).as("lang_pred"))
+        val enBp = bp(col("n_en"), col("n_all"))
+        tokenStats(docs(s, dir), Seq("doc_id", "lang"), Cleaning.cleanText(col("text")),
+            "n_all", "n_en")
+          .select(col("doc_id"), col("lang").as("lang_label"),
+            enBp.as("en_marker_bp"),
+            when(enBp >= 400, lit("en")).otherwise(lit("und")).as("lang_pred"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH cleaned AS (
-              |  SELECT doc_id, lang, $cleanSql AS clean FROM documents),
-              |stats AS (
-              |  SELECT doc_id, lang,
-              |    len(list_filter(string_split(clean, ' '), t -> t <> '')) AS n_all,
-              |    len(list_filter(string_split(clean, ' '),
-              |        t -> t IN ($swSqlList))) AS n_en
-              |  FROM cleaned)
+      Some(s"""${tokenStatsSql("doc_id, lang", "doc_id, lang", Seq("n_all", "n_en"))}
               |SELECT doc_id, lang AS lang_label,
-              |  CAST(CASE WHEN n_all > 0 THEN (10000 * n_en) // n_all ELSE 0 END
-              |    AS BIGINT) AS en_marker_bp,
+              |  ${bpSql("n_en", "n_all")} AS en_marker_bp,
               |  CASE WHEN n_all > 0 AND (10000 * n_en) // n_all >= 400
               |    THEN 'en' ELSE 'und' END AS lang_pred
               |FROM stats ORDER BY doc_id""".stripMargin)),
@@ -326,11 +323,8 @@ object TextOps {
       // word per doc makes df a plain count(*) (pairs are unique per doc)
       // and cf a sum of in-doc counts — same integers, one plain
       // partial+final aggregate, no Expand.
-      (s, dir) => docsWithTokens(s, dir)
-        .select(explode(graft.functions.WordTfPairs(col("w"))).as("p"))
-        .select(col("p.word").as("word"), col("p.cnt").as("cnt"))
-        .groupBy(col("word"))
-        .agg(count(lit(1)).as("df"), sum(col("cnt")).as("cf"))
+      (s, dir) => wordTf(docsWithTokens(s, dir))
+        .agg(count(lit(1)).as("df"), sum(col("c0")).as("cf"))
         .orderBy(desc("df"), asc("word")),
       Some(s"""$tokSql
               |SELECT word, count(DISTINCT doc_id) AS df, count(*) AS cf
@@ -347,7 +341,7 @@ object TextOps {
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("word"))
         .orderBy(col("doc_id"), col("pos")),
       Some(s"""WITH cleaned AS (
-              |  SELECT doc_id, $cleanSql AS clean FROM documents WHERE doc_id < 50),
+              |  SELECT doc_id, ${Cleaning.CleanTextSql} AS clean FROM documents WHERE doc_id < 50),
               |d AS (SELECT doc_id,
               |  list_filter(string_split(clean, ' '),
               |    t -> t <> '' AND t NOT IN ($swSqlList)) AS w
@@ -425,17 +419,10 @@ object TextOps {
         // hash-aggregate, the first(clean) carry and the regroup Exchange
         // all disappear. CollapseProject will not inline the non-cheap
         // clean chain into both uses, so it still runs once per row.
-        val stats = docs(s, dir)
+        val cleaned = docs(s, dir)
           .select(col("doc_id"), Cleaning.cleanText(col("text")).as("clean"))
-          .select(col("doc_id"), col("clean"),
-            graft.functions.TokenStats(split(col("clean"), " "), StopWords).as("st"))
-          .select(col("doc_id"), col("clean"),
-            element_at(col("st"), 1).as("n_tokens"),
-            element_at(col("st"), 2).as("n_stop"))
-          .withColumn("stop_bp",
-            when(col("n_tokens") > 0,
-              floor(lit(10000) * col("n_stop") / col("n_tokens"))).otherwise(0L)
-              .cast("long"))
+        val stats = tokenStats(cleaned, Seq("doc_id", "clean"), col("clean"), "n_tokens", "n_stop")
+          .withColumn("stop_bp", bp(col("n_stop"), col("n_tokens")))
           .withColumn("doc_md5", md5(col("clean").cast("binary")))
         val w = Window.partitionBy(col("doc_md5"))
         stats
@@ -445,18 +432,11 @@ object TextOps {
           .select(col("doc_id"), col("n_tokens"), col("stop_bp"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH cleaned AS (
-              |  SELECT doc_id, $cleanSql AS clean FROM documents),
-              |stats AS (
-              |  SELECT doc_id, clean,
-              |    CAST(len(list_filter(string_split(clean, ' '), t -> t <> '')) AS BIGINT) AS n_tokens,
-              |    CAST(len(list_filter(string_split(clean, ' '),
-              |      t -> t IN ($swSqlList))) AS BIGINT) AS n_stop
-              |  FROM cleaned),
+      Some(s"""${tokenStatsSql("doc_id", "doc_id, clean", Seq("n_tokens", "n_stop"),
+                cast = true)},
               |scored AS (
               |  SELECT doc_id, md5(clean) AS doc_md5, n_tokens,
-              |    CAST(CASE WHEN n_tokens > 0 THEN (10000 * n_stop) // n_tokens
-              |      ELSE 0 END AS BIGINT) AS stop_bp
+              |    ${bpSql("n_stop", "n_tokens")} AS stop_bp
               |  FROM stats),
               |canon AS (
               |  SELECT doc_id, n_tokens, stop_bp,
@@ -495,10 +475,10 @@ object TextOps {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH cleaned AS (
-              |  SELECT doc_id, $cleanSql AS clean FROM documents),
+              |  SELECT doc_id, ${Cleaning.CleanTextSql} AS clean FROM documents),
               |words AS (
               |  SELECT doc_id, md5(clean) AS doc_md5,
-              |    list_filter(string_split(clean, ' '), t -> t <> '') AS w
+              |    ${Cleaning.WordsSql} AS w
               |  FROM cleaned),
               |shingles AS (
               |  SELECT doc_id, doc_md5,

@@ -115,6 +115,19 @@ object Tables {
     if (parts < target) df.repartition(target) else df
   }
 
+  /** The rows of `df` whose array column `c` is not empty, over a lazy
+    * cache of `df`. The filter sits above the cache on purpose: without it
+    * Catalyst pushes the filter below the projection that computes `c`,
+    * inlining `c`'s expression (the cleaning chain, for the text columns)
+    * into it, so every row computes `c` twice, and below a [[fanOut]]
+    * exchange that second copy runs in the scan's single task. The cache
+    * stays for the caller's action (the Catalog's cache-hygiene contract
+    * drops it). */
+  def nonEmpty(df: DataFrame, c: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, size}
+    df.persist().filter(size(col(c)) > 0)
+  }
+
   /** CSV reader with an explicit schema — never infer in production paths
     * (SURVEY.md §1.3). Quote-aware: fixes the reference's naive split(',')
     * (LDATopicModelingWithGibbs.py:31) which breaks on text containing commas.

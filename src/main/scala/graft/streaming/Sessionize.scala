@@ -31,7 +31,8 @@ object Sessionize {
 
   /** Full microsecond precision: getTime is ms-truncated, the sub-ms part
     * lives in getNanos — dropping it would disagree with the SQL twin's
-    * unix_micros at exact-gap boundaries. */
+    * unix_micros at exact-gap boundaries, and with its `ORDER BY ts` on
+    * events in the same millisecond. */
   private def micros(t: Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
 
@@ -40,7 +41,7 @@ object Sessionize {
     * group arrives complete (state starts empty, final session emitted). */
   def sessionizeGroup(gapSec: Long, emitOpen: Boolean)(
       user: Long, rows: Iterator[Event], state: GroupState[SessionState]): Iterator[Session] = {
-    val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+    val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
     val out = Seq.newBuilder[Session]
     var st = state.getOption.orNull
     for (e <- sorted) {

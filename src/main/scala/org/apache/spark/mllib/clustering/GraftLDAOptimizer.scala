@@ -28,6 +28,12 @@ import org.apache.spark.util.random.PoissonSampler
   * `updateAlpha` and `getLDAModel` step for step, drawing the same random
   * stream: on a one-partition input the model equals `LDA.run`'s bit for
   * bit (LdaSpec checks it).
+  *
+  * Only k, the iteration count and the seed vary. The other settings are
+  * the ones `ml.clustering.LDA` passes MLlib by default, fixed here: τ0
+  * 1024, κ 0.51, minibatch fraction 0.05 and an optimized doc
+  * concentration, with α = β = 1/k, the reference's coupling (py:98-100;
+  * SURVEY §7.5.6).
   */
 object GraftLDAOptimizer {
 
@@ -35,34 +41,24 @@ object GraftLDAOptimizer {
     * replacement (`RDD.sample(true, …)`, a [[PoissonSampler]]): neither has
     * a getter, and graft never changes them. */
   private val GammaShape = 100.0
+  private val Tau0 = 1024.0
+  private val Kappa = 0.51
+  private val MiniBatchFraction = 0.05
 
   /** One partition's part of an iteration: its docs, the docs it sampled
     * (with repeats), the non-empty ones among those, their topic-word
-    * statistics, and the sum of their E[log θ] when α is optimized. */
+    * statistics, and the sum of their E[log θ]. */
   private final case class Part(docs: Long, sampled: Long, nonEmpty: Long,
-      stat: BDM[Double], logphat: Option[BDV[Double]])
+      stat: BDM[Double], logphat: BDV[Double])
 
-  /** `lda.run(docs)` for an `lda` with an [[OnlineLDAOptimizer]], given the
-    * length of `docs`' vectors (`initialize` reads it with a `first` job).
-    * The corpus size comes from the first iteration's job. */
-  def run(lda: LDA, docs: RDD[(Long, Vector)], vocabSize: Int): LocalLDAModel = {
-    val opt = lda.getOptimizer.asInstanceOf[OnlineLDAOptimizer]
-    val k = lda.getK
-    val fraction = opt.getMiniBatchFraction
-    val optimizeAlpha = opt.getOptimizeDocConcentration
-    val docConcentration = lda.getAsymmetricDocConcentration
-    var alpha =
-      if (docConcentration.size == 1) {
-        val a0 = if (docConcentration(0) == -1) 1.0 / k else docConcentration(0)
-        require(a0 >= 0, s"all entries in alpha must be >=0, got: $a0")
-        Vectors.dense(Array.fill(k)(a0))
-      } else {
-        require(docConcentration.size == k && docConcentration.toArray.forall(_ >= 0),
-          s"alpha must have length k and entries >= 0, got: $docConcentration")
-        docConcentration
-      }
-    val eta = if (lda.getTopicConcentration == -1) 1.0 / k else lda.getTopicConcentration
-    val random = new Random(lda.getSeed)
+  /** `LDA.run(docs)` with k topics, `maxIter` iterations and `seed`, given
+    * the length of `docs`' vectors (`initialize` reads it with a `first`
+    * job). The corpus size comes from the first iteration's job. */
+  def run(docs: RDD[(Long, Vector)], vocabSize: Int, k: Int, maxIter: Int,
+      seed: Long): LocalLDAModel = {
+    var alpha = Vectors.dense(Array.fill(k)(1.0 / k))
+    val eta = 1.0 / k
+    val random = new Random(seed)
     val lambda = gammaMatrix(k, vocabSize, random)
     var iteration = 0
     var corpusSize = -1L
@@ -72,10 +68,9 @@ object GraftLDAOptimizer {
     // next draw: the following sample seed, or the model's seed.
     var drawn: Option[Long] = None
     def draw(): Long = { val s = drawn.getOrElse(random.nextLong()); drawn = None; s }
-    def rho(): Double = math.pow(opt.getTau0 + iteration, -opt.getKappa)
+    def rho(): Double = math.pow(Tau0 + iteration, -Kappa)
 
-    if (lda.getMaxIterations == 0 && docs.isEmpty()) emptyCorpus()
-    for (_ <- 1 to lda.getMaxIterations) {
+    for (_ <- 1 to maxIter) {
       // `RDD.sample`'s per-partition seeds, as `PartitionwiseSampledRDD` draws them
       val sampleRandom = new Random(draw())
       val sampleSeeds = Array.fill(docs.partitions.length)(sampleRandom.nextLong())
@@ -85,11 +80,11 @@ object GraftLDAOptimizer {
       val parts = docs.sparkContext.runJob(docs,
         (ctx: TaskContext, it: Iterator[(Long, Vector)]) => {
           val index = ctx.partitionId()
-          val sampler = new PoissonSampler[(Long, Vector)](fraction)
+          val sampler = new PoissonSampler[(Long, Vector)](MiniBatchFraction)
           sampler.setSeed(sampleSeeds(index))
           var n, sampled, nonEmpty = 0L
           val stat = BDM.zeros[Double](k, vocabSize)
-          val logphat = if (optimizeAlpha) Some(BDV.zeros[Double](k)) else None
+          val logphat = BDV.zeros[Double](k)
           sampler.sample(it.map { d => n += 1; d }).foreach { case (_, termCounts) =>
             sampled += 1
             if (termCounts.numNonzeros > 0) {
@@ -97,7 +92,7 @@ object GraftLDAOptimizer {
               val (gammad, sstats, ids) = OnlineLDAOptimizer.variationalTopicInference(
                 termCounts, expElogbeta, alphaB, GammaShape, k, seed + index)
               stat(::, ids) := stat(::, ids) + sstats
-              logphat.foreach(_ += LDAUtils.dirichletExpectation(gammad))
+              logphat += LDAUtils.dirichletExpectation(gammad)
             }
           }
           Part(n, sampled, nonEmpty, stat, logphat)
@@ -112,20 +107,18 @@ object GraftLDAOptimizer {
         val nonEmptyDocsN = parts.map(_.nonEmpty).sum
         if (nonEmptyDocsN > 0) {
           val statsSum = BDM.zeros[Double](k, vocabSize)
-          val logphatSum = if (optimizeAlpha) Some(BDV.zeros[Double](k)) else None
+          val logphat = BDV.zeros[Double](k)
           parts.foreach { p =>
             statsSum += p.stat
-            logphatSum.foreach(_ += p.logphat.get)
+            logphat += p.logphat
           }
           // updateLambda, with batchSize = ceil(fraction · corpusSize)
-          val batchSize = (fraction * corpusSize).ceil.toInt
+          val batchSize = (MiniBatchFraction * corpusSize).ceil.toInt
           val weight = rho()
           lambda := (1 - weight) * lambda +
             weight * ((statsSum *:* expElogbeta.t) * (corpusSize.toDouble / batchSize.toDouble) + eta)
-          logphatSum.foreach { logphat =>
-            logphat /= nonEmptyDocsN.toDouble
-            alpha = updatedAlpha(alpha, logphat, nonEmptyDocsN.toDouble, rho())
-          }
+          logphat /= nonEmptyDocsN.toDouble
+          alpha = updatedAlpha(alpha, logphat, nonEmptyDocsN.toDouble, rho())
         }
       }
     }

@@ -113,6 +113,27 @@ class CleaningSpec extends SparkSpec {
     assert(r.getString(4) == "abc xy")
     assert(r.getSeq[Long](5) == Seq(100000L, -2000001L, 0L))
   }
+
+  test("GraftExtensions injects the five functions at session build time") {
+    import org.apache.spark.sql.SparkSession
+    graft.functions.GraftFunctions.registerAll(spark)
+    val q = """SELECT qdot(array(2L, 3L), array(5L, 7L)) AS d,
+              |  quantize_vec(array(CAST(0.5 AS FLOAT), CAST(-1.25 AS FLOAT),
+              |    CAST(0.1 AS DOUBLE), CAST(-2.0000005 AS DOUBLE))) AS q""".stripMargin
+    val registered = spark.sql(q).collect().toSeq
+    val built = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions).create()
+    try {
+      assert(built ne spark)
+      graft.functions.GraftFunctions.all.foreach { case (name, _, _) =>
+        assert(built.catalog.functionExists(name), name)
+      }
+      assert(built.sql(q).collect().toSeq == registered)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+  }
 }
 
 /** The cleaning suite in Spark built-ins only: the formulations of record

@@ -6,7 +6,8 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.{HashPartitioner, JobLog}
 import org.apache.spark.ml.clustering.LDA
 import org.apache.spark.ml.feature.CountVectorizer
-import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LocalLDAModel}
+import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LocalLDAModel, OnlineLDAOptimizer}
+import org.apache.spark.mllib.clustering.{LDA => MllibLDA}
 import org.apache.spark.mllib.linalg.{Vector, Vectors}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Row
@@ -129,7 +130,7 @@ class LdaSpec extends SparkSpec {
     * partition, and their length. */
   private def sf0001Training(): (RDD[(Long, Vector)], Int) = {
     val docs = LdaPipeline.tokenPairs(LdaPipeline.preprocess(Tables.documents(spark, sf0001)))
-    val vocab = LdaPipeline.vocabulary(docs, 1000)
+    val vocab = LdaPipeline.vocabulary(docs, 1000).map(_._1)
     val training = LdaPipeline.vectors(LdaPipeline.encode(docs, vocab), vocab.length)
       .coalesce(1).persist()
     training.count()
@@ -137,11 +138,21 @@ class LdaSpec extends SparkSpec {
     (training, vocab.length)
   }
 
+  /** MLlib's `LDA` with GraftLDAOptimizer's fixed settings: the reference
+    * whose `run` the optimizer repeats. */
+  private def mllibLda(k: Int, maxIter: Int, seed: Long): MllibLDA =
+    new MllibLDA().setK(k).setMaxIterations(maxIter).setSeed(seed)
+      .setDocConcentration(1.0 / k).setTopicConcentration(1.0 / k)
+      .setOptimizer(new OnlineLDAOptimizer().setTau0(1024).setKappa(0.51)
+        .setMiniBatchFraction(0.05).setOptimizeDocConcentration(true))
+
+  private def reference(k: Int, maxIter: Int, seed: Long, docs: RDD[(Long, Vector)]) =
+    mllibLda(k, maxIter, seed).run(docs).asInstanceOf[LocalLDAModel]
+
   test("on one partition the one-job-per-iteration fit equals LDA.run's bit for bit") {
     val (training, v) = sf0001Training()
-    val lda = LdaPipeline.lda(numTopics = 5, maxIter = 10, seed = 42L)
-    val model = GraftLDAOptimizer.run(lda, training, v)
-    assertSameModel(model, lda.run(training).asInstanceOf[LocalLDAModel], training)
+    val model = GraftLDAOptimizer.run(training, v, k = 5, maxIter = 10, seed = 42L)
+    assertSameModel(model, reference(5, 10, 42L, training), training)
     training.unpersist()
   }
 
@@ -157,27 +168,26 @@ class LdaSpec extends SparkSpec {
     }
     val training = spark.sparkContext.parallelize(rows, 1).persist()
     Seq(1, 2, 3, 5, 8, 13, 21, 34).foreach { n =>
-      val lda = LdaPipeline.lda(numTopics = 3, maxIter = n, seed = 7L)
-      assertSameModel(GraftLDAOptimizer.run(lda, training, 6),
-        lda.run(training).asInstanceOf[LocalLDAModel], training)
+      assertSameModel(GraftLDAOptimizer.run(training, 6, k = 3, maxIter = n, seed = 7L),
+        reference(3, n, 7L, training), training)
     }
     training.unpersist()
     val empty = spark.sparkContext.parallelize(Seq.empty[(Long, Vector)], 1)
-    val lda = LdaPipeline.lda(numTopics = 3, maxIter = 2, seed = 7L)
-    intercept[UnsupportedOperationException](lda.run(empty))
-    intercept[UnsupportedOperationException](GraftLDAOptimizer.run(lda, empty, 6))
+    intercept[UnsupportedOperationException](reference(3, 2, 7L, empty))
+    intercept[UnsupportedOperationException](
+      GraftLDAOptimizer.run(empty, 6, k = 3, maxIter = 2, seed = 7L))
   }
 
   test("a fit of maxIter N launches N jobs, filed under the optimizer's call site") {
     val (training, v) = sf0001Training()
-    val lda = LdaPipeline.lda(numTopics = 5, maxIter = 7, seed = 42L)
-    val (_, jobs) = JobLog(spark.sparkContext)(GraftLDAOptimizer.run(lda, training, v))
+    val (_, jobs) = JobLog(spark.sparkContext)(
+      GraftLDAOptimizer.run(training, v, k = 5, maxIter = 7, seed = 42L))
     // LDA.run: count, first, and an isEmpty probe + a treeAggregate per iteration
-    val (_, reference) = JobLog(spark.sparkContext)(lda.run(training))
+    val (_, referenceJobs) = JobLog(spark.sparkContext)(mllibLda(5, 7, 42L).run(training))
     training.unpersist()
     assert(jobs.size == 7)
     assert(jobs.forall(_.contains("GraftLDAOptimizer$.run")))
-    assert(reference.size == 2 * 7 + 2)
+    assert(referenceJobs.size == 2 * 7 + 2)
   }
 
   test("a fit on 4 hash partitions gives the same lda_topics rows in 10 runs") {
@@ -185,7 +195,7 @@ class LdaSpec extends SparkSpec {
     // order their tasks complete in.
     val docs = LdaPipeline.tokenPairs(LdaPipeline.preprocess(Tables.documents(spark, sf001)))
       .partitionBy(new HashPartitioner(4)).persist()
-    val vocab = LdaPipeline.vocabulary(docs, 1000)
+    val vocab = LdaPipeline.vocabulary(docs, 1000).map(_._1)
     spark.sharedState.cacheManager.clearCache()
     val runs = (1 to 10).map(_ =>
       LdaPipeline.topics(docs, vocab, numTopics = 5, maxIter = 10, topWords = 20, seed = 42L))

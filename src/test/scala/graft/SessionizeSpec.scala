@@ -26,6 +26,28 @@ class SessionizeSpec extends SparkSpec {
     assert(stateful.toSeq == sql.toSeq)
   }
 
+  test("events within one millisecond are ordered by their microseconds, as in SQL") {
+    // e3 is 1,800 s − 100 µs after e1, the latest earlier event, so one
+    // session; a millisecond sort keeps e1 before e2, measures e3 from e2
+    // and splits.
+    val dir = java.nio.file.Files.createTempDirectory("graft-sessions")
+    try {
+      Seq((1L, "00:00:00.000400"), (2L, "00:00:00.000100"), (3L, "00:30:00.000300"))
+        .toDF("event_id", "t")
+        .select(col("event_id"),
+          concat(lit("2024-01-01 "), col("t")).cast("timestamp_ntz").as("ts"),
+          lit(7L).as("user_id"), lit("click").as("event_type"), lit(1.0).as("value"),
+          lit("{}").as("props"))
+        .coalesce(1).write.parquet(s"$dir/events.parquet")
+      val stateful = Sessionize.sessionizeBatch(Tables.events(spark, dir.toString).as[Event])
+        .collect().toSeq.map(s => (s.user_id, s.n_events))
+      val sql = Catalog.byName("events_sessions").run(spark, dir.toString).collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(stateful == Seq((7L, 3L)))
+      assert(sql == Seq((7L, 1L, 3L)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("streaming sessionizer closes sessions via event-time timeout") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
