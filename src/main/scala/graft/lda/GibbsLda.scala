@@ -25,9 +25,11 @@ import graft.sources.Tables
   * updates, so the whole fit is reproducible under any partitioning.
   *
   * Scale posture: doc states (positions + topics) stay partitioned across
-  * executors in a persisted RDD, serialized ([[Cached]]). Each sweep is
-  * ONE Spark job: a mapPartitions that samples against a broadcast Φ copy
-  * (AD-LDA) and writes the new states to the cache, fused with
+  * executors in a persisted RDD, one array of decoded doc states per
+  * partition ([[Cached]]), so a task's heap bounds a partition's size.
+  * Each sweep is ONE Spark job: a map over each partition's array that
+  * samples against a broadcast Φ copy (AD-LDA) and writes the new states
+  * to the cache, fused with
   * [[countPhi]]'s per-task dense T×V count; the driver sums the counts in
   * partition order, which rebuilds the exact global counts. The dense
   * per-task array is the same size as the broadcast Φ every task already
@@ -39,39 +41,44 @@ object GibbsLda {
 
   final case class DocState(docId: Long, words: Array[Int], topics: Array[Int])
 
-  /** Storage of the doc-state caches: serialized. Spark sizes a
-    * deserialized block while it unrolls it, by walking the object graph of
-    * sampled rows (`SizeEstimator`), and these caches hold a DocState and
-    * two arrays per doc. A serialized block is sized by its byte count. Each
-    * cache is written once and read back once (by the next sweep), so one
-    * deserialization per read costs less than the walks did: with this and
-    * the native word split, SizeEstimator fell from 30% to 16% of the
-    * executor CPU samples of topic_model's warm passes (JFR, 4-core x86 VM).
-    * The corpus itself is [[LdaPipeline.preprocess]]'s DataFrame cache. */
-  private val Cached = StorageLevel.MEMORY_AND_DISK_SER
+  /** Storage of the doc-state caches: deserialized, one array of DocStates
+    * per partition ([[LdaPipeline.blocks]]). While Spark unrolls a deserialized block it
+    * re-sizes the growing buffer of its elements by walking their object
+    * graphs (`SizeEstimator`), and a DocState holds two arrays; a block of
+    * one array is sized from a sample of its elements. No DocState is
+    * serialized or deserialized: each cache is written once and read back
+    * once, by the next sweep, as the same objects. The corpus itself is
+    * [[LdaPipeline.preprocess]]'s DataFrame cache. */
+  private val Cached = StorageLevel.MEMORY_AND_DISK
 
+  /** A fit: Φ, n_z and the vocabulary on the driver, and the cached doc
+    * states, one array per partition (`blocks`). [[unpersist]] drops the
+    * cache; `docs` is an uncached view of it. */
   final case class GibbsModel(
       phi: Array[Array[Long]], // T × V topic-word counts
       nz: Array[Long],         // T topic totals
-      docs: RDD[DocState],
-      vocab: Array[String])
+      blocks: RDD[Array[DocState]],
+      vocab: Array[String]) {
+    lazy val docs: RDD[DocState] = blocks.flatMap(_.iterator)
+    def unpersist(): Unit = blocks.unpersist()
+  }
 
   /** Exact topic-word counts: each task counts its docs into a dense T×V
     * array, and the driver sums the arrays in partition order — one plain
     * `runJob`, the call site the benchmark attributes Gibbs sweeps to. The
     * `(TaskContext, Iterator)` form is the one `runJob` does not wrap in a
     * second closure to clean. */
-  private[graft] def countPhi(docs: RDD[DocState], numTopics: Int, vocabSize: Int):
+  private[graft] def countPhi(docs: RDD[Array[DocState]], numTopics: Int, vocabSize: Int):
       (Array[Array[Long]], Array[Long]) = {
-    val flat = docs.sparkContext.runJob(docs, (_: TaskContext, it: Iterator[DocState]) => {
+    val flat = docs.sparkContext.runJob(docs, (_: TaskContext, it: Iterator[Array[DocState]]) => {
       val c = new Array[Long](numTopics * vocabSize)
-      it.foreach { d =>
+      it.foreach(_.foreach { d =>
         var j = 0
         while (j < d.words.length) {
           c(d.topics(j) * vocabSize + d.words(j)) += 1
           j += 1
         }
-      }
+      })
       c
     }).reduce { (a, b) =>
       var i = 0
@@ -84,46 +91,48 @@ object GibbsLda {
   }
 
   /** One full-corpus sweep: sample every word slot of every doc. */
-  private def sweep(docs: RDD[DocState], phi: Array[Array[Long]],
+  private def sweep(docs: RDD[Array[DocState]], phi: Array[Array[Long]],
       nz: Array[Long], numTopics: Int, vocabSize: Int, alpha: Double,
-      beta: Double, iter: Int, seed: Long): RDD[DocState] = {
+      beta: Double, iter: Int, seed: Long): RDD[Array[DocState]] = {
     val bcPhi = docs.sparkContext.broadcast(phi)
     val bcNz = docs.sparkContext.broadcast(nz)
-    docs.mapPartitions { it =>
+    docs.map { block =>
       val gPhi = bcPhi.value
       val gNz = bcNz.value
-      it.map { d =>
-        // Per-DOC sparse Φ delta (not per-partition): each doc sees the
+      block.map { d =>
+        // Per-DOC Φ delta (not per-partition): each doc sees the
         // sweep-start global counts plus only its OWN in-flight updates, so
         // the sampled assignment is identical under ANY partitioning /
         // cluster size — stronger than classic AD-LDA's partition-local
         // staleness, and still Gauss-Seidel within the doc like the
-        // reference's sequential loop.
+        // reference's sequential loop. The delta is dense over the doc's
+        // distinct words: T × nw longs, column `col(j)` for slot j.
         val rng = new java.util.Random(seed * 1000003L + d.docId * 31L + iter)
         val theta = new Array[Long](numTopics)
         d.topics.foreach(t => theta(t) += 1)
         val nd = d.words.length
         val topics = d.topics.clone()
         val p = new Array[Double](numTopics)
-        val phiDelta = new java.util.HashMap[Long, Long]()
+        val distinct = LdaPipeline.distinctWords(d.words)
+        val nw = distinct.length
+        val col = d.words.map(java.util.Arrays.binarySearch(distinct, _))
+        val phiDelta = new Array[Long](numTopics * nw)
         val nzDelta = new Array[Long](numTopics)
-        def dPhi(k: Int, w: Int): Long =
-          gPhi(k)(w) + phiDelta.getOrDefault(k.toLong * vocabSize + w, 0L)
-        def bump(k: Int, w: Int, by: Long): Unit = {
-          val key = k.toLong * vocabSize + w
-          phiDelta.put(key, phiDelta.getOrDefault(key, 0L) + by)
+        def bump(k: Int, c: Int, by: Long): Unit = {
+          phiDelta(k * nw + c) += by
           nzDelta(k) += by
         }
         var j = 0
         while (j < nd) {
           val w = d.words(j)
+          val c = col(j)
           val old = topics(j)
-          theta(old) -= 1; bump(old, w, -1L)
+          theta(old) -= 1; bump(old, c, -1L)
           var sum = 0.0
           var k = 0
           while (k < numTopics) {
             sum += (theta(k) + alpha) / (nd - 1 + numTopics * alpha) *
-              (dPhi(k, w) + beta) / (gNz(k) + nzDelta(k) + vocabSize * beta)
+              (gPhi(k)(w) + phiDelta(k * nw + c) + beta) / (gNz(k) + nzDelta(k) + vocabSize * beta)
             p(k) = sum
             k += 1
           }
@@ -131,7 +140,7 @@ object GibbsLda {
           var nk = 0
           while (nk < numTopics - 1 && p(nk) < u) nk += 1
           topics(j) = nk
-          theta(nk) += 1; bump(nk, w, 1L)
+          theta(nk) += 1; bump(nk, c, 1L)
           j += 1
         }
         DocState(d.docId, d.words, topics)
@@ -166,8 +175,8 @@ object GibbsLda {
     // sampling is too cheap per token to recoup it. At real scale the input
     // arrives with ≥ cores partitions and the sweeps parallelize without any
     // explicit repartition.
-    var docs = LdaPipeline.encode(tokens, vocab).filter(_._2.nonEmpty)
-      .map { case (id, words) => DocState(id, words, Array.tabulate(words.length)(_ % numTopics)) }
+    var docs = LdaPipeline.blocks(LdaPipeline.encode(tokens, vocab).filter(_._2.nonEmpty)
+      .map { case (id, words) => DocState(id, words, Array.tabulate(words.length)(_ % numTopics)) })
       .persist(Cached)
     val alpha = 1.0 / numTopics
     val beta = 1.0 / numTopics
@@ -202,7 +211,7 @@ object GibbsLda {
       (t, top.map { case (_, w) => m.vocab(w) }.mkString(" "),
         top.map(_._1).mkString(" ")) // counts as weights
     }
-    m.docs.unpersist()
+    m.unpersist()
     // Rows are built in topic order; no orderBy, whose sort of this local
     // relation would cost Spark jobs.
     spark.createDataset(rows.toSeq)

@@ -1,6 +1,7 @@
 package graft.lda
 
 import scala.math.BigDecimal.RoundingMode
+import scala.reflect.ClassTag
 
 import org.apache.spark.ml.feature.StopWordsRemover
 import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LocalLDAModel}
@@ -39,15 +40,21 @@ import graft.functions.{Cleaning, Words}
   * Scale posture (100 TB): every stage is a narrow map or a partial+final
   * aggregate; the only driver-side state is the V-entry vocabulary array
   * (bounded by the V parameter, same as the reference's broadcast dictionary)
-  * and the T×V topic matrix (bounded by hyperparameters, not data size).
+  * and the T×V topic matrix (bounded by hyperparameters, not data size). A
+  * cached partition is one array of that partition's decoded docs
+  * (Persistence, below), so a task's heap bounds a partition's size.
   *
   * Persistence: the three topic models read one corpus, [[preprocess]]'s
   * `doc_id, tokens`, cached lazily as a DataFrame of those two columns, and
   * one encoding of it, [[encode]]. A DataFrame cache stores columnar
   * batches of byte arrays, which Spark sizes without walking per-row
-  * objects. The training RDD is unpersisted after the fit, and Gibbs's
-  * doc states after its report, so no RDD cache outlives the query: the
-  * Catalog drops only DataFrame caches.
+  * objects. The RDD caches, the fit's local-checkpointed training vectors
+  * and Gibbs's doc states, hold one deserialized array per partition
+  * ([[blocks]]): the MemoryStore sizes each from a sample of its elements,
+  * instead of re-walking a growing buffer of per-doc objects while it
+  * unrolls them, and no doc is serialized. The training RDD is unpersisted
+  * after the fit, and Gibbs's doc states after its report, so no RDD cache
+  * outlives the query: the Catalog drops only DataFrame caches.
   */
 object LdaPipeline {
 
@@ -70,11 +77,19 @@ object LdaPipeline {
     df.select(col("doc_id"), Words(Cleaning.cleanText(col("text")), StopWords).as("tokens")),
     "tokens")
 
-  /** The `doc_id, tokens` of a corpus as `(doc_id, tokens)` pairs, read
-    * through Row getters: the input of every fit's vocabulary and encoding. */
-  private[graft] def tokenPairs(corpus: DataFrame): RDD[(Long, Array[String])] =
-    corpus.select(col("doc_id"), col("tokens")).rdd
-      .map(r => (r.getLong(0), r.getSeq[String](1).toArray))
+  /** The `doc_id, tokens` of a corpus as `(doc_id, tokens)` pairs: the
+    * input of every fit's vocabulary and encoding. It reads the corpus's own
+    * physical plan (`queryExecution.toRdd`) with InternalRow getters, where
+    * `Dataset.rdd` would plan the corpus again and convert every row through
+    * the Row deserializer. */
+  private[graft] def tokenPairs(corpus: DataFrame): RDD[(Long, Array[String])] = {
+    val id = corpus.schema.fieldIndex("doc_id")
+    val tokens = corpus.schema.fieldIndex("tokens")
+    corpus.queryExecution.toRdd.map { r =>
+      val a = r.getArray(tokens)
+      (r.getLong(id), Array.tabulate(a.numElements())(a.getUTF8String(_).toString))
+    }
+  }
 
   /** The `vocabSize` most frequent words of `docs` with their counts, by
     * (count desc, word asc): the reference's top-V vocabulary (py:43-68), in
@@ -90,31 +105,97 @@ object LdaPipeline {
         case (w, c) => (-c, w)
       })
 
+  /** The positions of a vocabulary's distinct words in an open-addressing
+    * table, looked up without boxing or an `Option` per token. */
+  private final class WordIndex(vocab: Array[String]) extends Serializable {
+    // a power of two at least twice the vocabulary: some slot stays empty
+    private val mask = Integer.highestOneBit(math.max(2 * vocab.length, 1)) * 2 - 1
+    private val words = new Array[String](mask + 1)
+    private val positions = new Array[Int](mask + 1)
+    vocab.indices.foreach { i =>
+      var s = slot(vocab(i))
+      while (words(s) != null) s = (s + 1) & mask
+      words(s) = vocab(i)
+      positions(s) = i
+    }
+
+    private def slot(w: String): Int = scala.util.hashing.byteswap32(w.hashCode) & mask
+
+    /** The position of `w`, or -1 when `w` is not in the vocabulary. */
+    def apply(w: String): Int = {
+      var s = slot(w)
+      while (words(s) != null) {
+        if (words(s) == w) return positions(s)
+        s = (s + 1) & mask
+      }
+      -1
+    }
+  }
+
   /** Each doc as the `vocab` positions of its tokens, in token order;
     * tokens outside `vocab` are skipped. Gibbs samples one topic per
     * position, and [[vectors]] counts them. One broadcast index per call. */
   private[graft] def encode(docs: RDD[(Long, Array[String])], vocab: Array[String]):
       RDD[(Long, Array[Int])] = {
-    val index = docs.sparkContext.broadcast(vocab.zipWithIndex.toMap)
-    docs.map { case (id, tokens) => (id, tokens.flatMap(index.value.get)) }
+    val index = docs.sparkContext.broadcast(new WordIndex(vocab))
+    docs.map { case (id, tokens) =>
+      val idx = index.value
+      val out = new Array[Int](tokens.length)
+      var n = 0
+      tokens.foreach { t =>
+        val p = idx(t)
+        if (p >= 0) { out(n) = p; n += 1 }
+      }
+      (id, if (n == out.length) out else java.util.Arrays.copyOf(out, n))
+    }
+  }
+
+  /** A doc's distinct vocabulary positions, ascending: a sorted copy of
+    * its positions with each run kept once. */
+  private[lda] def distinctWords(words: Array[Int]): Array[Int] = {
+    val sorted = words.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    var i = 0
+    while (i < sorted.length) {
+      if (n == 0 || sorted(n - 1) != sorted(i)) { sorted(n) = sorted(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(sorted, n)
   }
 
   /** Each encoded doc as its counts over a vocabulary of `vocabSize` words,
-    * indices ascending. A doc with no vocabulary word is a zero vector: it
-    * stays in the corpus, as `CountVectorizer` kept it. */
+    * indices ascending ([[distinctWords]]). A doc with no vocabulary word is
+    * a zero vector: it stays in the corpus, as `CountVectorizer` kept it. */
   private[graft] def vectors(encoded: RDD[(Long, Array[Int])], vocabSize: Int):
       RDD[(Long, Vector)] =
     encoded.map { case (id, words) =>
-      (id, Vectors.sparse(vocabSize, words.groupMapReduce(identity)(_ => 1.0)(_ + _).toSeq))
+      val indices = distinctWords(words)
+      val values = new Array[Double](indices.length)
+      var j = 0
+      while (j < words.length) {
+        values(java.util.Arrays.binarySearch(indices, words(j))) += 1.0
+        j += 1
+      }
+      (id, Vectors.sparse(vocabSize, indices, values))
     }
+
+  /** Each partition of `rdd` as one array, what `RDD.glom` gives. `glom`'s
+    * closure reaches its element ClassTag through the parent RDD, so every
+    * task of an RDD derived from it would ship the parent's whole lineage
+    * (the corpus's plan), even after a checkpoint cut it: at sf0.1 a fit
+    * iteration's RDD serializes to 39 KB through `glom`, 4 KB through this. */
+  private[lda] def blocks[T: ClassTag](rdd: RDD[T]): RDD[Array[T]] =
+    rdd.mapPartitions(it => Iterator(it.toArray))
 
   /** MLlib's online LDA ([[GraftLDAOptimizer]]) fitted on docs encoded over
     * a vocabulary of `vocabSize` words. The fit keeps its input's
-    * partitioning: each minibatch is sampled per partition. */
+    * partitioning and row order: each minibatch is sampled per partition. */
   private def fit(encoded: RDD[(Long, Array[Int])], vocabSize: Int, numTopics: Int,
       maxIter: Int, seed: Long): LocalLDAModel = {
-    val training = vectors(encoded, vocabSize).localCheckpoint()
-    val model = GraftLDAOptimizer.run(training, vocabSize, numTopics, maxIter, seed)
+    val training = blocks(vectors(encoded, vocabSize)).localCheckpoint()
+    val model = GraftLDAOptimizer.run(training.flatMap(_.iterator), vocabSize, numTopics,
+      maxIter, seed)
     training.unpersist()
     model
   }

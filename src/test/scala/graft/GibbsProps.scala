@@ -20,7 +20,8 @@ object GibbsProps extends Properties("graft.gibbs") {
 
   property("dense countPhi equals the sparse (topic, word) groupBy count") =
     Prop.forAll(Gen.listOf(docState), Gen.choose(1, 4)) { (docs, slices) =>
-      val rdd = SparkSpec.session.sparkContext.parallelize(docs, slices)
+      // the doc-state caches' shape: one array of doc states per partition
+      val rdd = SparkSpec.session.sparkContext.parallelize(docs, slices).glom()
       val (phi, nz) = GibbsLda.countPhi(rdd, T, V)
       val sparse = docs.flatMap(d => d.topics.zip(d.words))
         .groupBy(identity).view.mapValues(_.size.toLong).toMap

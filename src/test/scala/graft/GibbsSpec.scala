@@ -21,7 +21,7 @@ class GibbsSpec extends SparkSpec {
     assert(phiTotal == tokenTotal)
     assert(nzTotal == tokenTotal)
     assert(m.phi.forall(_.forall(_ >= 0)))
-    m.docs.unpersist()
+    m.unpersist()
   }
 
   test("same seed reproduces the same topic assignment; topics in range") {
@@ -33,7 +33,7 @@ class GibbsSpec extends SparkSpec {
     val tb = b.docs.collect().sortBy(_.docId).map(_.topics.toSeq).toSeq
     assert(ta == tb)
     assert(ta.flatten.forall(t => t >= 0 && t < 3))
-    a.docs.unpersist(); b.docs.unpersist()
+    a.unpersist(); b.unpersist()
   }
 
   test("topic report has T rows of top-20 vocabulary words") {
@@ -57,7 +57,7 @@ class GibbsSpec extends SparkSpec {
       val docs = m.docs.collect().sortBy(_.docId)
         .map(d => (d.docId, d.words.toSeq, d.topics.toSeq)).toSeq
       val n = m.docs.getNumPartitions
-      m.docs.unpersist()
+      m.unpersist()
       (m.phi.map(_.toSeq).toSeq, m.nz.toSeq, m.vocab.toSeq, docs, n)
     }
     val (phi1, nz1, vocab1, docs1, n1) = fitOn(1)
@@ -82,7 +82,7 @@ class GibbsSpec extends SparkSpec {
           maxIter = 2, seed = 7L)
         val topics = m.docs.collect().sortBy(_.docId)
           .map(d => (d.docId, d.words.toSeq, d.topics.toSeq)).toSeq
-        m.docs.unpersist()
+        m.unpersist()
         (m.phi.map(_.toSeq).toSeq, m.nz.toSeq, m.vocab.toSeq, topics)
       }
       assert(fitIn(dir.toString) == fitIn(sf0001))
@@ -93,7 +93,7 @@ class GibbsSpec extends SparkSpec {
   private def asReference(m: GibbsLda.GibbsModel): GibbsReference.Fit = {
     val docs = m.docs.collect().sortBy(_.docId)
       .map(d => (d.docId, d.words.toSeq, d.topics.toSeq)).toSeq
-    m.docs.unpersist()
+    m.unpersist()
     GibbsReference.Fit(m.vocab.toSeq, m.phi.map(_.toSeq).toSeq, m.nz.toSeq, docs)
   }
 
@@ -119,10 +119,22 @@ class GibbsSpec extends SparkSpec {
     }
   }
 
+  test("the doc states are the only RDD cache of a fit, and its unpersist drops them") {
+    import spark.implicits._
+    spark.sharedState.cacheManager.clearCache()
+    val corpus = Seq(1L -> Seq("a", "b", "a"), 2L -> Seq("b", "c"), 3L -> Seq("z"), 4L -> Nil)
+      .toDF("doc_id", "tokens").repartition(2)
+    val m = GibbsLda.fitCorpus(corpus, vocabSize = 3, numTopics = 2, maxIter = 2, seed = 7L)
+    assert(spark.sparkContext.getPersistentRDDs.values.toSeq == Seq(m.blocks))
+    assert(m.docs.collect().map(_.docId).sorted.toSeq == Seq(1L, 2L))
+    m.unpersist()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
   test("a fit launches one vocabulary job and maxIter + 1 countPhi jobs") {
     val (m, jobs) = JobLog(spark.sparkContext)(
       GibbsLda.fit(spark, sf0001, vocabSize = 100, numTopics = 3, maxIter = 3))
-    m.docs.unpersist()
+    m.unpersist()
     assert(jobs.count(_.contains("LdaPipeline$.vocabulary")) == 1)
     assert(jobs.count(_.contains("GibbsLda$.countPhi")) == 4)
     assert(jobs.size == 5)

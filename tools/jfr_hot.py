@@ -12,7 +12,10 @@ only in the header. For each group it prints:
 
   - the samples under each marker frame, attributed to the marker nearest
     the sampled (leaf) frame, so a sample counts once:
-      SizeEstimator      object-graph walks sizing deserialized cache blocks
+      SizeEstimator      object-graph walks sizing collections, split by the
+                         collection that asked (SIZE_CAUSES): a cache or
+                         broadcast block being unrolled, a shuffle's sort
+                         buffer or combine map, or other
       ClosureCleaner     closure checks, which re-read class files per job
       ScalaUDF           per-row conversions of Scala UDFs (MLlib transformers)
       SimpleHigherOrderFunction  interpreted array lambdas (filter, transform)
@@ -43,6 +46,14 @@ MARKERS = (
     ("JavaSerialization", lambda cls, m: cls in ("java/io/ObjectOutputStream",
                                                   "java/io/ObjectInputStream")),
 )
+# (cause, class prefixes): the first frame on the root side of a
+# SizeEstimator sample that starts with one of the prefixes names its cause
+_COLL = "org/apache/spark/util/collection/"
+SIZE_CAUSES = (
+    ("cache unroll", (_COLL + "SizeTrackingVector", "org/apache/spark/storage/memory/")),
+    ("shuffle sort/combine", (_COLL + "PartitionedPairBuffer",
+                              _COLL + "SizeTrackingAppendOnlyMap")),
+)
 GROUPS = ("main", "executor")
 
 
@@ -66,11 +77,22 @@ def frames_of(event):
 
 
 def marker_of(frames):
-    for cls, m in frames:
+    """The marker nearest the leaf, and the index of its frame."""
+    for i, (cls, m) in enumerate(frames):
         for name, hit in MARKERS:
             if hit(cls, m):
+                return name, i
+    return None, None
+
+
+def size_cause(frames):
+    """The SIZE_CAUSES name of a SizeEstimator sample's frames, root side of
+    the marker, or "other"."""
+    for cls, _ in frames:
+        for name, prefixes in SIZE_CAUSES:
+            if cls.startswith(prefixes):
                 return name
-    return None
+    return "other"
 
 
 def graft_frame(frames):
@@ -81,9 +103,11 @@ def graft_frame(frames):
 
 
 def summarize(events):
-    """{group: {"samples": n, "markers": Counter, "graft": Counter}}, other."""
+    """{group: {"samples": n, "markers": Counter, "size": Counter,
+    "graft": Counter}}, other."""
     out = {g: {"samples": 0, "markers": collections.Counter(),
-               "graft": collections.Counter()} for g in GROUPS}
+               "size": collections.Counter(), "graft": collections.Counter()}
+           for g in GROUPS}
     other = 0
     for e in events:
         if e.get("type") != "jdk.ExecutionSample":
@@ -95,9 +119,11 @@ def summarize(events):
         frames = frames_of(e)
         s = out[g]
         s["samples"] += 1
-        mk = marker_of(frames)
+        mk, at = marker_of(frames)
         if mk:
             s["markers"][mk] += 1
+        if mk == "SizeEstimator":
+            s["size"][size_cause(frames[at + 1:])] += 1
         gf = graft_frame(frames)
         if gf:
             s["graft"][gf] += 1
@@ -117,6 +143,11 @@ def render(summary, other):
         for name, _ in MARKERS:
             c = s["markers"][name]
             lines.append("  %-26s %6d  %5.1f%%" % (name, c, 100.0 * c / n if n else 0.0))
+            if name == "SizeEstimator":
+                for cause in [c for c, _ in SIZE_CAUSES] + ["other"]:
+                    c = s["size"][cause]
+                    lines.append("    %-24s %6d  %5.1f%%" % (cause, c,
+                                                          100.0 * c / n if n else 0.0))
         lines.append("  top graft frames:")
         for f, c in s["graft"].most_common(TOP):
             lines.append("  %6d  %5.1f%%  %s" % (c, 100.0 * c / n if n else 0.0, f))

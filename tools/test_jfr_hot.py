@@ -88,6 +88,37 @@ class JfrHotTest(unittest.TestCase):
         self.assertIn("  %6d  %5.1f%%  %s" % (1, 100.0 / 6, "graft.lda.LdaPipeline$.preprocess"),
                       out)
 
+    def test_size_causes(self):
+        # a SizeEstimator sample is filed under the collection that sized
+        # itself, found on the root side of the marker
+        coll = "org/apache/spark/util/collection/"
+        tracker = (coll + "SizeTracker", "takeSample")
+        events = [
+            sample(EXEC, SIZE, tracker, (coll + "SizeTrackingVector", "$plus$eq"),
+                   ("org/apache/spark/storage/memory/MemoryStore", "putIterator")),
+            sample(EXEC, SIZE, ("org/apache/spark/storage/memory/DeserializedValuesHolder$$anon$2",
+                                "<init>")),
+            sample(EXEC, SIZE, tracker, (coll + "PartitionedPairBuffer", "insert"),
+                   ("org/apache/spark/util/collection/ExternalSorter", "insertAll")),
+            sample(EXEC, SIZE, tracker, (coll + "SizeTrackingAppendOnlyMap", "changeValue")),
+            sample(EXEC, SIZE, UDF),
+            # the collection is on the leaf side of the marker: not its cause
+            sample(EXEC, (coll + "PartitionedPairBuffer", "insert"), SIZE),
+            # the nearest marker is not SizeEstimator: no cause is counted
+            sample(EXEC, OOS, SIZE, (coll + "SizeTrackingVector", "$plus$eq")),
+        ]
+        s, _ = jfr_hot.summarize(events)
+        ex = s["executor"]
+        self.assertEqual(ex["markers"]["SizeEstimator"], 6)
+        self.assertEqual(dict(ex["size"]), {"cache unroll": 2, "shuffle sort/combine": 2,
+                                            "other": 2})
+        out = jfr_hot.render(s, 0).splitlines()
+        at = out.index("  %-26s %6d  %5.1f%%" % ("SizeEstimator", 6, 600.0 / 7))
+        self.assertEqual(out[at + 1:at + 4], [
+            "    %-24s %6d  %5.1f%%" % ("cache unroll", 2, 200.0 / 7),
+            "    %-24s %6d  %5.1f%%" % ("shuffle sort/combine", 2, 200.0 / 7),
+            "    %-24s %6d  %5.1f%%" % ("other", 2, 200.0 / 7)])
+
     def test_top_cutoff(self):
         # TOP + 1 distinct graft frames, frame i sampled i + 1 times:
         # only the TOP most frequent are printed, the once-sampled f0 is cut
