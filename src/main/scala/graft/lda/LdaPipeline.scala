@@ -1,8 +1,10 @@
 package graft.lda
 
+import scala.collection.mutable
 import scala.math.BigDecimal.RoundingMode
 import scala.reflect.ClassTag
 
+import org.apache.spark.TaskContext
 import org.apache.spark.ml.feature.StopWordsRemover
 import org.apache.spark.mllib.clustering.{GraftLDAOptimizer, LocalLDAModel}
 import org.apache.spark.mllib.linalg.{Vector, Vectors}
@@ -29,13 +31,14 @@ import graft.functions.{Cleaning, Words}
   * The fit takes an RDD of `(doc_id, count vector)`, not a DataFrame through
   * `ml.clustering.LDA`, and runs MLlib's online optimizer through
   * [[org.apache.spark.mllib.clustering.GraftLDAOptimizer]]: one Spark job
-  * per iteration, where `LDA.run` launches two (a probe of the sampled
-  * minibatch and its aggregate) plus two to initialize. Per-job driver work
-  * was half of the fit's time. The training RDD is local-checkpointed: the
-  * first iteration's job caches it and cuts the lineage, so each later fit
-  * task is short. On one partition the model equals `LDA.run`'s bit for
-  * bit, and given the same vocabulary the fit equals `ml.clustering.LDA`'s
-  * row for row (tests check both).
+  * per iteration on several partitions, where `LDA.run` launches two (a
+  * probe of the sampled minibatch and its aggregate) plus two to
+  * initialize, and one Spark job per fit on one partition. Per-job driver
+  * work was half of the fit's time. On several partitions the training RDD
+  * is local-checkpointed: the first iteration's job caches it and cuts the
+  * lineage, so each later fit task is short. On one partition the model
+  * equals `LDA.run`'s bit for bit, and given the same vocabulary the fit
+  * equals `ml.clustering.LDA`'s row for row (tests check both).
   *
   * Scale posture (100 TB): every stage is a narrow map or a partial+final
   * aggregate; the only driver-side state is the V-entry vocabulary array
@@ -49,10 +52,10 @@ import graft.functions.{Cleaning, Words}
   * one encoding of it, [[encode]]. A DataFrame cache stores columnar
   * batches of byte arrays, which Spark sizes without walking per-row
   * objects. The RDD caches, the fit's local-checkpointed training vectors
-  * and Gibbs's doc states, hold one deserialized array per partition
-  * ([[blocks]]): the MemoryStore sizes each from a sample of its elements,
-  * instead of re-walking a growing buffer of per-doc objects while it
-  * unrolls them, and no doc is serialized. The training RDD is unpersisted
+  * (several partitions only) and Gibbs's doc states, hold one deserialized
+  * array per partition ([[blocks]]): the MemoryStore sizes each from a
+  * sample of its elements, instead of re-walking a growing buffer of
+  * per-doc objects while it unrolls them, and no doc is serialized. The training RDD is unpersisted
   * after the fit, and Gibbs's doc states after its report, so no RDD cache
   * outlives the query: the Catalog drops only DataFrame caches.
   */
@@ -93,17 +96,23 @@ object LdaPipeline {
 
   /** The `vocabSize` most frequent words of `docs` with their counts, by
     * (count desc, word asc): the reference's top-V vocabulary (py:43-68), in
-    * one `reduceByKey` + `takeOrdered` job. Tokens are lowercase ASCII
-    * (Cleaning.cleanText), so String order is the byte order a SQL
-    * `ORDER BY word` uses. All three topic models and `graft.Main`'s
-    * preview use it. */
+    * one Spark job. Several partitions are counted by a `reduceByKey` and
+    * ranked by `takeOrdered`; one partition has no counts to merge, so its
+    * one task counts and ranks its words, without the shuffle stage. Tokens
+    * are lowercase ASCII (Cleaning.cleanText), so String order is the byte
+    * order a SQL `ORDER BY word` uses. All three topic models and
+    * `graft.Main`'s preview use it. */
   private[graft] def vocabulary(docs: RDD[(Long, Array[String])], vocabSize: Int):
-      Array[(String, Long)] =
-    docs.flatMap(_._2.iterator.map(w => (w, 1L)))
-      .reduceByKey(_ + _)
-      .takeOrdered(vocabSize)(Ordering.by[(String, Long), (Long, String)] {
-        case (w, c) => (-c, w)
-      })
+      Array[(String, Long)] = {
+    val byCount = Ordering.by[(String, Long), (Long, String)] { case (w, c) => (-c, w) }
+    if (docs.partitions.length == 1)
+      docs.sparkContext.runJob(docs, (_: TaskContext, it: Iterator[(Long, Array[String])]) => {
+        val counts = mutable.HashMap.empty[String, Long]
+        it.foreach(_._2.foreach(w => counts(w) = counts.getOrElse(w, 0L) + 1L))
+        counts.toArray.sorted(byCount).take(vocabSize)
+      }).head
+    else docs.flatMap(_._2.iterator.map(w => (w, 1L))).reduceByKey(_ + _).takeOrdered(vocabSize)(byCount)
+  }
 
   /** The positions of a vocabulary's distinct words in an open-addressing
     * table, looked up without boxing or an `Option` per token. */
@@ -190,14 +199,22 @@ object LdaPipeline {
 
   /** MLlib's online LDA ([[GraftLDAOptimizer]]) fitted on docs encoded over
     * a vocabulary of `vocabSize` words. The fit keeps its input's
-    * partitioning and row order: each minibatch is sampled per partition. */
+    * partitioning and row order: each minibatch is sampled per partition.
+    * One partition is fitted in one task, which reads the vectors once;
+    * several are local-checkpointed, so that each iteration's job reads
+    * them from the cache. */
   private def fit(encoded: RDD[(Long, Array[Int])], vocabSize: Int, numTopics: Int,
       maxIter: Int, seed: Long): LocalLDAModel = {
-    val training = blocks(vectors(encoded, vocabSize)).localCheckpoint()
-    val model = GraftLDAOptimizer.run(training.flatMap(_.iterator), vocabSize, numTopics,
-      maxIter, seed)
-    training.unpersist()
-    model
+    val docs = vectors(encoded, vocabSize)
+    if (docs.partitions.length == 1)
+      GraftLDAOptimizer.run(docs, vocabSize, numTopics, maxIter, seed)
+    else {
+      val training = blocks(docs).localCheckpoint()
+      val model = GraftLDAOptimizer.run(training.flatMap(_.iterator), vocabSize, numTopics,
+        maxIter, seed)
+      training.unpersist()
+      model
+    }
   }
 
   private def rounded(x: Double, places: Int): Double =

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -11,24 +13,24 @@ import graft.sources.Tables
 class BucketingSpec extends SparkSpec {
 
   test("bucketed lineitem-orders join plans with NO shuffle exchange") {
-    val wh = Files.createTempDirectory("graft_wh").toString
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
-
-    Tables.lineitem(spark, sf0001)
-      .select("l_orderkey", "l_extendedprice")
-      .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$wh/li_b").saveAsTable("li_b")
-    Tables.orders(spark, sf0001)
-      .select("o_orderkey", "o_totalprice")
-      .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$wh/ord_b").saveAsTable("ord_b")
-
-    val joined = spark.table("li_b").join(spark.table("ord_b"),
-      col("l_orderkey") === col("o_orderkey"))
-    // disable auto-broadcast so the join would otherwise shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val tmp = Files.createTempDirectory("graft_wh")
     try {
+      spark.sql("DROP TABLE IF EXISTS li_b")
+      spark.sql("DROP TABLE IF EXISTS ord_b")
+
+      Tables.lineitem(spark, sf0001)
+        .select("l_orderkey", "l_extendedprice")
+        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$tmp/li_b").saveAsTable("li_b")
+      Tables.orders(spark, sf0001)
+        .select("o_orderkey", "o_totalprice")
+        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$tmp/ord_b").saveAsTable("ord_b")
+
+      val joined = spark.table("li_b").join(spark.table("ord_b"),
+        col("l_orderkey") === col("o_orderkey"))
+      // disable auto-broadcast so the join would otherwise shuffle
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"expected shuffle-free bucketed join, got:\n$plan")
@@ -41,6 +43,7 @@ class BucketingSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS ord_b")
+      FileUtils.deleteDirectory(tmp.toFile)
     }
   }
 

@@ -5,9 +5,10 @@ import org.scalacheck.{Gen, Prop, Properties}
 
 import graft.lda.LdaPipeline
 
-/** The topic models' corpus read, vocabulary encoding and term counting
-  * against the forms they replaced: Row getters over `Dataset.rdd`, a
-  * `Map` lookup per token and a `groupMapReduce` per doc. */
+/** The topic models' corpus read, vocabulary, vocabulary encoding and term
+  * counting against the forms they replaced: Row getters over `Dataset.rdd`,
+  * a sorted `groupMapReduce` count, a `Map` lookup per token and a
+  * `groupMapReduce` per doc. */
 object EncodeProps extends Properties("graft.encode") {
 
   private def spark = SparkSpec.session
@@ -66,6 +67,14 @@ object EncodeProps extends Properties("graft.encode") {
     Prop.forAll(encoded) { case (n, ds) =>
       val got = LdaPipeline.vectors(spark.sparkContext.parallelize(ds, 2), n).collect().toSeq
       got.map { case (id, v) => (id, parts(v)) } == ds.map { case (id, w) => (id, parts(vectorsRef(w, n))) }
+    }
+
+  property("vocabulary equals the top of a groupMapReduce count, on one partition or more") =
+    Prop.forAll(vocab.flatMap(docs), Gen.choose(0, 12), Gen.choose(1, 3)) { (ds, n, slices) =>
+      // a small alphabet: count ties fall across the cut at n
+      val rdd = spark.sparkContext.parallelize(ds.map { case (id, t) => (id, t.toArray) }, slices)
+      val counts = ds.flatMap(_._2).groupMapReduce(identity)(_ => 1L)(_ + _).toSeq
+      LdaPipeline.vocabulary(rdd, n).toSeq == counts.sortBy { case (w, c) => (-c, w) }.take(n)
     }
 
   property("tokenPairs equals Row getters over Dataset.rdd, in either column order") =

@@ -123,20 +123,34 @@ class GibbsSpec extends SparkSpec {
     import spark.implicits._
     spark.sharedState.cacheManager.clearCache()
     val corpus = Seq(1L -> Seq("a", "b", "a"), 2L -> Seq("b", "c"), 3L -> Seq("z"), 4L -> Nil)
-      .toDF("doc_id", "tokens").repartition(2)
-    val m = GibbsLda.fitCorpus(corpus, vocabSize = 3, numTopics = 2, maxIter = 2, seed = 7L)
-    assert(spark.sparkContext.getPersistentRDDs.values.toSeq == Seq(m.blocks))
-    assert(m.docs.collect().map(_.docId).sorted.toSeq == Seq(1L, 2L))
-    m.unpersist()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      .toDF("doc_id", "tokens")
+    Seq(corpus.coalesce(1), corpus.repartition(2)).foreach { in =>
+      val m = GibbsLda.fitCorpus(in, vocabSize = 3, numTopics = 2, maxIter = 2, seed = 7L)
+      assert(spark.sparkContext.getPersistentRDDs.values.toSeq == Seq(m.blocks))
+      assert(m.docs.collect().map(_.docId).sorted.toSeq == Seq(1L, 2L))
+      m.unpersist()
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    }
   }
 
-  test("a fit launches one vocabulary job and maxIter + 1 countPhi jobs") {
-    val (m, jobs) = JobLog(spark.sparkContext)(
+  test("a fit runs a vocabulary job and 1 countPhi job on 1 partition, maxIter + 1 on 4") {
+    val (m1, jobs1) = JobLog(spark.sparkContext)(
       GibbsLda.fit(spark, sf0001, vocabSize = 100, numTopics = 3, maxIter = 3))
-    m.unpersist()
-    assert(jobs.count(_.contains("LdaPipeline$.vocabulary")) == 1)
-    assert(jobs.count(_.contains("GibbsLda$.countPhi")) == 4)
-    assert(jobs.size == 5)
+    m1.unpersist()
+    assert(m1.blocks.getNumPartitions == 1)
+    assert(jobs1.count(_.contains("LdaPipeline$.vocabulary")) == 1)
+    assert(jobs1.count(_.contains("GibbsLda$.countPhi")) == 1)
+    assert(jobs1.size == 2)
+    // cached first, so that its shuffle's jobs are not the fit's
+    val corpus = LdaPipeline.preprocess(Tables.documents(spark, sf0001)).repartition(4).cache()
+    corpus.count()
+    val (m4, jobs4) = JobLog(spark.sparkContext)(
+      GibbsLda.fitCorpus(corpus, vocabSize = 100, numTopics = 3, maxIter = 3, seed = 42L))
+    m4.unpersist()
+    spark.sharedState.cacheManager.clearCache()
+    assert(m4.blocks.getNumPartitions == 4)
+    assert(jobs4.count(_.contains("LdaPipeline$.vocabulary")) == 1)
+    assert(jobs4.count(_.contains("GibbsLda$.countPhi")) == 4)
+    assert(jobs4.size == 5)
   }
 }

@@ -178,16 +178,43 @@ class LdaSpec extends SparkSpec {
       GraftLDAOptimizer.run(empty, 6, k = 3, maxIter = 2, seed = 7L))
   }
 
-  test("a fit of maxIter N launches N jobs, filed under the optimizer's call site") {
+  /** `docs` with one empty partition after its own: the same docs, fitted
+    * by the several-partition path. */
+  private def withEmptyPartition(docs: RDD[(Long, Vector)]): RDD[(Long, Vector)] =
+    docs.union(spark.sparkContext.parallelize(Seq.empty[(Long, Vector)], 1))
+
+  test("a fit on one partition launches one job, filed under the optimizer's call site") {
     val (training, v) = sf0001Training()
     val (_, jobs) = JobLog(spark.sparkContext)(
       GraftLDAOptimizer.run(training, v, k = 5, maxIter = 7, seed = 42L))
     // LDA.run: count, first, and an isEmpty probe + a treeAggregate per iteration
     val (_, referenceJobs) = JobLog(spark.sparkContext)(mllibLda(5, 7, 42L).run(training))
     training.unpersist()
-    assert(jobs.size == 7)
+    assert(jobs.size == 1)
     assert(jobs.forall(_.contains("GraftLDAOptimizer$.run")))
     assert(referenceJobs.size == 2 * 7 + 2)
+  }
+
+  test("a fit of maxIter N on 2 partitions launches N jobs under the optimizer's call site") {
+    val (training, v) = sf0001Training()
+    val (_, jobs) = JobLog(spark.sparkContext)(
+      GraftLDAOptimizer.run(withEmptyPartition(training), v, k = 5, maxIter = 7, seed = 42L))
+    training.unpersist()
+    assert(jobs.size == 7)
+    assert(jobs.forall(_.contains("GraftLDAOptimizer$.run")))
+  }
+
+  test("the one-job fit equals the one-job-per-iteration fit with an empty partition last") {
+    // Partition 0 takes the first sample seed and inference seed in both,
+    // and the empty partition adds zero statistics.
+    val (training, v) = sf0001Training()
+    val twoParts = withEmptyPartition(training)
+    assert(training.partitions.length == 1 && twoParts.partitions.length == 2)
+    Seq(1, 5, 10, 21).foreach { n =>
+      assertSameModel(GraftLDAOptimizer.run(training, v, k = 5, maxIter = n, seed = 42L),
+        GraftLDAOptimizer.run(twoParts, v, k = 5, maxIter = n, seed = 42L), training)
+    }
+    training.unpersist()
   }
 
   test("a fit on 4 hash partitions gives the same lda_topics rows in 10 runs") {

@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -10,22 +12,25 @@ import graft.sources.Tables
 class PartitionPruneSpec extends SparkSpec {
 
   test("lang-partitioned write is pruned to one partition by a lang filter") {
-    val dir = Files.createTempDirectory("graft_part").toString + "/docs"
-    Tables.documents(spark, sf0001)
-      .write.partitionBy("lang").parquet(dir)
+    val tmp = Files.createTempDirectory("graft_part")
+    val dir = s"$tmp/docs"
+    try {
+      Tables.documents(spark, sf0001)
+        .write.partitionBy("lang").parquet(dir)
 
-    val q = spark.read.parquet(dir).filter(col("lang") === "en")
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), s"no partition filters in:\n$plan")
-    // the pruned scan must read strictly fewer files than exist
-    val allFiles = new java.io.File(dir).listFiles().count(_.isDirectory)
-    assert(allFiles == 5) // one dir per lang
-    val expected = Tables.documents(spark, sf0001)
-      .filter(col("lang") === "en").count()
-    assert(q.count() == expected)
-    // prove pruning by reading a partition dir directly: only en rows inside
-    val enOnly = spark.read.parquet(s"$dir/lang=en")
-    assert(enOnly.count() == expected)
+      val q = spark.read.parquet(dir).filter(col("lang") === "en")
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters"), s"no partition filters in:\n$plan")
+      // the pruned scan must read strictly fewer files than exist
+      val allFiles = new java.io.File(dir).listFiles().count(_.isDirectory)
+      assert(allFiles == 5) // one dir per lang
+      val expected = Tables.documents(spark, sf0001)
+        .filter(col("lang") === "en").count()
+      assert(q.count() == expected)
+      // prove pruning by reading a partition dir directly: only en rows inside
+      val enOnly = spark.read.parquet(s"$dir/lang=en")
+      assert(enOnly.count() == expected)
+    } finally FileUtils.deleteDirectory(tmp.toFile)
   }
 
   test("curation output respects its gates and is a subset of canonicals") {
